@@ -105,10 +105,8 @@ object Render {
       // non-unique only, like the reference display rule
       // (types.py:146-160)
       case Some(c) if o.showSamples && !s.unique =>
-        val common = c.mostCommon
-        val shown =
-          if (common.length > 6) common.take(3) ++ common.takeRight(3)
-          else common
+        val (head, tail) = c.mostCommonEnds(3)
+        val shown = head ++ tail
         st.suffix(" samples=") + shown.map { case (v, n) =>
           s"${fmt(v)}×${Format.formatInt(n)}"
         }.mkString(" ")

@@ -82,7 +82,7 @@ object Stats {
       index += sample.counts(key)
     }
     while (summary.length < 4) summary += keys.last
-    val unique = sample.mostCommon.headOption.forall(_._2 == 1L)
+    val unique = sample.counts.valuesIterator.max == 1L
     Stats(Some(sample), card, summary(0), summary(1), summary(2),
       summary(3), keys.last, unique)
   }

@@ -2,6 +2,8 @@ package graft.core
 
 import java.time.Instant
 
+import scala.collection.mutable
+
 /** Ordering over the dynamic scalar values the engine tracks: Long,
   * Double (numerics compare cross-type), Boolean, String, Instant, null
   * (sorts first). Mirrors Python's comparison semantics used by the
@@ -66,6 +68,36 @@ final case class ValueCounter(counts: Map[Any, Long]) {
     counts.toSeq.sortBy { case (v, c) => (-c, v) }(
       Ordering.Tuple2(Ordering.Long, ValueOrdering))
 
+  /** What a sample display shows of [[mostCommon]]: every entry as the
+    * first half when there are at most `2 * n`, else its first `n` and
+    * its last `n` entries. Two heaps of `n` pick the ends in one pass,
+    * so no display sorts the whole counter. Ties under `ValueOrdering`
+    * (which calls `1L`, `1.0` and `true` equal) keep iteration order,
+    * as the stable sort in `mostCommon` does.
+    */
+  def mostCommonEnds(n: Int): (Seq[(Any, Long)], Seq[(Any, Long)]) =
+    if (counts.size <= 2 * n) (mostCommon, Seq.empty)
+    else {
+      import ValueCounter.{Ranked, rank}
+      val first = mutable.PriorityQueue.empty[Ranked](rank)
+      val last = mutable.PriorityQueue.empty[Ranked](rank.reverse)
+      // a heap's head is the kept entry farthest from the heap's end of
+      // the order; an entry nearer to that end replaces it
+      def offer(q: mutable.PriorityQueue[Ranked], r: Ranked): Unit =
+        if (q.size < n) q += r
+        else if (q.ord.lt(r, q.head)) { q.dequeue(); q += r }
+      var i = 0
+      counts.foreach { e =>
+        val r = (e, i)
+        offer(first, r)
+        offer(last, r)
+        i += 1
+      }
+      def inOrder(q: mutable.PriorityQueue[Ranked]) =
+        q.toSeq.sorted(rank).map(_._1)
+      (inOrder(first), inOrder(last))
+    }
+
   def sortedKeys: Seq[Any] = counts.keys.toSeq.sorted(ValueOrdering)
 
   def mapKeys(f: Any => Any): ValueCounter = {
@@ -80,6 +112,20 @@ final case class ValueCounter(counts: Map[Any, Long]) {
 
 object ValueCounter {
   val empty: ValueCounter = ValueCounter(Map.empty)
+
+  /** An entry and its iteration index, ordered as [[mostCommon]] lists
+    * entries: descending count, then `ValueOrdering`, then index.
+    */
+  private type Ranked = ((Any, Long), Int)
+  private val rank: Ordering[Ranked] = (a, b) => {
+    val byCount = java.lang.Long.compare(b._1._2, a._1._2)
+    if (byCount != 0) byCount
+    else {
+      val byValue = ValueOrdering.compare(a._1._1, b._1._1)
+      if (byValue != 0) byValue else Integer.compare(a._2, b._2)
+    }
+  }
+
   def from(values: IterableOnce[Any]): ValueCounter = {
     val m = scala.collection.mutable.HashMap.empty[Any, Long]
     values.iterator.foreach { v => m.update(v, m.getOrElse(v, 0L) + 1L) }

@@ -153,17 +153,15 @@ object Xml {
   private def statsSample(s: Stats): Vector[XNode] = s.sample match {
     case None => Vector.empty
     case Some(c) =>
-      val common = c.mostCommon
-      def value(v: Any, n: Long): XElem =
-        XElem("value", Vector("count" -> Format.formatInt(n)),
-          Vector(text(fmt(v))))
-      val kids: Vector[XNode] =
-        if (common.length > 6)
-          common.take(3).toVector.map { case (v, n) => value(v, n) } ++
-            Vector(elem("more")) ++
-            common.takeRight(3).toVector.map { case (v, n) =>
-              value(v, n) }
-        else common.toVector.map { case (v, n) => value(v, n) }
+      val (head, tail) = c.mostCommonEnds(3)
+      def values(vs: Seq[(Any, Long)]): Vector[XNode] =
+        vs.toVector.map { case (v, n) =>
+          XElem("value", Vector("count" -> Format.formatInt(n)),
+            Vector(text(fmt(v))))
+        }
+      val kids =
+        if (tail.isEmpty) values(head)
+        else values(head) ++ Vector(elem("more")) ++ values(tail)
       Vector(elem("sample", kids: _*))
   }
 

@@ -267,23 +267,20 @@ object XslRender {
 
   private def sampleView(c: ValueCounter, o: RenderOptions,
                          st: Styles): String = {
-    val common = c.mostCommon
+    val (head, tail) = c.mostCommonEnds(3)
     def one(v: Any, n: Long, last: Boolean): String =
       st.normal + fmtV(v) +
         (if (o.showCount)
           st.fill + " (" + Format.formatInt(n) + ")"
          else "") +
         st.normal + (if (last) "" else ",")
-    if (common.length > 6) {
-      val head = common.take(3)
-      val tail = common.takeRight(3)
+    def run(vs: Seq[(Any, Long)]): String =
+      vs.zipWithIndex.map { case ((v, n), i) =>
+        one(v, n, last = i == vs.length - 1) }.mkString
+    if (tail.isEmpty) run(head)
+    else
       head.map { case (v, n) => one(v, n, last = false) }.mkString +
-        st.ellipsis + " " +
-        tail.zipWithIndex.map { case ((v, n), i) =>
-          one(v, n, last = i == tail.length - 1) }.mkString
-    } else
-      common.zipWithIndex.map { case ((v, n), i) =>
-        one(v, n, last = i == common.length - 1) }.mkString
+        st.ellipsis + " " + run(tail)
   }
 
   /** Quoted pattern suffix shared by str / strof (cli.xsl:176-183,

@@ -1,8 +1,11 @@
 package graft.sources
 
+import java.io.InputStream
 import java.nio.charset.{Charset, CodingErrorAction, StandardCharsets}
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, NoSuchFileException, Paths}
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.core.{VTuple, VSources}
@@ -29,9 +32,15 @@ import graft.core.{VTuple, VSources}
   *    The "safe" loader restriction is structural: the parser can only
   *    ever build plain maps/lists/scalars, so `yamlSafe=false` is
   *    accepted-but-identical (the reference's unsafe mode constructs
-  *    arbitrary Python objects, which has no Spark-side analog)
+  *    arbitrary Python objects, which has no Spark-side analog).
+  *    Block parsing is linear in the number of lines: each step hands
+  *    the rest of the document on as a structure-sharing `Vector`
+  *    slice, and blank lines are skipped by index, never by copying
+  *    the remainder
   *
-  * Driver-side detection reads only the sample prefix; the distributed
+  * Driver-side detection reads only the sample prefix (of the first
+  * data file in sorted order, when the path is a directory or a glob
+  * naming a table of part files); the distributed
   * read ([[Source.sparkRead]]) maps the detected format onto
   * `spark.read.json` / `spark.read.csv` with the sniffed options so the
   * full-size scan stays on executors.
@@ -704,13 +713,34 @@ object Source {
 
   private type Anchors = scala.collection.mutable.HashMap[String, Any]
 
+  private val blockScalarMarker = "[|>][+-]?".r
+
   private def isBlockScalarMarker(s: String): Boolean =
-    s.matches("[|>][+-]?")
+    blockScalarMarker.matches(s)
+
+  /** `stripComment(l).trim.isEmpty` without building the stripped
+    * line: only characters up to U+0020 (what `trim` drops), then
+    * either the end or a `#` that opens a comment.
+    */
+  private def isBlank(l: String): Boolean = {
+    var i = 0
+    while (i < l.length && l.charAt(i) <= ' ') i += 1
+    i == l.length ||
+      (l.charAt(i) == '#' && (i == 0 || l.charAt(i - 1).isWhitespace))
+  }
+
+  /** `lines` from its first non-blank line on. `Vector.dropWhile`
+    * copies the whole remainder even when it drops nothing, which made
+    * block parsing quadratic; `drop` shares the vector's structure.
+    */
+  private def dropBlank(lines: Vector[String]): Vector[String] = {
+    val i = lines.indexWhere(!isBlank(_))
+    if (i < 0) Vector.empty else lines.drop(i)
+  }
 
   private def parseBlock(lines0: Vector[String], indent: Int,
                          anchors: Anchors): (Any, Vector[String]) = {
-    def blank(l: String): Boolean = stripComment(l).trim.isEmpty
-    val lines = lines0.dropWhile(blank)
+    val lines = dropBlank(lines0)
     if (lines.isEmpty) return (null, lines)
     val first = stripComment(lines.head)
     val ind = indentOf(first)
@@ -722,7 +752,7 @@ object Source {
       var rest = lines
       var go = true
       while (go) {
-        rest = rest.dropWhile(blank)
+        rest = dropBlank(rest)
         val head = rest.headOption.map(stripComment)
         if (head.isEmpty || indentOf(head.get) != ind ||
             !(head.get.trim.startsWith("- ") ||
@@ -768,7 +798,7 @@ object Source {
       var rest = lines
       var go = true
       while (go) {
-        rest = rest.dropWhile(blank)
+        rest = dropBlank(rest)
         val head = rest.headOption.map(stripComment)
         if (head.isEmpty || indentOf(head.get) != ind ||
             head.get.trim.startsWith("- ") ||
@@ -789,7 +819,7 @@ object Source {
                 val synthetic = (" " * (ind + 2)) + keyText
                 parseBlock(synthetic +: rest.tail, ind + 2, anchors)
               }
-            rest = afterKey.dropWhile(blank)
+            rest = dropBlank(afterKey)
             val vhead = rest.headOption.map(stripComment)
             if (vhead.exists(h => indentOf(h) == ind &&
                 (h.trim == ":" || h.trim.startsWith(": ")))) {
@@ -1209,6 +1239,9 @@ object Source {
     }
   }
 
+  private val yamlFloat =
+    "[-+]?(\\d+\\.?\\d*([eE][-+]?\\d+)?|\\.\\d+([eE][-+]?\\d+)?)".r
+
   /** YAML core-schema scalar resolution (plus the 1.1 sexagesimals
     * ruamel keeps accepting).
     */
@@ -1228,7 +1261,7 @@ object Source {
         try t.toLong
         catch {
           case _: NumberFormatException =>
-            try { if (t.matches("[-+]?(\\d+\\.?\\d*([eE][-+]?\\d+)?|\\.\\d+([eE][-+]?\\d+)?)")) t.toDouble else t }
+            try { if (yamlFloat.matches(t)) t.toDouble else t }
             catch { case _: NumberFormatException => t }
         }
     }
@@ -1248,7 +1281,8 @@ object Source {
 
   /** Detect everything from the head sample of a file, honoring the
     * manual overrides in `opts`; warns on stderr for low-confidence
-    * encoding detections (source.py:137-145).
+    * encoding detections (source.py:137-145). A directory or a glob is
+    * sampled at its first data file.
     */
   def detect(path: String, opts: SourceOptions = SourceOptions())
       : Detected = {
@@ -1283,7 +1317,10 @@ object Source {
     }
 
   private def readSample(path: String, limit: Int): Array[Byte] = {
-    val in = Files.newInputStream(Paths.get(path))
+    val file = Paths.get(path)
+    val in =
+      if (Files.isRegularFile(file)) Files.newInputStream(file)
+      else PartFiles.openFirst(path)
     try in.readNBytes(limit)
     finally in.close()
   }
@@ -1333,9 +1370,10 @@ object Source {
     else VSources(paths.toVector.map(load(_, opts)))
 
   /** Distributed read: detection on the driver's head sample, full
-    * scan on executors via the native readers. CSV keeps all columns
-    * as strings (downstream inference owns typing) and skips the
-    * header per the reference quirk.
+    * scan on executors via the native readers, which get `path` as
+    * given (a file, a directory of part files or a glob). CSV keeps
+    * all columns as strings (downstream inference owns typing) and
+    * skips the header per the reference quirk.
     */
   def sparkRead(spark: SparkSession, path: String,
                 opts: SourceOptions = SourceOptions()): DataFrame = {
@@ -1368,5 +1406,31 @@ object Source {
       case UnknownFormat =>
         throw new IllegalArgumentException("unable to guess data format")
     }
+  }
+}
+
+/** The file a multi-file table is sampled from: the first data file, in
+  * sorted path order, that a directory (searched depth first) or a glob
+  * names. Names starting with `_` or `.` (`_SUCCESS`, checksum files)
+  * are skipped, as Spark's file listing skips them. Kept apart from
+  * [[Source]] so that the Hadoop classes it uses, and the jars they
+  * come from, load only when a table of part files is sampled.
+  */
+private object PartFiles {
+  def openFirst(path: String): InputStream = {
+    val pattern = new HPath(path)
+    val fs = pattern.getFileSystem(new Configuration())
+    def data(s: FileStatus): Boolean = {
+      val name = s.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".")
+    }
+    def first(found: Array[FileStatus]): Option[HPath] =
+      found.filter(data).sortBy(_.getPath.toString).iterator.flatMap { s =>
+        if (s.isDirectory) first(fs.listStatus(s.getPath))
+        else Some(s.getPath)
+      }.nextOption()
+    Option(fs.globStatus(pattern)).flatMap(first).map(fs.open(_))
+      .getOrElse(throw new NoSuchFileException(path, null,
+        "no data file in this directory or glob"))
   }
 }

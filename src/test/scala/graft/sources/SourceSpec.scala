@@ -632,6 +632,89 @@ class SourceSpec extends AnyFunSuite {
       Map("a" -> "42"))
   }
 
+  test("yaml: a long generated list with blank and comment lines " +
+      "everywhere parses to its exact value") {
+    val r = new scala.util.Random(11)
+    val text = new StringBuilder("# inventory\n\n")
+    val expected = Vector.tabulate(3000) { i =>
+      val (a, b) = (r.nextInt(50), r.nextInt(50))
+      val (w, h) = (r.nextInt(1000).toLong, r.nextInt(100))
+      val (complexKeyYaml, complexKey) =
+        if (i % 2 == 0) (s"    ? k$i long key\n", s"k$i long key": Any)
+        else (s"    ? - k$i\n      - $a\n", Vector(s"k$i", a.toLong))
+      text ++=
+        s"""- id: $i
+           |  name: item-$i  # trailing comment
+           |
+           |  # between entries
+           |  tags:
+           |    - t$a
+           |
+           |    # between list items
+           |    - t$b
+           |  spec:
+           |    dims:
+           |      w: $w
+           |
+           |      # three levels down
+           |      h: $h.5
+           |      at:
+           |        x: ${i % 7}
+           |
+           |""".stripMargin + complexKeyYaml +
+        s"""    : pair-$i
+           |  note: |
+           |    first line $i
+           |
+           |    third line
+           |  # after the block scalar
+           |
+           |# between items
+           |
+           |""".stripMargin
+      Map[Any, Any](
+        "id" -> i.toLong,
+        "name" -> s"item-$i",
+        "tags" -> Vector(s"t$a", s"t$b"),
+        "spec" -> Map[Any, Any](
+          "dims" -> Map[Any, Any]("w" -> w, "h" -> (h + 0.5),
+            "at" -> Map[Any, Any]("x" -> (i % 7).toLong)),
+          complexKey -> s"pair-$i"),
+        "note" -> s"first line $i\n\nthird line\n")
+    }
+    text ++= "\n# end\n\n"
+    assert(parseYaml(text.result()) == expected)
+  }
+
+  test("directory and glob tables: sampled at the first data file, " +
+      "read whole by Spark") {
+    val dir = Files.createTempDirectory("table")
+    def put(name: String, body: String): Unit =
+      Files.write(dir.resolve(name), body.getBytes("UTF-8"))
+    put("part-00000.jsonl", "{\"a\": 1}\n{\"a\": 2}\n")
+    put("part-00001.jsonl", "{\"a\": 3}\n")
+    // neither may be sampled: as a sample each reads as CSV
+    put("_SUCCESS", "not, json\nat, all\n")
+    put(".draft.jsonl", "not, json\nat, all\n")
+    val glob = dir.resolve("*.jsonl").toString
+    assert(detect(dir.toString).format == JsonLinesFormat)
+    assert(detect(glob).format == JsonLinesFormat)
+    intercept[java.nio.file.NoSuchFileException](
+      detect(dir.resolve("*.csv").toString))
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[1]")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    try {
+      for (path <- Seq(dir.toString, glob)) {
+        val rows = sparkRead(spark, path).collect().map(_.getLong(0))
+        assert(rows.sorted.toSeq == Seq(1L, 2L, 3L), path)
+      }
+    } finally spark.stop()
+    Files.list(dir).forEach(f => Files.delete(f))
+    Files.delete(dir)
+  }
+
   test("jsonl: detected, loaded as records, whole-doc json unaffected") {
     val jsonl = "{\"a\": 1}\n{\"a\": 2}\n{\"a\": 3}\n"
     assert(detectFormat(jsonl) == JsonLinesFormat)
