@@ -18,13 +18,15 @@ import graft.core._
   *    count/nulls/min/max/approx-distinct plus ~26 string-ladder witness
   *    counts are conditional aggregates in a single codegen'd pass, not
   *    the reference's O(data × depth) per-path re-walks.
-  *  - **Batched exact counters** — columns whose approx distinct count
-  *    is under `exactDistinctCap` get their full value→frequency
-  *    counters via ONE explode + groupBy job per JVM type group (longs /
-  *    doubles / strings), instead of a shuffle per column. The counters
+  *  - **One tally kernel** — columns whose approx distinct count is
+  *    under `exactDistinctCap` get their full value→frequency counters
+  *    from ONE counter job per level: every (column, value) pair
+  *    becomes a typed-slot struct and a single explode + groupBy
+  *    counts them all, whatever their types ([[tally]]). The counters
   *    feed the exact reference ladder ([[TreeAnalyzer]] internals), so
-  *    low-cardinality columns are bit-for-bit reference-faithful.
-  *    Length counters for over-cap string columns ride the same batch.
+  *    low-cardinality columns are bit-for-bit reference-faithful. The
+  *    bounded top-K sample sketch of over-cap columns is the same
+  *    kernel with a per-column rank.
   *  - **One wide summary pass over the cap** — high-cardinality columns
   *    have their representation DECIDED from the pass-1 witness counts
   *    alone (no extra jobs), then every over-cap column's summary
@@ -33,14 +35,18 @@ import graft.core._
   *    stats, and the fixed-length CharClass pattern miner — run together
   *    in a SECOND single wide aggregation per level. Job count per level
   *    is O(1) in column count (a 200-column table costs the same number
-  *    of scheduler round-trips as a 2-column one); only the optional
-  *    bounded top-K sample sketch remains a per-column TakeOrdered job.
+  *    of scheduler round-trips as a 2-column one).
+  *  - **One length route** — string lengths and array/map sizes take
+  *    the same way through those passes: pass-1 witnesses
+  *    (count/distinct/min/max), then the counter job when the length
+  *    distinct count is under the cap, else the summary pass and the
+  *    top-K job.
   *  - **Nested data = projections, not re-scans** — struct fields are
   *    analyzed in the parent's wide agg via dotted columns; ALL of a
   *    level's scalar-element arrays and map keys/values fold into ONE
   *    tagged `explode(concat(...))` frame analyzed by a single
-  *    recursive level, and all array/map length stats ride one shared
-  *    batch — k sibling collections cost the same jobs as one
+  *    recursive level, and array/map sizes ride the level's own
+  *    passes — k sibling collections cost the same jobs as one
   *    (filter/column pruning pushed to the parquet scan by Catalyst).
   *
   * Driver memory holds only config + counters under the cap + the
@@ -54,8 +60,8 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
                           val parseJsonStrings: Boolean = true,
                           /** Over-cap columns keep a bounded top-K
                             * frequency sketch as their display sample
-                            * (SURVEY §8); 0 disables the extra
-                            * TakeOrdered job per summary column.
+                            * (SURVEY §8); 0 disables the level's
+                            * top-K job.
                             */
                           val sampleTopK: Int =
                             SparkAnalyzer.defaultSampleTopK,
@@ -138,15 +144,20 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
     if (schema.isEmpty) return SDict(
       Stats.fromCounter(ValueCounter(Map((0L: Any) -> 1L))), Vector.empty)
 
-    // -------- pass 1: one wide aggregation over every leaf column
+    // -------- pass 1: one wide aggregation over every leaf column and
+    // the sizes of every array/map column
     val leaves = collectLeaves(schema)
       .filterNot(l => srcTagged && l.path == Vector("__src"))
+    val nestedLeaves = collectNested(schema)
     val slotTotals =
       if (!srcTagged) Seq.empty
       else leaves.map(l => count(when(col("__src") === l.path.head,
         1)).as(s"${l.id}__tot"))
     val aggExprs = leaves.flatMap(l => wideAggExprs(l)) ++
-      slotTotals :+ count(lit(1)).as("__total")
+      nestedLeaves.flatMap { l =>
+        count(sizeOf(l)).as(s"${l.id}__cnt") +:
+          lengthWitnessExprs(l.id, sizeOf(l))
+      } ++ slotTotals :+ count(lit(1)).as("__total")
     val row = described(df, s"graft: witness pass " +
       s"(${leaves.size} columns)") {
       df.agg(aggExprs.head, aggExprs.tail: _*).head()
@@ -185,59 +196,54 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
     // all-JSON columns will recurse instead; keep their fallback
     // plans out of the shared passes
     val active = plans.filterNot(_.deferred)
-    val lengthCounterCols = active
-      .filter(p => p.needLengths && p.lengthsExact).map(_.leaf)
+    // the length route: over-cap strings' lengths and every array/map
+    // size; all-null ones need no pass (their Stats read {0: 1})
+    val (exactLengths, overLengths) = (active.flatMap(_.lengths) ++
+      nestedLeaves.map(l => lengthRoute(l.id, sizeOf(l), row)))
+      .filter(_.n > 0).partition(_.exact)
 
-    // -------- pass 2: batched exact counters (values under the cap +
-    // lengths of over-cap strings) — one job per JVM type group
-    val (counters, lengthCounters) =
-      described(df, s"graft: exact counter batch " +
-        s"(${counterCols.size} columns)") {
-        collectCounters(df, counterCols, lengthCounterCols)
-      }
+    // -------- pass 2: ONE counter job for the values under the cap
+    // and the lengths under the cap (length counters stay outside the
+    // byte budget: a length is one long)
+    val counterPairs = counterCols.map(l => valueKey(l.id) -> l.col) ++
+      exactLengths.map(r => lengthKey(r.id) -> r.len)
+    val counters = described(df, s"graft: exact counter batch " +
+      s"(${counterPairs.size} columns)") {
+      tally(df, counterPairs)
+    }
 
     // -------- pass 3: ONE wide summary aggregation for all over-cap
-    // columns (quartiles, length stats, CharClass patterns together).
-    // Exact-percentile buffers share the executor-memory cap: each of
-    // the pctConsumers columns gets exactPctCap / pctConsumers rows
-    // before degrading to the GK sketch, so the ONE-pass batching
-    // cannot multiply peak aggregation memory by the column count.
-    val pctConsumers = (active.count(_.numeric) +
-      active.count(p => p.needLengths && !p.lengthsExact)).max(1)
+    // columns and lengths (quartiles, length stats, CharClass patterns
+    // together). Exact-percentile buffers share the executor-memory
+    // cap: each of the pctConsumers columns gets exactPctCap /
+    // pctConsumers rows before degrading to the GK sketch, so the
+    // ONE-pass batching cannot multiply peak aggregation memory by the
+    // column count.
+    val pctConsumers =
+      (active.count(_.numeric) + overLengths.size).max(1)
     val summaryRow: Row =
-      if (active.isEmpty) null
+      if (active.isEmpty && overLengths.isEmpty) null
       else described(df, s"graft: summary pass " +
-        s"(${active.size} over-cap columns)") {
-        val exprs = active.flatMap(p => summaryAggExprs(p, pctConsumers))
+        s"(${active.size + overLengths.size} over-cap columns)") {
+        val exprs = active.flatMap(p => summaryAggExprs(p, pctConsumers)) ++
+          overLengths.flatMap(r => lengthAggExprs(r, pctConsumers))
         df.agg(exprs.head, exprs.tail: _*).head()
       }
 
-    // -------- pass 4: ONE batched top-K display-sample job per JVM
-    // type group (previously a groupBy+TakeOrdered job per over-cap
-    // column — the last per-column cost of the level)
-    val (valueSamples, lengthSamples) =
+    // -------- pass 4: ONE top-K display-sample job for every
+    // non-unique over-cap column and length
+    val samples =
       if (summaryRow == null || sampleTopK <= 0)
-        (Map.empty[String, ValueCounter],
-          Map.empty[String, ValueCounter])
+        Map.empty[String, ValueCounter]
       else described(df, s"graft: top-K sample batch " +
-        s"(${active.size} over-cap columns)") {
-        collectTopKSamples(df, active, summaryRow)
+        s"(${active.size + overLengths.size} over-cap columns)") {
+        tally(df, topKPairs(active, overLengths, summaryRow), sampleTopK)
       }
 
-    // -------- pass 5: batched same-level nested content. All
-    // array/map LENGTH columns ride one shared counter-or-summary
-    // batch on this frame, and every scalar-element explode (array
-    // items, map keys, map values) folds into ONE tagged-explode
-    // frame analyzed by a single recursive level — so k sibling
-    // arrays cost the same jobs as one (previously k explode passes
-    // of 2-6 jobs each).
-    val nestedLeaves = collectNested(schema)
-    val nestedLengths =
-      if (nestedLeaves.isEmpty) Map.empty[String, Stats]
-      else described(df, s"graft: nested lengths batch " +
-        s"(${nestedLeaves.size} columns)") {
-        batchedLengthStats(df, nestedLeaves.map(l => l.id -> l.col))
-      }
+    // -------- pass 5: every scalar-element explode (array items, map
+    // keys, map values) folds into ONE tagged-explode frame analyzed
+    // by a single recursive level — so k sibling arrays cost the same
+    // jobs as one (previously k explode passes of 2-6 jobs each).
     val slots = nestedLeaves.flatMap { l =>
       l.dataType match {
         case ArrayType(et, _) if isScalarType(et) =>
@@ -255,10 +261,9 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
     val nestedItems = analyzeNestedBatch(df, slots, jsonDepth)
 
     // -------- assemble the record dict
-    val ctx = LevelCtx(df, row, counters, lengthCounters,
-      plans.map(p => p.leaf.id -> p).toMap, summaryRow,
-      valueSamples, lengthSamples, total, totalFor, jsonDepth,
-      nestedLengths, nestedItems)
+    val ctx = LevelCtx(df, row, counters,
+      plans.map(p => p.leaf.id -> p).toMap, summaryRow, samples,
+      total, totalFor, jsonDepth, nestedItems)
     described(df, "graft: assemble (nested levels / top-K)") {
       val fields = schema.fields.toVector
         .filterNot(f => srcTagged && f.name == "__src")
@@ -293,16 +298,15 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
   private val functions = org.apache.spark.sql.functions
 
   /** Everything one nesting level's assembly needs: the pass-1 witness
-    * row, batched counters, and the over-cap summary plans + their
-    * single wide-agg result row.
+    * row, the pass-2 counters and pass-4 samples (keyed by
+    * [[valueKey]] / [[lengthKey]]), and the over-cap summary plans +
+    * their single wide-agg result row.
     */
   private final case class LevelCtx(df: DataFrame, row: Row,
                                     counters: Map[String, ValueCounter],
-                                    lengthCounters: Map[String, ValueCounter],
                                     plans: Map[String, SummaryPlan],
                                     summaryRow: Row,
-                                    valueSamples: Map[String, ValueCounter],
-                                    lengthSamples: Map[String, ValueCounter],
+                                    samples: Map[String, ValueCounter],
                                     total: Long,
                                     /** Per-leaf row total: the level
                                       * total normally; the leaf's own
@@ -311,11 +315,9 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
                                       */
                                     totalFor: String => Long,
                                     jsonDepth: Int,
-                                    /** Pass-5 results: Stats for every
-                                      * array/map length column, SType
-                                      * for every scalar slot.
+                                    /** Pass-5 results: SType for every
+                                      * scalar slot.
                                       */
-                                    nestedLengths: Map[String, Stats],
                                     nestedItems: Map[String, SType])
 
   /** An over-cap column's decided representation: which expression to
@@ -326,10 +328,9 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
     */
   private final case class SummaryPlan(leaf: Leaf, value: Column,
                                        numeric: Boolean, n: Long,
-                                       needLengths: Boolean,
-                                       lengthsExact: Boolean,
-                                       needPattern: Boolean,
                                        build: SummaryCtx => SType,
+                                       lengths: Option[LengthRoute] = None,
+                                       needPattern: Boolean = false,
                                        /** All-JSON string columns
                                          * normally recurse instead;
                                          * their plan is only the
@@ -342,6 +343,24 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
 
   private final case class SummaryCtx(values: Stats, lengths: () => Stats,
                                       pattern: Option[Vector[CharClass]])
+
+  /** One column's lengths (string lengths, array/map sizes): `len` is
+    * the long length expression, `n` its non-null count, and `exact`
+    * whether its distinct count is under the cap (counter in pass 2)
+    * or not (summary in pass 3, sample in pass 4).
+    */
+  private final case class LengthRoute(id: String, len: Column, n: Long,
+                                       exact: Boolean)
+
+  private def lengthRoute(id: String, len: Column, row: Row): LengthRoute =
+    LengthRoute(id, len, row.getAs[Long](s"${id}__cnt"),
+      row.getAs[Long](s"${id}__ladist") <= exactDistinctCap)
+
+  private def sizeOf(l: Leaf): Column = size(l.col).cast(LongType)
+
+  /** Tally keys of a leaf's values and of its lengths. */
+  private def valueKey(id: String): String = "v" + id
+  private def lengthKey(id: String): String = "l" + id
 
   /** Leaf scalar columns, descending struct fields inline (no extra
     * job needed for structs — they're projections).
@@ -363,8 +382,9 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
     case _ => true
   }
 
-  /** Array/map columns at this level (descending struct fields), the
-    * inputs of the pass-5 nested batch.
+  /** Array/map columns at this level (descending struct fields): their
+    * sizes take the length route, their scalar content the pass-5
+    * nested batch.
     */
   private def collectNested(schema: StructType): Vector[Leaf] = {
     def walk(prefix: Vector[String], dt: DataType): Vector[Leaf] =
@@ -417,13 +437,8 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
         // wide agg spends its time on document corpora.
         val short = length(c) <= config.maxNumericLen
         def probe(cond: Column): Column = count(when(short && cond, 1))
-        Seq(
-          count(when(c === "", 1)).as(s"${id}__empty"),
-          min(length(c)).as(s"${id}__lmin"),
-          max(length(c)).as(s"${id}__lmax"),
-          // length-distinct estimate: decides whether an over-cap
-          // string's LENGTH counter can ride the batched counter pass
-          approx_count_distinct(length(c)).as(s"${id}__ladist"),
+        Seq(count(when(c === "", 1)).as(s"${id}__empty")) ++
+          lengthWitnessExprs(id, length(c)) ++ Seq(
           count(when(c.startsWith("http://")
             .or(c.startsWith("https://")), 1)).as(s"${id}__url"),
           count(when(c.rlike("^\\s*[\\[{]"), 1)).as(s"${id}__json")) ++
@@ -465,149 +480,106 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
       Conversions.VarDateTimePatterns
         .flatMap(p => Conversions.strptimeToSpark.get(p).map(p -> _))
 
-  // ------------------------------------------------- counter batch pass
-
-  /** ONE job per JVM type group: explode (name, value) structs and
-    * groupBy — instead of a full-data shuffle per column. Over-cap
-    * string columns' length counters ride the longs group ("l"-prefixed
-    * keys), so length stats cost no per-column job either.
+  /** Pass-1 witnesses of a length route: min/max feed an over-cap
+    * length summary, and the distinct estimate decides whether the
+    * lengths are counted (pass 2) or summarized (passes 3-4).
     */
-  private def collectCounters(df: DataFrame, cols: Vector[Leaf],
-                              lengthCols: Vector[Leaf])
-      : (Map[String, ValueCounter], Map[String, ValueCounter]) = {
-    if (cols.isEmpty && lengthCols.isEmpty) return (Map.empty, Map.empty)
-    def group(pairs: Vector[(String, Column)])
-        : Map[String, ValueCounter] = {
-      if (pairs.isEmpty) return Map.empty
-      val rows = df
-        .select(explode(array(pairs.map { case (k, v) =>
-          struct(lit(k).as("k"), v.as("v")) }: _*)).as("e"))
-        .groupBy(col("e.k").as("k"), col("e.v").as("v"))
-        .agg(count(lit(1)).as("c"))
-        .collect()
-      rows.groupBy(_.getAs[String]("k")).map { case (k, rs) =>
-        k -> ValueCounter(rs.map(r =>
-          (r.get(1): Any) -> r.getAs[Long]("c")).toMap)
-      }
-    }
-    def sel(f: Leaf => Option[Column]): Vector[(String, Column)] =
-      cols.flatMap(l => f(l).map(v => ("v" + l.id) -> v))
-    // longs (ints; over-cap string lengths ride along, "l"-prefixed)
-    val longs = group(sel { l =>
-      l.dataType match {
-        case _: IntegerType | _: LongType | _: ShortType | _: ByteType =>
-          Some(l.col.cast(LongType))
-        case _ => None
-      }
-    } ++ lengthCols.map(l =>
-      ("l" + l.id) -> length(l.col).cast(LongType)))
-    val bools = group(sel { l =>
-      l.dataType match {
-        case BooleanType => Some(l.col)
-        case _ => None
-      }
-    })
-    val times = group(sel { l =>
-      l.dataType match {
-        case TimestampType | TimestampNTZType | DateType =>
-          // NTZ/date need an explicit cast (session tz = UTC)
-          Some(unix_micros(l.col.cast(TimestampType)))
-        case _ => None
-      }
-    }).map { case (k, vc) =>
-      k -> vc.mapKeys {
-        case null => null
-        case m: Long => Instant.ofEpochSecond(
-          Math.floorDiv(m, 1000000L), Math.floorMod(m, 1000000L) * 1000L)
-      }
-    }
-    val doubles = group(sel { l =>
-      l.dataType match {
-        case DoubleType | FloatType | _: DecimalType =>
-          Some(l.col.cast(DoubleType))
-        case _ => None
-      }
-    })
-    val strings = group(sel { l =>
-      l.dataType match {
-        case StringType => Some(l.col)
-        case _ => None
-      }
-    })
-    val all = longs ++ bools ++ times ++ doubles ++ strings
-    val values = all.collect { case (k, vc) if k.startsWith("v") =>
-      k.substring(1) -> vc }
-    val lengths = all.collect { case (k, vc) if k.startsWith("l") =>
-      k.substring(1) -> vc }
-    (values, lengths)
-  }
+  private def lengthWitnessExprs(id: String, len: Column): Seq[Column] =
+    Seq(min(len).as(s"${id}__lmin"), max(len).as(s"${id}__lmax"),
+      approx_count_distinct(len).as(s"${id}__ladist"))
 
-  /** ONE bounded top-K display-sample job per JVM type group and
-    * level — replacing a groupBy+TakeOrdered job per over-cap column
-    * (a 200-column table cost 200 jobs where passes 1-3 are O(1)).
-    * Same explode-struct batching as [[collectCounters]]; the per-key
-    * ranking runs as a two-stage window (a salted pre-rank bounds any
-    * single reducer task, then the final per-key rank sorts at most
-    * 64·K rows per column), so one over-cap column's distinct values
-    * never funnel into a single task at corpus scale. Only columns
-    * the summary row proved non-unique participate — unique columns
-    * show no sample, exactly like the per-column path they replace.
-    */
-  private def collectTopKSamples(df: DataFrame,
-                                 active: Vector[SummaryPlan], srow: Row)
-      : (Map[String, ValueCounter], Map[String, ValueCounter]) = {
-    val valuePairs = active
-      .filter(p => !srow.getAs[Boolean](s"${p.leaf.id}__suniq"))
-      .map(p => ("v" + p.leaf.id, p.value))
-    val lengthPairs = active
-      .filter(p => p.needLengths && !p.lengthsExact &&
-        !srow.getAs[Boolean](s"${p.leaf.id}__sluniq"))
-      .map(p => ("l" + p.leaf.id, length(p.leaf.col).cast(LongType)))
-    // struct arrays must be type-homogeneous: one job per resolved
-    // value type (long/double/string — the plan value space)
-    val all = (valuePairs ++ lengthPairs)
-      .groupBy { case (_, v) => df.select(v).schema.head.dataType }
-      .values.toVector
-      .map(pairs => batchedTopK(df, pairs))
-      .fold(Map.empty[String, ValueCounter])(_ ++ _)
-    (all.collect { case (k, vc) if k.startsWith("v") =>
-        k.substring(1) -> vc },
-      all.collect { case (k, vc) if k.startsWith("l") =>
-        k.substring(1) -> vc })
-  }
+  // -------------------------------------------------------- tally kernel
 
-  /** ONE bounded top-K job for a batch of same-typed (key, value)
-    * columns: explode-struct groupBy, then a two-stage window (a
-    * salted pre-rank bounds any single reducer task, the final
-    * per-key rank sorts at most 64·K rows per column). Callers must
-    * pass type-homogeneous pairs (struct arrays demand it).
+  /** The typed slots of a [[tally]] struct, in sort order. */
+  private val tallySlots =
+    Vector("l" -> LongType, "d" -> DoubleType, "s" -> StringType,
+      "b" -> BooleanType)
+
+  /** The tally kernel: value→frequency counters for many (key, value)
+    * pairs in ONE explode + groupBy job. Each pair becomes
+    * `struct(k, l, d, s, b)` with only its own typed slot set — ints,
+    * lengths and timestamp micros in `l`, floats and decimals cast to
+    * `d`, strings in `s`, booleans in `b` — so pairs of any types share
+    * one array, one scan and one shuffle. Null values are dropped;
+    * timestamp/date values come back as `Instant`s; pairs of other
+    * types are skipped.
+    *
+    * With `topK > 0` each key keeps only its K most frequent values
+    * (ties: smallest value first), ranked by a two-stage window: a
+    * salted pre-rank bounds any single reducer task, then the final
+    * per-key rank sorts at most 64·K rows per key, so one over-cap
+    * column's distinct values never funnel into a single task at
+    * corpus scale. Only one slot is non-null within a key, so ordering
+    * by the slots orders by the value.
     */
-  private def batchedTopK(df: DataFrame,
-                          pairs: Vector[(String, Column)])
-      : Map[String, ValueCounter] = {
+  private def tally(df: DataFrame, pairs: Vector[(String, Column)],
+                    topK: Int = 0): Map[String, ValueCounter] = {
     if (pairs.isEmpty) return Map.empty
     import org.apache.spark.sql.expressions.Window
-    val order = Seq(col("n").desc, col("v").asc_nulls_first)
-    val w1 = Window
-      .partitionBy(col("k"), pmod(hash(col("v")), lit(64)))
-      .orderBy(order: _*)
-    val w2 = Window.partitionBy(col("k")).orderBy(order: _*)
-    val rows = df
-      .select(explode(array(pairs.map { case (k, v) =>
-        struct(lit(k).as("k"), v.as("v")) }: _*)).as("e"))
-      .where(col("e.v").isNotNull)
-      .groupBy(col("e.k").as("k"), col("e.v").as("v"))
+    val types = df.select(pairs.map(_._2): _*).schema.map(_.dataType)
+    val typed = pairs.zip(types).flatMap { case ((k, v), dt) =>
+      (dt match {
+        case ByteType | ShortType | IntegerType | LongType => Some("l")
+        case TimestampType | TimestampNTZType | DateType => Some("t")
+        case DoubleType | FloatType | _: DecimalType => Some("d")
+        case StringType => Some("s")
+        case BooleanType => Some("b")
+        case _ => None
+      }).map(slot => (k, slot, v))
+    }
+    if (typed.isEmpty) return Map.empty
+    val structs = typed.map { case (k, slot, v) =>
+      // timestamps count as micros (NTZ/date need an explicit cast;
+      // session tz = UTC)
+      val (into, value) =
+        if (slot == "t") ("l", unix_micros(v.cast(TimestampType)))
+        else (slot, v)
+      struct(lit(k).as("k") +: tallySlots.map { case (nm, t) =>
+        (if (nm == into) value.cast(t) else lit(null).cast(t)).as(nm)
+      }: _*)
+    }
+    val slots = tallySlots.map { case (nm, _) => col(nm) }
+    val counted = df
+      .select(explode(array(structs: _*)).as("e"))
+      .select(col("e.k").as("k") +:
+        tallySlots.map { case (nm, _) => col(s"e.$nm").as(nm) }: _*)
+      .where(slots.map(_.isNotNull).reduce(_ || _))
+      .groupBy(col("k") +: slots: _*)
       .agg(count(lit(1)).as("n"))
-      .withColumn("r1", row_number().over(w1))
-      .where(col("r1") <= sampleTopK)
-      .withColumn("r", row_number().over(w2))
-      .where(col("r") <= sampleTopK)
-      .collect()
-    rows.groupBy(_.getAs[String]("k")).map { case (k, rs) =>
-      k -> ValueCounter(rs.map(r =>
-        (normalize(r.get(1)): Any) -> r.getAs[Long]("n")).toMap)
+    val kept =
+      if (topK <= 0) counted
+      else {
+        val order = col("n").desc +: slots.map(_.asc_nulls_first)
+        val w1 = Window.partitionBy(col("k"), pmod(hash(slots: _*), lit(64)))
+          .orderBy(order: _*)
+        val w2 = Window.partitionBy(col("k")).orderBy(order: _*)
+        counted
+          .withColumn("r1", row_number().over(w1))
+          .where(col("r1") <= topK)
+          .withColumn("r", row_number().over(w2))
+          .where(col("r") <= topK)
+      }
+    val isTime = typed.collect { case (k, "t", _) => k }.toSet
+    kept.collect().groupBy(_.getString(0)).map { case (k, rs) =>
+      k -> ValueCounter(rs.map { r =>
+        val v = tallySlots.indices.collectFirst {
+          case i if !r.isNullAt(i + 1) => r.get(i + 1) }.get
+        (if (isTime(k)) microsToInstant(v.asInstanceOf[Long]) else v) ->
+          r.getAs[Long]("n")
+      }.toMap)
     }
   }
+
+  /** The pass-4 pairs: the values and lengths the summary row proved
+    * non-unique (unique ones show no sample).
+    */
+  private def topKPairs(plans: Vector[SummaryPlan],
+                        lengths: Vector[LengthRoute], srow: Row)
+      : Vector[(String, Column)] =
+    plans.filterNot(p => srow.getAs[Boolean](s"${p.leaf.id}__suniq"))
+      .map(p => valueKey(p.leaf.id) -> p.value) ++
+      lengths.filterNot(r => srow.getAs[Boolean](s"${r.id}__sluniq"))
+        .map(r => lengthKey(r.id) -> r.len)
 
   // --------------------------------------------------- summary planning
 
@@ -627,20 +599,16 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
     leaf.dataType match {
       case BooleanType =>
         Some(SummaryPlan(leaf, c.cast(LongType), numeric = true, cnt,
-          needLengths = false, lengthsExact = false, needPattern = false,
           ctx => SBool(ctx.values)))
       case _: IntegerType | _: LongType | _: ShortType | _: ByteType =>
         Some(SummaryPlan(leaf, c, numeric = true, cnt,
-          needLengths = false, lengthsExact = false, needPattern = false,
           ctx => tree.matchPossibleDateTime(SInt(ctx.values))))
       case DoubleType | FloatType | _: DecimalType =>
         Some(SummaryPlan(leaf, c.cast(DoubleType), numeric = true, cnt,
-          needLengths = false, lengthsExact = false, needPattern = false,
           ctx => tree.matchPossibleDateTime(SFloat(ctx.values))))
       case TimestampType | TimestampNTZType | DateType =>
         Some(SummaryPlan(leaf, unix_micros(c.cast(TimestampType)),
           numeric = true, cnt,
-          needLengths = false, lengthsExact = false, needPattern = false,
           ctx => SDateTime(instantStats(ctx.values))))
       case StringType => planStringSummary(leaf, row, cnt, jsonDepth)
       case _ => None
@@ -664,7 +632,8 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
       jsonW == cnt - empty
     if (jsonCandidate)
       // deferred plans compute their own lengths in their fallback agg
-      p0.map(_.copy(deferred = true, lengthsExact = false))
+      p0.map(p => p.copy(deferred = true,
+        lengths = p.lengths.map(_.copy(exact = false))))
     else p0
   }
 
@@ -676,12 +645,10 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
     val empty = row.getAs[Long](s"${id}__empty")
     val lmin = row.getAs[Int](s"${id}__lmin")
     val lmax = row.getAs[Int](s"${id}__lmax")
-    val lengthsExact =
-      row.getAs[Long](s"${id}__ladist") <= exactDistinctCap
+    val lengths = Some(lengthRoute(id, length(c).cast(LongType), row))
     if (cnt > 0 && empty.toDouble / cnt > config.emptyThreshold)
       return Some(SummaryPlan(leaf, c, numeric = false, cnt,
-        needLengths = true, lengthsExact, needPattern = false,
-        ctx => SStr(ctx.values, ctx.lengths(), None)))
+        ctx => SStr(ctx.values, ctx.lengths(), None), lengths))
     val nonEmpty = cnt - empty
     val bad = math.ceil(cnt * config.badThreshold).toLong
     def ok(witness: Long): Boolean =
@@ -695,8 +662,6 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
             when(lower(trim(c)) === p.split("\\|", -1)(1), 1L)
               .otherwise(0L),
             numeric = true, nonEmpty,
-            needLengths = false, lengthsExact = false,
-            needPattern = false,
             ctx => SStrRepr(SBool(ctx.values), p)))
       }
       // ints (o, d, x probe order — analyzer.py:63)
@@ -708,8 +673,6 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
             case _ => conv10(c, base)
           }
           return Some(SummaryPlan(leaf, conv, numeric = true, nonEmpty,
-            needLengths = false, lengthsExact = false,
-            needPattern = false,
             ctx => {
               val res = SStrRepr(SInt(ctx.values), pat)
               if (pat == "d") promoteSummaryEpoch(res) else res
@@ -720,7 +683,6 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
       if (ok(row.getAs[Long](s"${id}__f")))
         return Some(SummaryPlan(leaf, c.try_cast(DoubleType),
           numeric = true, nonEmpty,
-          needLengths = false, lengthsExact = false, needPattern = false,
           ctx => promoteSummaryEpoch(SStrRepr(SFloat(ctx.values), "f"))))
       // datetimes
       sparkDateTimeFormats.zipWithIndex.foreach { case ((py, fmt), i) =>
@@ -728,29 +690,24 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
           return Some(SummaryPlan(leaf,
             unix_micros(try_to_timestamp(c, lit(fmt))),
             numeric = true, nonEmpty,
-            needLengths = false, lengthsExact = false,
-            needPattern = false,
             ctx => SStrRepr(SDateTime(instantStats(ctx.values)), py)))
       }
     }
     // plain string: lengths + fixed-length CharClass pattern + URL
     val urlAll = row.getAs[Long](s"${id}__url") == cnt
     Some(SummaryPlan(leaf, c, numeric = false, cnt,
-      needLengths = true, lengthsExact,
-      needPattern = lmin == lmax && lmax > 0 && lmax <= 64,
       ctx => {
         if (ctx.pattern.isEmpty && lmin != lmax && urlAll)
           SURL.fromSummary(ctx.values, ctx.lengths())
         else SStr(ctx.values, ctx.lengths(), ctx.pattern)
-      }))
+      }, lengths, needPattern = lmin == lmax && lmax > 0 && lmax <= 64))
   }
 
   // ------------------------------------------------ summary agg pass 3
 
   /** A plan's slice of the single wide summary aggregation: value
     * min/max/count/uniqueness (+ exact positional quartiles for
-    * numerics), length stats for strings whose length counter couldn't
-    * be batched, and the CharClassAgg buffer for fixed-length patterns.
+    * numerics) and the CharClassAgg buffer for fixed-length patterns.
     */
   private def summaryAggExprs(p: SummaryPlan,
                               pctConsumers: Int): Seq[Column] = {
@@ -765,22 +722,23 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
       if (p.numeric)
         Seq(quartileExpr(v, p.n, pctConsumers).as(s"${id}__sqs"))
       else Seq.empty
-    val len =
-      if (p.needLengths && !p.lengthsExact) {
-        val lc = length(p.leaf.col).cast(LongType)
-        Seq(min(lc).as(s"${id}__slmn"), max(lc).as(s"${id}__slmx"),
-          count(lc).as(s"${id}__slcnt"),
-          (approx_count_distinct(lc) >= (count(lc) * 98 / 100))
-            .as(s"${id}__sluniq"),
-          quartileExpr(lc, p.n, pctConsumers).as(s"${id}__slqs"))
-      } else Seq.empty
     val pat =
       if (p.needPattern)
         Seq(graft.functions.CharClassAgg.charClasses(p.leaf.col, 64)
           .as(s"${id}__spat"))
       else Seq.empty
-    base ++ qs ++ len ++ pat
+    base ++ qs ++ pat
   }
+
+  /** An over-cap length route's slice of the summary aggregation:
+    * uniqueness and positional quartiles (count/min/max are pass-1
+    * witnesses).
+    */
+  private def lengthAggExprs(r: LengthRoute,
+                             pctConsumers: Int): Seq[Column] =
+    Seq((approx_count_distinct(r.len) >= (count(r.len) * 98 / 100))
+        .as(s"${r.id}__sluniq"),
+      quartileExpr(r.len, r.n, pctConsumers).as(s"${r.id}__slqs"))
 
   /** Exact positional quartiles: percentile at p = k/(n-1) evaluates
     * order statistic x[k] with no interpolation (§1.3 rule: k = n/4,
@@ -800,14 +758,11 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
       lit(10000)).cast(ArrayType(DoubleType))
   }
 
-  /** Build a plan's value Stats from the wide summary row + the
-    * batched top-K sample (deferred plans — built outside the shared
-    * passes — keep their own bounded per-column sample job).
+  /** Build a plan's value Stats from the wide summary row + its
+    * top-K sample.
     */
-  private def summaryStatsFromRow(df: DataFrame, p: SummaryPlan,
-                                  srow: Row,
-                                  samples: Map[String, ValueCounter])
-      : Stats = {
+  private def summaryStatsFromRow(p: SummaryPlan, srow: Row,
+                                  sample: Option[ValueCounter]): Stats = {
     val id = p.leaf.id
     val cnt = srow.getAs[Long](s"${id}__scnt")
     val uniq = srow.getAs[Boolean](s"${id}__suniq")
@@ -823,18 +778,12 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
         val qs = srow.getSeq[Double](srow.fieldIndex(s"${id}__sqs"))
         Stats.summary(cnt, mn, qs(0), qs(1), qs(2), mx, uniq)
       }
-    // null-filter the sample: parsed representations (try_cast /
-    // try_to_timestamp) are null on unparsed rows, and a null group
-    // would consume a top-K slot only to be dropped at collection
-    if (p.deferred)
-      withTopK(df.select(p.value.as("v")).where(col("v").isNotNull),
-        col("v"), s0)
-    else withSample(s0, samples.get(id))
+    withSample(s0, sample)
   }
 
-  /** Attach a batched sample counter to a summary Stats (mirrors
-    * [[withTopK]]'s guards: no sample for unique columns, disabled
-    * sketch, or an empty counter).
+  /** Attach a top-K sample counter to a summary Stats: no sample for
+    * unique columns, a disabled sketch, or an empty counter. Marked
+    * partial so it can never feed quartile recomputation on merge.
     */
   private def withSample(s: Stats, sample: Option[ValueCounter])
       : Stats =
@@ -845,55 +794,44 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
       case _ => s
     }
 
-  /** Length Stats: exact from the batched counter when the length
-    * cardinality is under the cap (the common case), else from the
-    * wide summary row.
+  /** Length Stats of a route: exact from the pass-2 counter when the
+    * length cardinality is under the cap (the common case; all-null
+    * columns read {0: 1}), else from the pass-1 witnesses, the summary
+    * row and the top-K sample.
     */
-  private def lengthStatsFor(df: DataFrame, p: SummaryPlan, srow: Row,
-                             lengthCounters: Map[String, ValueCounter],
-                             lengthSamples: Map[String, ValueCounter])
-      : Stats = {
-    val id = p.leaf.id
-    if (p.lengthsExact) {
-      val cleaned = lengthCounters.get(id).map(vc =>
-        ValueCounter(vc.counts.flatMap {
-          case (null, _) => None
-          case (k, n) => Some((normalize(k): Any) -> n)
-        })).getOrElse(ValueCounter(Map.empty))
-      if (cleaned.isEmpty)
-        Stats.fromCounter(ValueCounter(Map((0L: Any) -> 1L)))
-      else Stats.fromCounter(cleaned)
-    } else {
-      val cnt = srow.getAs[Long](s"${id}__slcnt")
-      val uniq = srow.getAs[Boolean](s"${id}__sluniq")
-      val mn = normalize(srow.get(srow.fieldIndex(s"${id}__slmn")))
-      val mx = normalize(srow.get(srow.fieldIndex(s"${id}__slmx")))
-      val qs = srow.getSeq[Double](srow.fieldIndex(s"${id}__slqs"))
-      val s0 = Stats.summary(cnt, mn, qs(0), qs(1), qs(2), mx, uniq)
-      if (p.deferred)
-        withTopK(df.select(length(p.leaf.col).cast(LongType).as("v"))
-          .where(col("v").isNotNull), col("v"), s0)
-      else withSample(s0, lengthSamples.get(id))
+  private def lengthStats(r: LengthRoute, row: Row, srow: Row,
+                          counters: Map[String, ValueCounter],
+                          samples: Map[String, ValueCounter]): Stats =
+    if (r.exact)
+      Stats.fromCounter(counters.getOrElse(lengthKey(r.id),
+        ValueCounter(Map((0L: Any) -> 1L))))
+    else {
+      val mn = normalize(row.get(row.fieldIndex(s"${r.id}__lmin")))
+      val mx = normalize(row.get(row.fieldIndex(s"${r.id}__lmax")))
+      val uniq = srow.getAs[Boolean](s"${r.id}__sluniq")
+      val qs = srow.getSeq[Double](srow.fieldIndex(s"${r.id}__slqs"))
+      withSample(Stats.summary(r.n, mn, qs(0), qs(1), qs(2), mx, uniq),
+        samples.get(lengthKey(r.id)))
     }
-  }
 
-  private def buildFromPlan(df: DataFrame, p: SummaryPlan, srow0: Row,
-                            lengthCounters: Map[String, ValueCounter],
-                            valueSamples: Map[String, ValueCounter],
-                            lengthSamples: Map[String, ValueCounter])
-      : SType = {
+  private def buildFromPlan(ctx: LevelCtx, p: SummaryPlan): SType = {
     // deferred plans (all-JSON fallbacks) were excluded from the
-    // shared summary pass; build their row on demand — one
-    // per-column aggregation in the rare corrupt-JSON case only
-    val srow =
-      if (!p.deferred) srow0
+    // shared passes; build their summary row and samples on demand —
+    // one aggregation and one tally in the rare corrupt-JSON case only
+    val (srow, samples) =
+      if (!p.deferred) (ctx.summaryRow, ctx.samples)
       else {
-        val exprs = summaryAggExprs(p, pctConsumers = 1)
-        df.agg(exprs.head, exprs.tail: _*).head()
+        val exprs = summaryAggExprs(p, pctConsumers = 1) ++
+          p.lengths.toSeq.flatMap(lengthAggExprs(_, pctConsumers = 1))
+        val srow = ctx.df.agg(exprs.head, exprs.tail: _*).head()
+        (srow, if (sampleTopK <= 0) Map.empty[String, ValueCounter]
+          else tally(ctx.df, topKPairs(Vector(p), p.lengths.toVector,
+            srow), sampleTopK))
       }
-    val values = summaryStatsFromRow(df, p, srow, valueSamples)
-    val lengths = () => lengthStatsFor(df, p, srow, lengthCounters,
-      lengthSamples)
+    val values = summaryStatsFromRow(p, srow,
+      samples.get(valueKey(p.leaf.id)))
+    val lengths = () => lengthStats(p.lengths.get, ctx.row, srow,
+      ctx.counters, samples)
     val pattern =
       if (!p.needPattern) None
       else {
@@ -923,11 +861,12 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
       SDict(Stats.fromCounter(ValueCounter(Map(
         (s.fields.length.toLong: Any) -> cnt))), fields)
     case ArrayType(et, _) =>
-      // lengths + scalar items come from the pass-5 level batches;
-      // only struct/nested elements still explode per column (they
-      // recurse into full sub-levels of their own)
+      // lengths come from the level's length route and scalar items
+      // from the pass-5 batch; only struct/nested elements still
+      // explode per column (they recurse into full sub-levels of their
+      // own)
       val leaf = Leaf(path, dt)
-      val lengths = ctx.nestedLengths(leaf.id)
+      val lengths = sizeStats(ctx, leaf)
       val itemType = ctx.nestedItems.get(leaf.id + SlotItems) match {
         case Some(t) => t
         case None =>
@@ -938,7 +877,7 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
     case MapType(kt, vt, _) =>
       val leaf = Leaf(path, dt)
       val c = leaf.col
-      val lengths = ctx.nestedLengths(leaf.id)
+      val lengths = sizeStats(ctx, leaf)
       val keys = ctx.nestedItems.get(leaf.id + SlotKeys) match {
         case Some(t) => t
         case None => analyzeNested(ctx.df.select(explode(map_keys(c))
@@ -954,6 +893,10 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
       assembleScalar(ctx, Leaf(path, other))
   }
 
+  private def sizeStats(ctx: LevelCtx, leaf: Leaf): Stats =
+    lengthStats(lengthRoute(leaf.id, sizeOf(leaf), ctx.row), ctx.row,
+      ctx.summaryRow, ctx.counters, ctx.samples)
+
   /** Analyze exploded array/map content as its own level. */
   private def analyzeNested(items: DataFrame, et: DataType,
                             jsonDepth: Int): SType =
@@ -961,30 +904,16 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
       case s: StructType =>
         analyzeLevel(items.select(s.fields.toVector.map(f =>
           col("item").getField(f.name).as(f.name)): _*), jsonDepth)
-      case _: ArrayType | _: MapType =>
-        // deeper nesting: recurse with the single "item" column
-        val sub = analyzeLevel2(items, jsonDepth)
-        sub
       case _ =>
-        val sub = analyzeLevel(items, jsonDepth)
-        sub match {
-          case d: SDict if d.content.length == 1 =>
-            d.content.head.value // unwrap single synthetic column
+        // scalars and deeper nesting: one level over the single "item"
+        // column, unwrapped
+        analyzeLevel(items, jsonDepth) match {
+          case d: SDict if d.content.length == 1 => d.content.head.value
           case other => other
         }
     }
 
-  private def analyzeLevel2(items: DataFrame,
-                            jsonDepth: Int): SType = {
-    val d = analyzeLevel(items, jsonDepth)
-    d match {
-      case dict: SDict if dict.content.length == 1 =>
-        dict.content.head.value
-      case other => other
-    }
-  }
-
-  /** Pass 5a: ONE tagged-explode frame for every scalar slot at a
+  /** Pass 5: ONE tagged-explode frame for every scalar slot at a
     * level (array items, map keys, map values). Each source array
     * contributes structs carrying a `__src` tag and its value in its
     * own slot field (null elsewhere); a single `explode(concat(...))`
@@ -1030,111 +959,6 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
     }.toMap
   }
 
-  /** Pass 5b: length Stats for every array/map column at a level in
-    * a FIXED number of jobs (previously 2-3 jobs per column via a
-    * per-column counter-or-summary): one wide count/distinct/min/max
-    * agg, one explode-struct counter job for the under-cap columns,
-    * one wide quartile agg for the over-cap ones (exact-percentile
-    * buffers share the executor cap across columns, like pass 3),
-    * plus the shared bounded top-K job when samples are on.
-    */
-  private def batchedLengthStats(df: DataFrame,
-      cols: Vector[(String, Column)]): Map[String, Stats] = {
-    if (cols.isEmpty) return Map.empty
-    val names = cols.indices.map(i => s"__n$i").toVector
-    val frame = df.select(cols.zip(names).map { case ((_, c), nm) =>
-      size(c).cast(LongType).as(nm) }: _*)
-    val aggs = names.flatMap(nm => Seq(
-      count(col(nm)).as(s"${nm}_cnt"),
-      approx_count_distinct(col(nm)).as(s"${nm}_adist"),
-      min(col(nm)).as(s"${nm}_min"),
-      max(col(nm)).as(s"${nm}_max")))
-    val row = frame.agg(aggs.head, aggs.tail: _*).head()
-    def cnt(nm: String) = row.getAs[Long](s"${nm}_cnt")
-    def adist(nm: String) = row.getAs[Long](s"${nm}_adist")
-
-    val under = names.filter(nm =>
-      cnt(nm) > 0 && adist(nm) <= exactDistinctCap)
-    val counters: Map[String, ValueCounter] =
-      if (under.isEmpty) Map.empty
-      else frame
-        .select(explode(array(under.map(nm =>
-          struct(lit(nm).as("k"), col(nm).as("v"))): _*)).as("e"))
-        .where(col("e.v").isNotNull)
-        .groupBy(col("e.k").as("k"), col("e.v").as("v"))
-        .agg(count(lit(1)).as("c"))
-        .collect()
-        .groupBy(_.getAs[String]("k")).map { case (k, rs) =>
-          k -> ValueCounter(rs.map(r =>
-            (normalize(r.get(1)): Any) -> r.getAs[Long]("c")).toMap)
-        }
-
-    val over = names.filter(nm =>
-      cnt(nm) > 0 && adist(nm) > exactDistinctCap)
-    val overRow: Row =
-      if (over.isEmpty) null
-      else {
-        val oAggs = over.flatMap(nm => Seq(
-          quartileExpr(col(nm), cnt(nm), pctConsumers = over.size)
-            .as(s"${nm}_qs"),
-          (approx_count_distinct(col(nm)) >=
-            (count(col(nm)) * 98 / 100)).as(s"${nm}_uniq")))
-        frame.agg(oAggs.head, oAggs.tail: _*).head()
-      }
-    val nonUnique = over.filter(nm =>
-      !overRow.getAs[Boolean](s"${nm}_uniq"))
-    val samples: Map[String, ValueCounter] =
-      if (sampleTopK <= 0 || nonUnique.isEmpty) Map.empty
-      else batchedTopK(frame,
-        nonUnique.map(nm => nm -> col(nm)).toVector)
-
-    cols.zip(names).map { case ((id, _), nm) =>
-      val stats =
-        if (cnt(nm) == 0)
-          Stats.fromCounter(ValueCounter(Map((0L: Any) -> 1L)))
-        else if (under.contains(nm))
-          Stats.fromCounter(counters.getOrElse(nm, ValueCounter(
-            Map((0L: Any) -> 1L))))
-        else {
-          val mn = normalize(row.get(row.fieldIndex(s"${nm}_min")))
-          val mx = normalize(row.get(row.fieldIndex(s"${nm}_max")))
-          val qs = overRow.getSeq[Double](
-            overRow.fieldIndex(s"${nm}_qs"))
-          val uniq = overRow.getAs[Boolean](s"${nm}_uniq")
-          val s0 = Stats.summary(cnt(nm), mn, qs(0), qs(1), qs(2),
-            mx, uniq)
-          samples.get(nm) match {
-            case Some(counter) if !counter.isEmpty =>
-              Stats.summaryWithSample(s0.card, s0.min, s0.q1, s0.q2,
-                s0.q3, s0.max, s0.unique, counter)
-            case _ => s0
-          }
-        }
-      id -> stats
-    }.toMap
-  }
-
-  /** Attach the bounded top-K most-common sketch to a summary Stats:
-    * one partial-aggregated groupBy + TakeOrdered of K rows — the
-    * sample display survives past the distinct cap without a driver
-    * histogram (SURVEY §8). Marked partial so it can never feed
-    * quartile recomputation on merge.
-    */
-  private def withTopK(df: DataFrame, c: Column, s: Stats): Stats = {
-    if (sampleTopK <= 0 || s.unique) return s
-    val rows = df.groupBy(c.as("v"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("v").asc_nulls_first)
-      .limit(sampleTopK)
-      .collect()
-    val counter = ValueCounter(rows.flatMap { r =>
-      Option(r.get(0)).map(v => (normalize(v): Any) -> r.getAs[Long]("n"))
-    }.toMap)
-    if (counter.isEmpty) s
-    else Stats.summaryWithSample(s.card, s.min, s.q1, s.q2, s.q3,
-      s.max, s.unique, counter)
-  }
-
   /** Spark row value → dynamic value model. */
   private def normalize(v: Any): Any = v match {
     case null => null
@@ -1152,13 +976,15 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
     case other => other
   }
 
+  private def microsToInstant(m: Long): Instant = Instant.ofEpochSecond(
+    Math.floorDiv(m, 1000000L), Math.floorMod(m, 1000000L) * 1000L)
+
   /** micros-epoch summary Stats → Instant-valued Stats (the approx
     * path yields Double micros).
     */
   private def instantStats(s: Stats): Stats = {
     def toInst(v: Any): Any = v match {
-      case m: Long => Instant.ofEpochSecond(
-        Math.floorDiv(m, 1000000L), Math.floorMod(m, 1000000L) * 1000L)
+      case m: Long => microsToInstant(m)
       case d: Double => SType.epochToInstant(d / 1e6)
       case other => other
     }
@@ -1202,21 +1028,11 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
       }
     }
 
-    ctx.counters.get(id) match {
-      case Some(counter0) =>
-        val counter = ValueCounter(counter0.counts.flatMap {
-          case (null, _) => None
-          case (k, v) => Some(normalize(k) -> v)
-        })
-        if (counter.isEmpty) return SValue(Vector.empty)
-        exactLadder(counter, leaf.dataType)
+    ctx.counters.get(valueKey(id)) match {
+      case Some(counter) => exactLadder(counter, leaf.dataType)
       case None =>
-        ctx.plans.get(id) match {
-          case Some(p) =>
-            buildFromPlan(ctx.df, p, ctx.summaryRow, ctx.lengthCounters,
-              ctx.valueSamples, ctx.lengthSamples)
-          case None => SValue(Vector.empty)
-        }
+        ctx.plans.get(id).map(buildFromPlan(ctx, _))
+          .getOrElse(SValue(Vector.empty))
     }
   }
 

@@ -187,9 +187,6 @@ object LangModel {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** [[charNgrams]] at n = 2 — the classic language-ID feature. */
-  def charBigrams(text: Column): Column = charNgrams(text, 2)
-
   /** A trained character-n-gram naive-Bayes language identifier:
     * `n` the gram order, `labels` sorted ascending (the argmin
     * tie-break order), `defaults(i)` the whole-bit cost of a gram

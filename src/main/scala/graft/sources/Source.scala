@@ -521,18 +521,21 @@ object Source {
   /** S5: RFC-4180-ish CSV → rows of string tuples; the FIRST LINE IS
     * ALWAYS SKIPPED (reference quirk, source.py:237-241).
     */
-  def parseCsv(text: String, dialect: CsvDialect): Vector[Any] = {
-    val rows = Vector.newBuilder[Any]
+  def parseCsv(text: String, dialect: CsvDialect): Vector[Any] =
+    csvRecords(text, dialect).drop(1)
+
+  /** Every CSV record of `text`, the header line included. */
+  private def csvRecords(text: String, dialect: CsvDialect)
+      : Vector[VTuple] = {
+    val rows = Vector.newBuilder[VTuple]
     val row = Vector.newBuilder[Any]
     val field = new StringBuilder
     var inQuotes = false
     var sawAny = false
-    var firstRow = true
     def endField(): Unit = { row += field.result(); field.clear() }
     def endRow(): Unit = {
       endField()
-      if (!firstRow) rows += VTuple(row.result().toVector)
-      firstRow = false
+      rows += VTuple(row.result().toVector)
       row.clear()
       sawAny = false
     }
@@ -1342,26 +1345,57 @@ object Source {
   }
 
   /** Driver-side load into the dynamic value model (reference
-    * lifecycle for a single file).
+    * lifecycle for a single file). A directory or a glob loads as one
+    * table of part files, in sorted order: JSON-lines parts concatenate
+    * their records, CSV parts their rows (every part's header must
+    * equal the first part's); other formats must be passed as
+    * separate files.
     */
   def load(path: String,
            opts: SourceOptions = SourceOptions()): Any = {
     val d = detect(path, opts)
-    val text = decode(Files.readAllBytes(Paths.get(path)), d.encoding,
-      strict = opts.encodingStrict)
+    def text(bytes: Array[Byte]): String =
+      decode(bytes, d.encoding, strict = opts.encodingStrict)
+    if (!Files.isRegularFile(Paths.get(path))) {
+      val parts = PartFiles.list(path)
+        .map(p => p.toString -> text(PartFiles.read(p)))
+      return d.format match {
+        case JsonLinesFormat => parts.flatMap { case (_, t) =>
+          jsonLines(t, opts.jsonStrict) }
+        case CsvFormat =>
+          val records = parts.map { case (name, t) =>
+            name -> csvRecords(t, d.dialect.get) }
+          val (first, firstRecords) = records.head
+          val header = firstRecords.headOption
+          records.flatMap { case (name, rs) =>
+            if (rs.headOption != header)
+              throw new IllegalArgumentException(
+                s"CSV header of $name differs from that of $first")
+            rs.drop(1)
+          }
+        case other =>
+          throw new IllegalArgumentException(
+            s"$path names several files and was detected as $other; " +
+              "only JSON lines and CSV parts load as one table, so " +
+              "pass the files separately")
+      }
+    }
+    val whole = text(Files.readAllBytes(Paths.get(path)))
     d.format match {
-      case JsonFormat => graft.tools.Json.parse(text, opts.jsonStrict)
-      case JsonLinesFormat =>
-        text.linesIterator.filter(_.trim.nonEmpty)
-          .map(graft.tools.Json.parse(_, opts.jsonStrict)).toVector
-      case CsvFormat => parseCsv(text, d.dialect.get)
-      case YamlFormat => parseYaml(text)
+      case JsonFormat => graft.tools.Json.parse(whole, opts.jsonStrict)
+      case JsonLinesFormat => jsonLines(whole, opts.jsonStrict)
+      case CsvFormat => parseCsv(whole, d.dialect.get)
+      case YamlFormat => parseYaml(whole)
       case XmlFormat =>
         throw new NotImplementedError("xml detected but not supported")
       case UnknownFormat =>
         throw new IllegalArgumentException("unable to guess data format")
     }
   }
+
+  private def jsonLines(text: String, strict: Boolean): Vector[Any] =
+    text.linesIterator.filter(_.trim.nonEmpty)
+      .map(graft.tools.Json.parse(_, strict)).toVector
 
   /** Load many files as a sources list (ui/cli.py:240-249). */
   def loadAll(paths: Seq[String],
@@ -1409,28 +1443,40 @@ object Source {
   }
 }
 
-/** The file a multi-file table is sampled from: the first data file, in
-  * sorted path order, that a directory (searched depth first) or a glob
-  * names. Names starting with `_` or `.` (`_SUCCESS`, checksum files)
-  * are skipped, as Spark's file listing skips them. Kept apart from
+/** The data files of a multi-file table: every file, in sorted path
+  * order, that a directory (searched depth first) or a glob names.
+  * Names starting with `_` or `.` (`_SUCCESS`, checksum files) are
+  * skipped, as Spark's file listing skips them. Kept apart from
   * [[Source]] so that the Hadoop classes it uses, and the jars they
-  * come from, load only when a table of part files is sampled.
+  * come from, load only when a table of part files is read.
   */
 private object PartFiles {
-  def openFirst(path: String): InputStream = {
+  def list(path: String): Vector[HPath] = {
     val pattern = new HPath(path)
     val fs = pattern.getFileSystem(new Configuration())
     def data(s: FileStatus): Boolean = {
       val name = s.getPath.getName
       !name.startsWith("_") && !name.startsWith(".")
     }
-    def first(found: Array[FileStatus]): Option[HPath] =
-      found.filter(data).sortBy(_.getPath.toString).iterator.flatMap { s =>
-        if (s.isDirectory) first(fs.listStatus(s.getPath))
-        else Some(s.getPath)
-      }.nextOption()
-    Option(fs.globStatus(pattern)).flatMap(first).map(fs.open(_))
-      .getOrElse(throw new NoSuchFileException(path, null,
-        "no data file in this directory or glob"))
+    def walk(found: Array[FileStatus]): Vector[HPath] =
+      found.filter(data).sortBy(_.getPath.toString).toVector.flatMap { s =>
+        if (s.isDirectory) walk(fs.listStatus(s.getPath))
+        else Vector(s.getPath)
+      }
+    val files = Option(fs.globStatus(pattern)).map(walk)
+      .getOrElse(Vector.empty)
+    if (files.isEmpty) throw new NoSuchFileException(path, null,
+      "no data file in this directory or glob")
+    files
+  }
+
+  def open(file: HPath): InputStream =
+    file.getFileSystem(new Configuration()).open(file)
+
+  def openFirst(path: String): InputStream = open(list(path).head)
+
+  def read(file: HPath): Array[Byte] = {
+    val in = open(file)
+    try in.readAllBytes() finally in.close()
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.JobCounts
 import graft.core._
 
 /** Cross-validation: the distributed analyzer must agree with the
@@ -176,28 +177,17 @@ class SparkAnalyzerSpec extends AnyFunSuite with BeforeAndAfterAll {
         (0 until numCols).map(k => concat(lit(s"v${k}_"),
           (base.col("i") % 101).cast("string")).as(s"s$k"))
       val df = base.select(cols: _*)
-      val group = s"graft-jobcount-$numCols-$topK"
-      s.sparkContext.setJobGroup(group, "job count test")
-      try new SparkAnalyzer(exactDistinctCap = 4, sampleTopK = topK)
-        .analyzeTable(df)
-      finally s.sparkContext.clearJobGroup()
-      // the status tracker is fed asynchronously; poll until stable
-      def count() =
-        s.sparkContext.statusTracker.getJobIdsForGroup(group).length
-      var prev = -1
-      var cur = count()
-      var spins = 0
-      while (cur != prev && spins < 50) {
-        Thread.sleep(100); prev = cur; cur = count(); spins += 1
+      JobCounts.inGroup(s, s"graft-jobcount-$numCols-$topK") {
+        new SparkAnalyzer(exactDistinctCap = 4, sampleTopK = topK)
+          .analyzeTable(df)
       }
-      cur
     }
     val j6 = jobsFor(6, topK = 0)
     val j18 = jobsFor(18, topK = 0)
     assert(j6 > 0)
     assert(j18 == j6, s"jobs grew with column count: $j6 -> $j18")
     // the display-sample sketch used to cost one TakeOrdered job per
-    // over-cap column; it is now one batched job per type group
+    // over-cap column; it is now one batched job per level
     val j6s = jobsFor(6, topK = 4)
     val j18s = jobsFor(18, topK = 4)
     assert(j18s == j6s,
@@ -219,19 +209,9 @@ class SparkAnalyzerSpec extends AnyFunSuite with BeforeAndAfterAll {
           concat(lit(s"b${k}_"), (base.col("i") % 5).cast("string"))
         ).as(s"xs$k"))
       val df = base.select(cols: _*)
-      val group = s"graft-nested-jobcount-$numArrays"
-      s.sparkContext.setJobGroup(group, "nested job count test")
-      try new SparkAnalyzer().analyzeTable(df)
-      finally s.sparkContext.clearJobGroup()
-      def count() =
-        s.sparkContext.statusTracker.getJobIdsForGroup(group).length
-      var prev = -1
-      var cur = count()
-      var spins = 0
-      while (cur != prev && spins < 50) {
-        Thread.sleep(100); prev = cur; cur = count(); spins += 1
+      JobCounts.inGroup(s, s"graft-nested-jobcount-$numArrays") {
+        new SparkAnalyzer().analyzeTable(df)
       }
-      cur
     }
     val j1 = jobsFor(1)
     val j6 = jobsFor(6)

@@ -216,14 +216,8 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       s.conf.set("spark.sql.adaptive.enabled", prevAqe)
       s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
     }
-    def jobs() =
-      s.sparkContext.statusTracker.getJobIdsForGroup(group).length
-    var p = -1
-    var cur = jobs()
-    var spins = 0
-    while (cur != p && spins < 50) {
-      Thread.sleep(100); p = cur; cur = jobs(); spins += 1
-    }
+    val cur = graft.JobCounts.settled(
+      s.sparkContext.statusTracker.getJobIdsForGroup(group).length)
     // init checkpoint + 2 rounds + the final count() action above
     assert(cur == 4, s"expected 4 jobs (init + 2 rounds + count), got $cur")
   }

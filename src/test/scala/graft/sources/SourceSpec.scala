@@ -715,6 +715,66 @@ class SourceSpec extends AnyFunSuite {
     Files.delete(dir)
   }
 
+  /** A fresh directory holding `files` (name -> body); removed after
+    * `body` runs.
+    */
+  private def withTable[T](files: (String, String)*)(
+      body: java.nio.file.Path => T): T = {
+    val dir = Files.createTempDirectory("table")
+    files.foreach { case (name, text) =>
+      Files.write(dir.resolve(name), text.getBytes("UTF-8")) }
+    try body(dir) finally {
+      Files.list(dir).forEach(f => Files.delete(f))
+      Files.delete(dir)
+    }
+  }
+
+  private val jsonParts = Seq(
+    "part-00000.jsonl" -> "{\"a\": 1}\n{\"a\": 2}\n",
+    "part-00001.jsonl" -> "{\"a\": 3}\n",
+    // neither may be read: each parses as CSV, not JSON lines
+    "_SUCCESS" -> "not, json\nat, all\n",
+    ".draft.jsonl" -> "not, json\nat, all\n")
+
+  test("load: a directory of JSON-lines parts concatenates their " +
+      "records, skipping _ and . files") {
+    withTable(jsonParts: _*) { dir =>
+      assert(load(dir.toString) ==
+        Vector(Map("a" -> 1L), Map("a" -> 2L), Map("a" -> 3L)))
+    }
+  }
+
+  test("load: a glob of JSON-lines parts concatenates their records") {
+    withTable(jsonParts: _*) { dir =>
+      assert(load(dir.resolve("*.jsonl").toString) ==
+        Vector(Map("a" -> 1L), Map("a" -> 2L), Map("a" -> 3L)))
+    }
+  }
+
+  test("load: CSV parts concatenate their rows under one header") {
+    withTable(
+      "part-00000.csv" -> "name,qty\napple,1\npear,2\n",
+      "part-00001.csv" -> "name,qty\nplum,3\n") { dir =>
+      assert(load(dir.toString) == Vector(VTuple(Vector("apple", "1")),
+        VTuple(Vector("pear", "2")), VTuple(Vector("plum", "3"))))
+    }
+  }
+
+  test("load: CSV parts with different headers, or parts of a " +
+      "whole-document format, are refused") {
+    withTable(
+      "part-00000.csv" -> "name,qty\napple,1\npear,2\n",
+      "part-00001.csv" -> "name,count\nplum,3\n") { dir =>
+      val e = intercept[IllegalArgumentException](load(dir.toString))
+      assert(e.getMessage.contains("part-00000.csv") &&
+        e.getMessage.contains("part-00001.csv"), e.getMessage)
+    }
+    withTable("a.json" -> "[1, 2]", "b.json" -> "[3]") { dir =>
+      val e = intercept[IllegalArgumentException](load(dir.toString))
+      assert(e.getMessage.contains("separately"), e.getMessage)
+    }
+  }
+
   test("jsonl: detected, loaded as records, whole-doc json unaffected") {
     val jsonl = "{\"a\": 1}\n{\"a\": 2}\n{\"a\": 3}\n"
     assert(detectFormat(jsonl) == JsonLinesFormat)
