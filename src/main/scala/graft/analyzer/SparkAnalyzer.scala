@@ -92,7 +92,7 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
     * records: returns `SList(SDict(record fields...))`.
     */
   def analyzeTable(df: DataFrame): SType = {
-    val dict = analyzeLevel(df)
+    val dict = analyzeLevel(df, RootLevel)
     SList(Stats.fromCounter(ValueCounter(Map((1L: Any) -> 1L))), dict)
   }
 
@@ -138,6 +138,7 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
     * see exactly the rows the per-column explode would have produced.
     */
   private def analyzeLevel(df: DataFrame,
+                           level: String,
                            jsonDepth: Int = 0,
                            srcTagged: Boolean = false): SType = {
     val schema = df.schema
@@ -158,7 +159,7 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
         count(sizeOf(l)).as(s"${l.id}__cnt") +:
           lengthWitnessExprs(l.id, sizeOf(l))
       } ++ slotTotals :+ count(lit(1)).as("__total")
-    val row = described(df, s"graft: witness pass " +
+    val row = described(df, s"graft: witness pass at $level " +
       s"(${leaves.size} columns)") {
       df.agg(aggExprs.head, aggExprs.tail: _*).head()
     }
@@ -207,8 +208,8 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
     // byte budget: a length is one long)
     val counterPairs = counterCols.map(l => valueKey(l.id) -> l.col) ++
       exactLengths.map(r => lengthKey(r.id) -> r.len)
-    val counters = described(df, s"graft: exact counter batch " +
-      s"(${counterPairs.size} columns)") {
+    val counters = described(df, s"graft: exact counter batch at " +
+      s"$level (${counterPairs.size} columns)") {
       tally(df, counterPairs)
     }
 
@@ -223,7 +224,7 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
       (active.count(_.numeric) + overLengths.size).max(1)
     val summaryRow: Row =
       if (active.isEmpty && overLengths.isEmpty) null
-      else described(df, s"graft: summary pass " +
+      else described(df, s"graft: summary pass at $level " +
         s"(${active.size + overLengths.size} over-cap columns)") {
         val exprs = active.flatMap(p => summaryAggExprs(p, pctConsumers)) ++
           overLengths.flatMap(r => lengthAggExprs(r, pctConsumers))
@@ -231,13 +232,15 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
       }
 
     // -------- pass 4: ONE top-K display-sample job for every
-    // non-unique over-cap column and length
+    // non-unique over-cap column and length whose Stats keep a sample
+    val samplePairs =
+      if (summaryRow == null || sampleTopK <= 0) Vector.empty
+      else topKPairs(active, overLengths, summaryRow)
     val samples =
-      if (summaryRow == null || sampleTopK <= 0)
-        Map.empty[String, ValueCounter]
-      else described(df, s"graft: top-K sample batch " +
-        s"(${active.size + overLengths.size} over-cap columns)") {
-        tally(df, topKPairs(active, overLengths, summaryRow), sampleTopK)
+      if (samplePairs.isEmpty) Map.empty[String, ValueCounter]
+      else described(df, s"graft: top-K sample batch at $level " +
+        s"(${samplePairs.size} over-cap columns)") {
+        tally(df, samplePairs, sampleTopK)
       }
 
     // -------- pass 5: every scalar-element explode (array items, map
@@ -258,13 +261,13 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
         case _ => Vector.empty
       }
     }
-    val nestedItems = analyzeNestedBatch(df, slots, jsonDepth)
+    val nestedItems = analyzeNestedBatch(df, level, slots, jsonDepth)
 
     // -------- assemble the record dict
-    val ctx = LevelCtx(df, row, counters,
+    val ctx = LevelCtx(df, level, row, counters,
       plans.map(p => p.leaf.id -> p).toMap, summaryRow, samples,
       total, totalFor, jsonDepth, nestedItems)
-    described(df, "graft: assemble (nested levels / top-K)") {
+    described(df, s"graft: assemble at $level (nested levels / top-K)") {
       val fields = schema.fields.toVector
         .filterNot(f => srcTagged && f.name == "__src")
         .sortBy(_.name).map { f =>
@@ -287,6 +290,16 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
     try f finally sc.setJobDescription(prev)
   }
 
+  /** Level paths for job labels, JSONPath-like: `$` is the table, a
+    * field path under a level is dotted, `[]` marks array items,
+    * `{keys}`/`{values}` a map's, `(json)` a parsed JSON-string column,
+    * and `[*]` the tagged batch of a level's scalar items.
+    */
+  private val RootLevel = "$"
+
+  private def childLevel(level: String, path: Vector[String]): String =
+    path.mkString(level + ".", ".", "")
+
   // ------------------------------------------------------------ schema
 
   private final case class Leaf(path: Vector[String], dataType: DataType) {
@@ -302,7 +315,8 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
     * [[valueKey]] / [[lengthKey]]), and the over-cap summary plans +
     * their single wide-agg result row.
     */
-  private final case class LevelCtx(df: DataFrame, row: Row,
+  private final case class LevelCtx(df: DataFrame, level: String,
+                                    row: Row,
                                     counters: Map[String, ValueCounter],
                                     plans: Map[String, SummaryPlan],
                                     summaryRow: Row,
@@ -339,7 +353,14 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
                                          * passes — built on demand by
                                          * a per-column aggregation.
                                          */
-                                       deferred: Boolean = false)
+                                       deferred: Boolean = false,
+                                       /** Whether the built SType
+                                         * drops the value sample, read
+                                         * off the summary row: pass 4
+                                         * then skips the column.
+                                         */
+                                       dropsSample: Row => Boolean =
+                                         _ => false)
 
   private final case class SummaryCtx(values: Stats, lengths: () => Stats,
                                       pattern: Option[Vector[CharClass]])
@@ -571,12 +592,14 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
   }
 
   /** The pass-4 pairs: the values and lengths the summary row proved
-    * non-unique (unique ones show no sample).
+    * non-unique (unique ones show no sample), less the values whose
+    * built SType rebuilds its Stats without a sample.
     */
   private def topKPairs(plans: Vector[SummaryPlan],
                         lengths: Vector[LengthRoute], srow: Row)
       : Vector[(String, Column)] =
-    plans.filterNot(p => srow.getAs[Boolean](s"${p.leaf.id}__suniq"))
+    plans.filterNot(p => srow.getAs[Boolean](s"${p.leaf.id}__suniq") ||
+        p.dropsSample(srow))
       .map(p => valueKey(p.leaf.id) -> p.value) ++
       lengths.filterNot(r => srow.getAs[Boolean](s"${r.id}__sluniq"))
         .map(r => lengthKey(r.id) -> r.len)
@@ -609,7 +632,8 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
       case TimestampType | TimestampNTZType | DateType =>
         Some(SummaryPlan(leaf, unix_micros(c.cast(TimestampType)),
           numeric = true, cnt,
-          ctx => SDateTime(instantStats(ctx.values))))
+          ctx => SDateTime(instantStats(ctx.values)),
+          dropsSample = _ => true))
       case StringType => planStringSummary(leaf, row, cnt, jsonDepth)
       case _ => None
     }
@@ -676,21 +700,25 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
             ctx => {
               val res = SStrRepr(SInt(ctx.values), pat)
               if (pat == "d") promoteSummaryEpoch(res) else res
-            }))
+            },
+            dropsSample = srow =>
+              pat == "d" && summaryInEpochRange(srow, id)))
         }
       }
       // float
       if (ok(row.getAs[Long](s"${id}__f")))
         return Some(SummaryPlan(leaf, c.try_cast(DoubleType),
           numeric = true, nonEmpty,
-          ctx => promoteSummaryEpoch(SStrRepr(SFloat(ctx.values), "f"))))
+          ctx => promoteSummaryEpoch(SStrRepr(SFloat(ctx.values), "f")),
+          dropsSample = summaryInEpochRange(_, id)))
       // datetimes
       sparkDateTimeFormats.zipWithIndex.foreach { case ((py, fmt), i) =>
         if (ok(row.getAs[Long](s"${id}__dt$i")))
           return Some(SummaryPlan(leaf,
             unix_micros(try_to_timestamp(c, lit(fmt))),
             numeric = true, nonEmpty,
-            ctx => SStrRepr(SDateTime(instantStats(ctx.values)), py)))
+            ctx => SStrRepr(SDateTime(instantStats(ctx.values)), py),
+            dropsSample = _ => true))
       }
     }
     // plain string: lengths + fixed-length CharClass pattern + URL
@@ -871,7 +899,8 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
         case Some(t) => t
         case None =>
           val items = ctx.df.select(explode(leaf.col).as("item"))
-          analyzeNested(items, et, ctx.jsonDepth)
+          analyzeNested(items, et, ctx.jsonDepth,
+            childLevel(ctx.level, path) + "[]")
       }
       SList(lengths, itemType)
     case MapType(kt, vt, _) =>
@@ -881,12 +910,14 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
       val keys = ctx.nestedItems.get(leaf.id + SlotKeys) match {
         case Some(t) => t
         case None => analyzeNested(ctx.df.select(explode(map_keys(c))
-          .as("item")), kt, ctx.jsonDepth)
+          .as("item")), kt, ctx.jsonDepth,
+          childLevel(ctx.level, path) + "{keys}")
       }
       val values = ctx.nestedItems.get(leaf.id + SlotVals) match {
         case Some(t) => t
         case None => analyzeNested(ctx.df.select(explode(map_values(c))
-          .as("item")), vt, ctx.jsonDepth)
+          .as("item")), vt, ctx.jsonDepth,
+          childLevel(ctx.level, path) + "{values}")
       }
       SDict(lengths, Vector(SDictField(keys, values)))
     case other =>
@@ -899,15 +930,15 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
 
   /** Analyze exploded array/map content as its own level. */
   private def analyzeNested(items: DataFrame, et: DataType,
-                            jsonDepth: Int): SType =
+                            jsonDepth: Int, level: String): SType =
     et match {
       case s: StructType =>
         analyzeLevel(items.select(s.fields.toVector.map(f =>
-          col("item").getField(f.name).as(f.name)): _*), jsonDepth)
+          col("item").getField(f.name).as(f.name)): _*), level, jsonDepth)
       case _ =>
         // scalars and deeper nesting: one level over the single "item"
         // column, unwrapped
-        analyzeLevel(items, jsonDepth) match {
+        analyzeLevel(items, level, jsonDepth) match {
           case d: SDict if d.content.length == 1 => d.content.head.value
           case other => other
         }
@@ -924,7 +955,7 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
     * and the per-slot totals from pass 1 keep null-fraction decisions
     * identical to the per-column explode they replace.
     */
-  private def analyzeNestedBatch(df: DataFrame,
+  private def analyzeNestedBatch(df: DataFrame, level: String,
       slots: Vector[(String, Column, DataType)],
       jsonDepth: Int): Map[String, SType] = {
     if (slots.isEmpty) return Map.empty
@@ -948,7 +979,8 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
         else concat(tagged: _*)).as("__e"))
       .select(col("__e.__src").as("__src") +:
         names.map(nm => col(s"__e.$nm").as(nm)): _*)
-    val dict = analyzeLevel(merged, jsonDepth, srcTagged = true)
+    val dict = analyzeLevel(merged, level + "[*]", jsonDepth,
+      srcTagged = true)
     val byName: Map[String, SType] = dict match {
       case d: SDict => d.content.map(f =>
         f.key.asInstanceOf[SField].value.toString -> f.value).toMap
@@ -1023,8 +1055,9 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
           .where(col("v").isNotNull && col("v") =!= "").as[String]
         val parsed = spark.read.json(strings)
         if (!parsed.columns.contains("_corrupt_record"))
-          return SStrRepr(analyzeLevel(parsed, ctx.jsonDepth + 1),
-            "json")
+          return SStrRepr(analyzeLevel(parsed,
+            childLevel(ctx.level, leaf.path) + "(json)",
+            ctx.jsonDepth + 1), "json")
       }
     }
 
@@ -1091,15 +1124,29 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
     functions.conv(stripped, base, 10).try_cast(LongType)
   }
 
+  /** Whether numbers from `min` to `max` read as epoch seconds in the
+    * configured window: the test [[promoteSummaryEpoch]] promotes on.
+    */
+  private def inEpochRange(min: Any, max: Any): Boolean =
+    config.minTimestamp <= SType.asDouble(min) &&
+      SType.asDouble(max) <= config.maxTimestamp
+
+  /** [[inEpochRange]] on a plan's summary-row min and max, as
+    * [[summaryStatsFromRow]] reads them.
+    */
+  private def summaryInEpochRange(srow: Row, id: String): Boolean = {
+    val mn = normalize(srow.get(srow.fieldIndex(s"${id}__smn")))
+    val mx = normalize(srow.get(srow.fieldIndex(s"${id}__smx")))
+    mn != null && mx != null && inEpochRange(mn, mx)
+  }
+
   /** Summary-mode epoch promotion (analyzer.py:742-770 over summary
     * stats instead of counters).
     */
   private def promoteSummaryEpoch(t: SType): SType = t match {
     case sr @ SStrRepr(content: SScalar, pat)
         if content.isInstanceOf[SInt] || content.isInstanceOf[SFloat] =>
-      val mn = SType.asDouble(content.values.min)
-      val mx = SType.asDouble(content.values.max)
-      if (config.minTimestamp <= mn && mx <= config.maxTimestamp) {
+      if (inEpochRange(content.values.min, content.values.max)) {
         def conv(v: Any): Any = SType.epochToInstant(
           SType.asDouble(v) * config.timestampScale +
             config.timestampOffset)

@@ -175,16 +175,19 @@ final class TreeAnalyzer(val config: AnalyzerConfig = AnalyzerConfig()) {
     val underKeys = path.lastOption.exists(p =>
       p == PDictKeys || p == PTupleIndices)
     if (items.isEmpty) return SEmpty
-    if (items.forall(_.isInstanceOf[VSources])) {
+    // one census pass: which container kinds occur among the items
+    var seen = 0
+    items.foreach(v => seen |= itemKind(v))
+    val only = (kind: Int) => seen == kind
+    if (only(ISources)) {
       val sizes = items.map(_.asInstanceOf[VSources].items.length)
       return SSourcesList(Stats.fromLengths(sizes), SEmpty, items)
     }
     // Tuples (deferred when they're the keys of a dict: field
     // threshold applies first — analyzer.py:569-575, 613-617)
-    if (!underKeys && items.forall(_.isInstanceOf[VTuple]))
+    if (!underKeys && only(ITuple))
       return tuplePattern(items)
-    if (items.forall(v => v.isInstanceOf[Seq[_]] &&
-        !v.isInstanceOf[VSources])) {
+    if (only(ISeq)) {
       // list-of-lists table heuristic (analyzer.py:576-589)
       val first = items.head.asInstanceOf[Seq[_]]
       if (items.length > first.length && first.nonEmpty &&
@@ -194,46 +197,46 @@ final class TreeAnalyzer(val config: AnalyzerConfig = AnalyzerConfig()) {
       val sizes = items.map(_.asInstanceOf[Seq[_]].length)
       return SList(Stats.fromLengths(sizes), SEmpty, items)
     }
-    if (items.forall(_.isInstanceOf[scala.collection.Map[_, _]])) {
+    if (only(IMap)) {
       val sizes = items.map(_.asInstanceOf[scala.collection.Map[_, _]].size)
       return SDict(Stats.fromLengths(sizes), Vector.empty, raw = items)
     }
     // Scalars (and hashable tuples): counter-based ladder. Mixed
     // dict/list content is the reference's Counter-TypeError path →
     // Value (analyzer.py:594-597); tuples are hashable and stay.
-    if (items.exists(v => v.isInstanceOf[scala.collection.Map[_, _]] ||
-        v.isInstanceOf[Seq[_]] || v.isInstanceOf[VSources]))
+    if ((seen & (IMap | ISeq | ISources)) != 0)
       return SValue(items)
     var sample = ValueCounter.from(items)
     if (underKeys) {
-      if (sample.distinct < threshold)
-        return SFields(sample.counts.map { case (k, c) =>
-          SField(k, c, optional = c < parentCard)
-        }.toSet)
-      else if (items.forall(_.isInstanceOf[VTuple]))
+      if (sample.distinct < threshold) {
+        val fields = Set.newBuilder[SField]
+        sample.foreachEntry((k, c) =>
+          fields += SField(k, c, optional = c < parentCard))
+        return SFields(fields.result())
+      } else if (only(ITuple))
         return tuplePattern(items)
     }
-    if (items.exists(_.isInstanceOf[VTuple]))
+    if ((seen & ITuple) != 0)
       return SValue(items) // tuples mixed with scalars
     // null discount (analyzer.py:618-621)
-    if (sample.counts.contains(null)) {
-      if (sample.counts(null).toDouble / items.length >
-          config.nullThreshold)
+    val nulls = sample.countOf(null)
+    if (nulls > 0) {
+      if (nulls.toDouble / items.length > config.nullThreshold)
         return SValue(items)
       sample = sample.remove(null)
     }
-    if (sample.counts.keys.forall(_.isInstanceOf[Boolean]))
+    // the key kinds the counter found while it sorted its keys
+    import ValueCounter.Kind
+    val keysWithin = (kinds: Int) => (sample.kinds & ~kinds) == 0
+    if (keysWithin(Kind.Bool))
       SBool(Stats.fromCounter(sample))
-    else if (sample.counts.keys.forall(v =>
-        v.isInstanceOf[Long] || v.isInstanceOf[Boolean]))
+    else if (keysWithin(Kind.Long | Kind.Wide | Kind.Bool))
       matchPossibleDateTime(SInt(Stats.fromCounter(sample)))
-    else if (sample.counts.keys.forall(v =>
-        v.isInstanceOf[Long] || v.isInstanceOf[Double] ||
-          v.isInstanceOf[Boolean]))
+    else if (keysWithin(Kind.Long | Kind.Wide | Kind.Double | Kind.Bool))
       matchPossibleDateTime(SFloat(Stats.fromCounter(sample)))
-    else if (sample.counts.keys.forall(_.isInstanceOf[Instant]))
+    else if (keysWithin(Kind.Instant))
       SDateTime(Stats.fromCounter(sample))
-    else if (sample.counts.keys.forall(_.isInstanceOf[String])) {
+    else if (keysWithin(Kind.String)) {
       val s = if (config.stripWhitespace)
         sample.mapKeys(v => v.asInstanceOf[String].trim) else sample
       matchStr(s)
@@ -254,14 +257,14 @@ final class TreeAnalyzer(val config: AnalyzerConfig = AnalyzerConfig()) {
   private[analyzer] def matchStr(items0: ValueCounter): SType = {
     var items = items0
     val total = items.total
-    if (items.counts.contains("")) {
-      if (items.counts("").toDouble / total > config.emptyThreshold)
+    val empty = items.countOf("")
+    if (empty > 0) {
+      if (empty.toDouble / total > config.emptyThreshold)
         return SStr.fromCounter(items)
       items = items.remove("")
     }
     val badThreshold = math.ceil(total * config.badThreshold).toLong
-    val lengths = items.counts.keys
-      .map(_.asInstanceOf[String].length).toVector
+    val lengths = items.keys.map(_.asInstanceOf[String].length)
     val maxLen = lengths.max
     val minLen = lengths.min
     if (maxLen <= config.maxNumericLen) {
@@ -272,7 +275,7 @@ final class TreeAnalyzer(val config: AnalyzerConfig = AnalyzerConfig()) {
     }
     if (minLen == maxLen)
       return matchFixedLenStr(items, badThreshold)
-    if (items.counts.keys.forall { v =>
+    if (items.keys.forall { v =>
       val s = v.asInstanceOf[String]
       s.startsWith("http://") || s.startsWith("https://")
     }) SURL.fromCounter(items)
@@ -326,7 +329,7 @@ final class TreeAnalyzer(val config: AnalyzerConfig = AnalyzerConfig()) {
           return SStrRepr(SDateTime(Stats.fromCounter(c)), pattern)
         }
     }
-    val strings = items.counts.keys.map(_.asInstanceOf[String]).toVector
+    val strings = items.keys.map(_.asInstanceOf[String])
     val width = strings.head.length
     import CharClass._
     // transpose over distinct values
@@ -542,6 +545,28 @@ object TreeAnalyzer {
   val BoolPatterns: Seq[String] =
     Seq("0|1", "f|t", "n|y", "false|true", "no|yes", "off|on", "|x")
   val IntPatterns: Seq[String] = Seq("o", "d", "x")
+
+  /** Item kinds for `matchItems`' census, one bit each. */
+  private final val ISources = 1
+  private final val ITuple = 2
+  private final val ISeq = 4
+  private final val IMap = 8
+  private final val IScalar = 16
+
+  /** Class tests come first: a failed test against a trait scans the
+    * value's class's whole list of interfaces, which for a Scala
+    * collection is long.
+    */
+  private def itemKind(v: Any): Int = v match {
+    case null | _: String | _: Long | _: Double | _: Boolean => IScalar
+    case _: scala.collection.immutable.AbstractSeq[_] => ISeq
+    case _: scala.collection.AbstractMap[_, _] => IMap
+    case _: VSources => ISources
+    case _: VTuple => ITuple
+    case _: Seq[_] => ISeq
+    case _: scala.collection.Map[_, _] => IMap
+    case _ => IScalar
+  }
 
   /** Extraction path steps (replaces the reference's overloaded
     * pattern-objects-as-path idiom, analyzer.py:472-554).

@@ -89,11 +89,18 @@ object Conversions {
     "%Y-%m-%dT%H:%M:%S.%f" -> "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
     "%Y-%m-%d %H:%M:%S.%f" -> "yyyy-MM-dd HH:mm:ss.SSSSSS")
 
-  private val formatterCache =
-    scala.collection.concurrent.TrieMap.empty[String, DateTimeFormatter]
+  /** A pattern's formatter and what it parses to, worked out once. */
+  private final case class DateTimeFormat(formatter: DateTimeFormatter,
+                                          withOffset: Boolean,
+                                          withTime: Boolean)
 
-  private def formatterFor(pattern: String): DateTimeFormatter =
-    formatterCache.getOrElseUpdate(pattern, {
+  private val formatCache =
+    scala.collection.concurrent.TrieMap.empty[String, DateTimeFormat]
+
+  private val hasTime = Set('H', 'M', 'S', 'f')
+
+  private def formatFor(pattern: String): DateTimeFormat =
+    formatCache.getOrElseUpdate(pattern, {
       val b = new DateTimeFormatterBuilder()
       var i = 0
       while (i < pattern.length) {
@@ -125,25 +132,25 @@ object Conversions {
       // STRICT: Python's strptime rejects impossible dates like
       // Feb 31; java.time's default SMART resolver silently adjusts
       // them to the month's last day
-      b.toFormatter(Locale.ENGLISH)
-        .withResolverStyle(java.time.format.ResolverStyle.STRICT)
+      DateTimeFormat(
+        b.toFormatter(Locale.ENGLISH)
+          .withResolverStyle(java.time.format.ResolverStyle.STRICT),
+        withOffset = pattern.contains("%z") || pattern.contains("%Z"),
+        withTime = pattern.sliding(2).exists(p =>
+          p.length == 2 && p(0) == '%' && hasTime(p(1))))
     })
-
-  private val hasTime = Set('H', 'M', 'S', 'f')
 
   /** Parse `s` with a strptime-style `pattern` → UTC Instant. Patterns
     * without an offset are interpreted as UTC (the reference keeps
     * naive datetimes; we normalize to Instant).
     */
   def parseDateTime(s: String, pattern: String): Option[Instant] = {
-    val fmt = formatterFor(pattern)
-    val withOffset = pattern.contains("%z") || pattern.contains("%Z")
-    val withTime = pattern.sliding(2).exists(p =>
-      p.length == 2 && p(0) == '%' && hasTime(p(1)))
+    val f = formatFor(pattern)
+    val fmt = f.formatter
     try {
-      if (withOffset)
+      if (f.withOffset)
         Some(OffsetDateTime.parse(s, fmt).toInstant)
-      else if (withTime)
+      else if (f.withTime)
         Some(LocalDateTime.parse(s, fmt).toInstant(ZoneOffset.UTC))
       else
         Some(LocalDate.parse(s, fmt).atStartOfDay
@@ -160,18 +167,20 @@ object Conversions {
   def tryConversion(sample: ValueCounter, convert: String => Option[Any],
                     badThreshold: Long): Option[ValueCounter] = {
     var budget = badThreshold
-    val out = scala.collection.mutable.HashMap.empty[Any, Long]
-    val it = sample.counts.iterator
-    while (it.hasNext) {
-      val (k, count) = it.next()
-      convert(k.asInstanceOf[String]) match {
-        case Some(v) => out.update(v, out.getOrElse(v, 0L) + count)
+    val out = ValueCounter.newBuilder(sample.distinct)
+    var converted = false
+    var i = 0
+    while (i < sample.distinct) {
+      val count = sample.countAt(i)
+      convert(sample.keyAt(i).asInstanceOf[String]) match {
+        case Some(v) => out.add(v, count); converted = true
         case None =>
           if (badThreshold == 0) return None
           budget -= count
           if (budget < 0) return None
       }
+      i += 1
     }
-    if (out.isEmpty) None else Some(ValueCounter(out.toMap))
+    if (converted) Some(out.result()) else None
   }
 }

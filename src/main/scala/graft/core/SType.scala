@@ -154,9 +154,13 @@ class SStr(val values: Stats, val lengths: Stats,
     case s: String =>
       ValueOrdering.compare(values.min, s) <= 0 &&
         ValueOrdering.compare(s, values.max) <= 0 &&
-        pattern.forall(p => s.zip(p).forall { case (c, cc) =>
-          cc.contains(c)
-        })
+        pattern.forall { p =>
+          // positions past the shorter of the two are not checked
+          val n = math.min(s.length, p.length)
+          var i = 0
+          while (i < n && p(i).contains(s.charAt(i))) i += 1
+          i == n
+        }
     case _ => false
   }
   override def equals(o: Any): Boolean = o match {
@@ -173,13 +177,8 @@ object SStr {
     new SStr(values, lengths, pattern)
   def fromCounter(sample: ValueCounter,
                   pattern: Option[Vector[CharClass]] = None): SStr = {
-    // iterate, don't Map-map: same-length values must SUM their
-    // counts (a Map built first collapses colliding length keys to
-    // the last value's count and the groupMapReduce sees only the
-    // survivor)
-    val lengths = ValueCounter(sample.counts.iterator.map {
-      case (k, c) => (k.asInstanceOf[String].length.toLong: Any) -> c
-    }.toSeq.groupMapReduce(_._1)(_._2)(_ + _))
+    // same-length values sum their counts
+    val lengths = sample.mapKeys(_.asInstanceOf[String].length.toLong)
     new SStr(Stats.fromCounter(sample), Stats.fromCounter(lengths), pattern)
   }
 }
@@ -763,9 +762,11 @@ object SType {
   private[graft] def rawOf(t: SType): Vector[Any] = t match {
     case s: SScalar =>
       s.values.sample match {
-        case Some(c) => c.counts.iterator.flatMap { case (v, n) =>
-          Iterator.fill(math.min(n, Int.MaxValue).toInt)(v)
-        }.toVector
+        case Some(c) =>
+          val out = Vector.newBuilder[Any]
+          c.foreachEntry((v, n) =>
+            out ++= Iterator.fill(math.min(n, Int.MaxValue).toInt)(v))
+          out.result()
         case None => Vector.empty
       }
     case r: SStrRepr => rawOf(r.content)

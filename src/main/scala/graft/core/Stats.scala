@@ -11,8 +11,9 @@ package graft.core
   * x[card-1]. `unique` is true iff the most common value has count 1
   * (types.py:93-95).
   *
-  * Stats is a monoid: merging re-derives everything from the summed
-  * counters (types.py:177-180), which makes partial-aggregate merges
+  * Stats is a monoid: merging sums the two counters (types.py:177-180),
+  * a linear merge of their ordered keys, and reads the order statistics
+  * off the sum in one scan. That makes partial-aggregate merges
   * order-insensitive — the property Spark's distributed aggregation
   * requires. When the exact sample has been dropped (scale mode), the
   * merge degrades gracefully: counts/min/max stay exact, quartiles are
@@ -64,27 +65,31 @@ final case class Stats(
 
 object Stats {
 
-  /** types.py:182-207 — walk sorted keys accumulating counts. */
+  /** types.py:182-207 — walk the counter's ordered keys accumulating
+    * counts: one scan, no sort.
+    */
   def fromCounter(sample: ValueCounter): Stats = {
     require(!sample.isEmpty, "Stats of empty sample")
-    val keys = sample.sortedKeys
+    val n = sample.distinct
     val card = sample.total
     val indexes = Array(0L, card / 4, card / 2, 3 * card / 4)
-    val summary = scala.collection.mutable.ArrayBuffer.empty[Any]
+    val summary = new Array[Any](4)
+    var got = 0
     var index = 0L
-    val it = keys.iterator
-    while (it.hasNext && summary.length < indexes.length) {
-      val key = it.next()
-      while (summary.length < indexes.length &&
-             index >= indexes(summary.length)) {
-        summary += key
+    var i = 0
+    while (i < n && got < 4) {
+      val key = sample.keyAt(i)
+      while (got < 4 && index >= indexes(got)) {
+        summary(got) = key
+        got += 1
       }
-      index += sample.counts(key)
+      index += sample.countAt(i)
+      i += 1
     }
-    while (summary.length < 4) summary += keys.last
-    val unique = sample.counts.valuesIterator.max == 1L
+    val last = sample.keyAt(n - 1)
+    while (got < 4) { summary(got) = last; got += 1 }
     Stats(Some(sample), card, summary(0), summary(1), summary(2),
-      summary(3), keys.last, unique)
+      summary(3), last, sample.topCount == 1L)
   }
 
   def fromValues(values: IterableOnce[Any]): Stats =

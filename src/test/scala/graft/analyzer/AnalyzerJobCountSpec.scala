@@ -55,17 +55,19 @@ class AnalyzerJobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(got == Map(
       // the record level: 10 columns (struct fields inline), 3 sizes
-      "graft: witness pass (8 columns)" -> 2,
-      "graft: exact counter batch (11 columns)" -> 2,
-      "graft: summary pass (1 over-cap columns)" -> 2,
-      "graft: top-K sample batch (1 over-cap columns)" -> 4,
+      "graft: witness pass at $ (8 columns)" -> 2,
+      "graft: exact counter batch at $ (11 columns)" -> 2,
+      "graft: summary pass at $ (1 over-cap columns)" -> 2,
+      "graft: top-K sample batch at $ (1 over-cap columns)" -> 4,
       // the tagged explode of xs items and m keys/values
-      "graft: witness pass (3 columns)" -> 2,
-      "graft: exact counter batch (3 columns)" -> 2,
+      "graft: witness pass at $[*] (3 columns)" -> 2,
+      "graft: exact counter batch at $[*] (3 columns)" -> 2,
       // the records of recs, then their tags items
-      "graft: witness pass (1 columns)" -> 4,
-      "graft: exact counter batch (2 columns)" -> 2,
-      "graft: exact counter batch (1 columns)" -> 2), s"\n$got")
+      "graft: witness pass at $.recs[] (1 columns)" -> 2,
+      "graft: exact counter batch at $.recs[] (2 columns)" -> 2,
+      "graft: witness pass at $.recs[][*] (1 columns)" -> 2,
+      "graft: exact counter batch at $.recs[][*] (1 columns)" -> 2),
+      s"\n$got")
   }
 
   test("analyzeIncremental launches the pinned jobs per label") {
@@ -75,12 +77,29 @@ class AnalyzerJobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
       analyzer.analyzeIncremental(prior, df.where("n >= 4"))
     }
     assert(got == Map(
-      "graft: witness pass (8 columns)" -> 2,
-      "graft: exact counter batch (11 columns)" -> 2,
-      "graft: witness pass (3 columns)" -> 2,
-      "graft: exact counter batch (3 columns)" -> 2,
-      "graft: witness pass (1 columns)" -> 4,
-      "graft: exact counter batch (2 columns)" -> 2,
-      "graft: exact counter batch (1 columns)" -> 2), s"\n$got")
+      "graft: witness pass at $ (8 columns)" -> 2,
+      "graft: exact counter batch at $ (11 columns)" -> 2,
+      "graft: witness pass at $[*] (3 columns)" -> 2,
+      "graft: exact counter batch at $[*] (3 columns)" -> 2,
+      "graft: witness pass at $.recs[] (1 columns)" -> 2,
+      "graft: exact counter batch at $.recs[] (2 columns)" -> 2,
+      "graft: witness pass at $.recs[][*] (1 columns)" -> 2,
+      "graft: exact counter batch at $.recs[][*] (1 columns)" -> 2),
+      s"\n$got")
+  }
+
+  test("an over-cap timestamp column tallies no top-K sample") {
+    // `ts` has 20 distinct values, each twice, over the cap of 16: its
+    // Stats are rebuilt as Instants without a sample, so pass 4 has
+    // nothing to show
+    val df = spark.range(40).selectExpr("id % 3 AS n",
+      "timestamp_seconds(1600000000 + (id % 20) * 60) AS ts")
+    val got = JobCounts.byLabel(spark, "graft-jobs-timestamp") {
+      analyzer.analyzeTable(df)
+    }
+    assert(got == Map(
+      "graft: witness pass at $ (2 columns)" -> 2,
+      "graft: exact counter batch at $ (1 columns)" -> 2,
+      "graft: summary pass at $ (1 over-cap columns)" -> 2), s"\n$got")
   }
 }
