@@ -1,7 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 object Bench {
+  /** One stderr line for a failure the run survives: the exception
+    * class and the first line of its message.
+    */
+  def reportFailure(what: String, e: Throwable): Unit =
+    System.err.println(s"$what failed: ${e.getClass.getName}: " +
+      Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+        .getOrElse(""))
+
   def main(args: Array[String]): Unit = {
     // wall budget for the WHOLE run (JVM start → compact line),
     // deadline-checked before each measured query: under co-tenant
@@ -17,48 +24,21 @@ object Bench {
     def elapsedS: Double = (System.nanoTime() - t0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the sf tables are single sub-MB parquet files; without a
-      // smaller split size every map-side stage (shingling, hashing,
-      // signatures) runs on ONE core of the 32. SCALE-ADAPTIVE
-      // rather than a constant: the previous 64 KB constant fanned
-      // the 17 MB corpus into hundreds of micro-tasks whose
-      // scheduling overhead made the 32-core run LOSE to the 8-core
-      // run under load (driver r14 scaling block, q47 ratio 0.15).
-      // Derive ~3 task waves per core from the input's listed bytes,
-      // clamped to [64 KB, 128 MB] — at production bytes the derived
-      // value saturates at Spark's 128 MB default, so the knob is
-      // local-regime-only by construction.
-      .config("spark.sql.files.maxPartitionBytes",
-        BenchSplit.size(sfDir, cpus).toString)
-      // AQE's coalescer floors post-shuffle partitions at 1 MB by
-      // default; on CPU-heavy small shuffles (shingle/md5/signature
-      // aggregations over the sub-MB sf tables) that collapses a
-      // 32-core box to 4-5 reduce tasks. A 64 KB floor keeps such
-      // stages at session width; at production scale shuffle
-      // partitions are far above either floor, so the knob is
-      // local-regime-only by construction.
-      .config("spark.sql.adaptive.coalescePartitions" +
-        ".minPartitionSize", "65536")
-      .getOrCreate()
+    val spark = BenchSplit.session(sfDir, cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the JVM/codegen and the parquet footer cache so the first
     // measured query doesn't absorb session startup
     try {
       spark.range(100000).selectExpr("sum(id)").collect()
       spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    } catch { case _: Throwable => }
+    } catch { case e: Throwable => reportFailure("warm-up", e) }
     // UNTIMED artifact pre-build: the purchase/cycle graphs, the five
     // rank/HITS traces, the serving index and the multi-source
     // fixture are per-process artifacts the incremental queries READ
     // — building them inside the first measured repeat both inflated
     // those queries and blew the driver's wall budget (r12 rc=124)
     try graft.queries.PipelineQueries.prebuild(spark, sfDir)
-    catch { case _: Throwable => }
+    catch { case e: Throwable => reportFailure("prebuild", e) }
     StateSweep(spark)
     // record machine load next to the numbers: past rounds' totals
     // moved ±70% purely with co-tenant load, so cross-round
@@ -81,7 +61,7 @@ object Bench {
         """"(q[0-9]+_[A-Za-z0-9_]*)":(-?[0-9.]+)""".r
           .findAllMatchIn(text)
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case _: Throwable => Map.empty }
+      } catch { case _: java.nio.file.NoSuchFileException => Map.empty }
     val ordered = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
       .sortBy { case (name, _) =>
@@ -100,7 +80,7 @@ object Bench {
             try {
               fn(spark, sfDir).count()
               (System.nanoTime() - s0) / 1e9
-            } catch { case _: Throwable => -1.0 }
+            } catch { case e: Throwable => reportFailure(name, e); -1.0 }
           }
           // adaptive repeats, sized to the driver's wall budget: a
           // query whose first run already costs >= 5 s runs ONCE
@@ -175,7 +155,7 @@ object Bench {
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outName),
         (line + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => }
+    } catch { case e: Throwable => reportFailure(s"writing $outName", e) }
     // stdout gets EXACTLY ONE line: the compact variant, sized to sit
     // whole inside the driver's ~2000-char tail next to sbt's
     // [success] epilogue (~71 chars). Budget arithmetic: short names

@@ -625,10 +625,12 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
           ctx => SBool(ctx.values)))
       case _: IntegerType | _: LongType | _: ShortType | _: ByteType =>
         Some(SummaryPlan(leaf, c, numeric = true, cnt,
-          ctx => tree.matchPossibleDateTime(SInt(ctx.values))))
+          ctx => tree.matchPossibleDateTime(SInt(ctx.values)),
+          dropsSample = summaryInEpochRange(_, id)))
       case DoubleType | FloatType | _: DecimalType =>
         Some(SummaryPlan(leaf, c.cast(DoubleType), numeric = true, cnt,
-          ctx => tree.matchPossibleDateTime(SFloat(ctx.values))))
+          ctx => tree.matchPossibleDateTime(SFloat(ctx.values)),
+          dropsSample = summaryInEpochRange(_, id)))
       case TimestampType | TimestampNTZType | DateType =>
         Some(SummaryPlan(leaf, unix_micros(c.cast(TimestampType)),
           numeric = true, cnt,
@@ -868,7 +870,7 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
         else {
           val classes = srow.getSeq[String](idx).toVector.map(ch =>
             Chars(ch.toSet): CharClass)
-          Some(generalizePattern(classes))
+          Some(CharClass.generalize(classes))
         }
       }
     p.build(SummaryCtx(values, lengths, pattern))
@@ -1084,39 +1086,6 @@ final class SparkAnalyzer(val config: AnalyzerConfig = AnalyzerConfig(),
       case StringType => tree.matchStr(counter)
       case _ => SValue(Vector.empty)
     }
-
-  /** Same digit-base promotion + identifier generalization as the
-    * in-memory miner (analyzer.py:686-718).
-    */
-  private def generalizePattern(positions: Vector[CharClass])
-      : Vector[CharClass] = {
-    import CharClass._
-    var base = 0
-    val marked: Vector[Either[Unit, CharClass]] = positions.map { cc =>
-      if (cc.size > 1 && cc.subsetOf(hexDigit)) {
-        if (cc.subsetOf(octDigit)) base = math.max(base, 8)
-        else if (cc.subsetOf(decDigit)) base = math.max(base, 10)
-        else base = math.max(base, 16)
-        Left(())
-      } else Right(cc)
-    }
-    val digitClass = base match {
-      case 8 => Some(octDigit); case 10 => Some(decDigit)
-      case 16 => Some(hexDigit); case _ => None
-    }
-    val pattern0 = marked.map {
-      case Left(_) => digitClass.get
-      case Right(cc) => cc
-    }
-    val digits = Set(octDigit, decDigit, hexDigit)
-    if (pattern0.head.subsetOf(identFirst) &&
-        pattern0.tail.forall(_.subsetOf(identChar)))
-      (if (pattern0.head.size == 1) pattern0.head else identFirst) +:
-        pattern0.tail.map(c =>
-          if (c.size == 1 || digits(c)) c else identChar)
-    else pattern0.map(c =>
-      if (c.size == 1 || digits(c)) c else (AnyChar: CharClass))
-  }
 
   /** Base-8/16 string → long via conv() (handles 0x/0o prefixes). */
   private def conv10(c: Column, base: Int): Column = {

@@ -330,39 +330,8 @@ final class TreeAnalyzer(val config: AnalyzerConfig = AnalyzerConfig()) {
         }
     }
     val strings = items.keys.map(_.asInstanceOf[String])
-    val width = strings.head.length
-    import CharClass._
-    // transpose over distinct values
-    val positions: Vector[CharClass] = (0 until width).toVector.map {
-      i => Chars(strings.map(_.charAt(i)).toSet): CharClass
-    }
-    var base = 0
-    val marked: Vector[Either[Unit, CharClass]] = positions.map { cc =>
-      if (cc.size > 1 && cc.subsetOf(hexDigit)) {
-        if (cc.subsetOf(octDigit)) base = math.max(base, 8)
-        else if (cc.subsetOf(decDigit)) base = math.max(base, 10)
-        else base = math.max(base, 16)
-        Left(())
-      } else Right(cc)
-    }
-    val digitClass = base match {
-      case 8 => Some(octDigit); case 10 => Some(decDigit)
-      case 16 => Some(hexDigit); case _ => None
-    }
-    val pattern0: Vector[CharClass] = marked.map {
-      case Left(_) => digitClass.get
-      case Right(cc) => cc
-    }
-    val digits = Set(octDigit, decDigit, hexDigit)
-    val pattern =
-      if (pattern0.head.subsetOf(identFirst) &&
-          pattern0.tail.forall(_.subsetOf(identChar))) {
-        (if (pattern0.head.size == 1) pattern0.head else identFirst) +:
-          pattern0.tail.map(c =>
-            if (c.size == 1 || digits(c)) c else identChar)
-      } else pattern0.map(c =>
-        if (c.size == 1 || digits(c)) c else (AnyChar: CharClass))
-    SStr.fromCounter(items, Some(pattern))
+    val positions = CharClass.positions(strings, strings.head.length)
+    SStr.fromCounter(items, Some(CharClass.generalize(positions)))
   }
 
   /** analyzer.py:742-770 — numeric plausible-epoch heuristic. With
@@ -388,10 +357,13 @@ final class TreeAnalyzer(val config: AnalyzerConfig = AnalyzerConfig()) {
       def conv(v: Any): Any = SType.epochToInstant(
         SType.asDouble(v) * scale + config.timestampOffset)
       val dtStats = num.values.sample match {
-        case Some(c) => Stats.fromCounter(c.mapKeys(conv))
-        case None =>
-          // summary mode (no counter): epoch conversion is monotonic,
-          // so positional quartiles map through directly
+        case Some(c) if !num.values.sampleIsPartial =>
+          Stats.fromCounter(c.mapKeys(conv))
+        case _ =>
+          // summary mode (no counter, or only a top-K sample, which
+          // must not stand in for the counter): epoch conversion is
+          // monotonic, so positional quartiles map through directly
+          // and the sample is dropped
           val s = num.values
           Stats.summary(s.card, conv(s.min), conv(s.q1), conv(s.q2),
             conv(s.q3), conv(s.max), s.unique)

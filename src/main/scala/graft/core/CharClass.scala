@@ -73,4 +73,52 @@ object CharClass {
   private[core] val named: Map[CharClass, String] = Map(
     octDigit -> "o", decDigit -> "d", hexDigit -> "x",
     identFirst -> "I", identChar -> "i")
+
+  /** The class of each position of `width`-long strings, in one pass
+    * over the strings.
+    */
+  def positions(strings: Iterable[String], width: Int): Vector[CharClass] = {
+    val seen = Array.fill(width)(new scala.collection.mutable.BitSet)
+    strings.foreach { s =>
+      var i = 0
+      while (i < width) { seen(i) += s.charAt(i); i += 1 }
+    }
+    seen.iterator.map(b => Chars(b.iterator.map(_.toChar).toSet): CharClass)
+      .toVector
+  }
+
+  /** analyzer.py:686-718 — digit-base promotion (every multi-char
+    * digit position takes the widest base seen: octal, decimal, hex),
+    * then identifier generalization: a pattern that reads as an
+    * identifier widens its other multi-char positions to
+    * `identFirst`/`identChar`, any other pattern widens them to
+    * [[AnyChar]].
+    */
+  def generalize(positions: Vector[CharClass]): Vector[CharClass] = {
+    var base = 0
+    val marked: Vector[Either[Unit, CharClass]] = positions.map { cc =>
+      if (cc.size > 1 && cc.subsetOf(hexDigit)) {
+        if (cc.subsetOf(octDigit)) base = math.max(base, 8)
+        else if (cc.subsetOf(decDigit)) base = math.max(base, 10)
+        else base = math.max(base, 16)
+        Left(())
+      } else Right(cc)
+    }
+    val digitClass = base match {
+      case 8 => Some(octDigit); case 10 => Some(decDigit)
+      case 16 => Some(hexDigit); case _ => None
+    }
+    val pattern0 = marked.map {
+      case Left(_) => digitClass.get
+      case Right(cc) => cc
+    }
+    val digits = Set(octDigit, decDigit, hexDigit)
+    if (pattern0.head.subsetOf(identFirst) &&
+        pattern0.tail.forall(_.subsetOf(identChar)))
+      (if (pattern0.head.size == 1) pattern0.head else identFirst) +:
+        pattern0.tail.map(c =>
+          if (c.size == 1 || digits(c)) c else identChar)
+    else pattern0.map(c =>
+      if (c.size == 1 || digits(c)) c else (AnyChar: CharClass))
+  }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.analyzer.SparkAnalyzer
 import graft.core.{SSourcesList, SType, Stats, ValueCounter}
 
@@ -22,14 +20,8 @@ object AnalyzeDist {
   def main(args: Array[String]): Unit = {
     val opts = Cli.parse(args.toSeq)
     if (opts.files.isEmpty) { System.err.println(Cli.usage); sys.exit(2) }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = graft.LocalSession(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // reference UX: a progress bar on big inputs (tqdm on a TTY,
     // ui/cli.py:237-266) — here a SparkListener-driven stderr line

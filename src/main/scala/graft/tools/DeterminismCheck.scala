@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Partition-count invariance sweep: every registered query runs
@@ -17,13 +16,7 @@ import org.apache.spark.sql.functions.col
 object DeterminismCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.LocalSession(8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val parts = Seq("32", "5")
     var failed = 0

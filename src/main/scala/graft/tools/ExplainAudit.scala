@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit: prints the formatted plan for representative
   * queries and greps for the scale-critical properties — parquet
   * filter/column pushdown, broadcast joins for small sides, partial
@@ -12,13 +10,7 @@ import org.apache.spark.sql.SparkSession
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.LocalSession(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val checks: Seq[(String, String, Seq[String])] = Seq(

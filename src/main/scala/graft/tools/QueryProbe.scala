@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+
+import graft.Bench.reportFailure
 
 /** Per-query measurement harness for the optimization rounds (guide
   * §1: measure first, label jobs, read the plan). For each named
@@ -27,24 +28,12 @@ object QueryProbe {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, names) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // scale-adaptive split size — keep identical to Bench so probe
-      // numbers stay comparable
-      .config("spark.sql.files.maxPartitionBytes",
-        graft.BenchSplit.size(sfDir, cpus).toString)
-      .config("spark.sql.adaptive.coalescePartitions" +
-        ".minPartitionSize", "65536")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.BenchSplit.session(sfDir, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     try graft.queries.PipelineQueries.prebuild(spark, sfDir)
-    catch { case e: Throwable =>
-      System.err.println(s"prebuild failed: ${e.getMessage}") }
+    catch { case e: Throwable => reportFailure("prebuild", e) }
     graft.StateSweep(spark)
 
     val stages = new ConcurrentLinkedQueue[StageRow]()
@@ -89,8 +78,7 @@ object QueryProbe {
         Files.writeString(Paths.get(outDir, s"$name.txt"),
           df.queryExecution.explainString(
             org.apache.spark.sql.execution.FormattedMode))
-      } catch { case e: Throwable =>
-        System.err.println(s"$name explain failed: ${e.getMessage}") }
+      } catch { case e: Throwable => reportFailure(s"$name explain", e) }
       graft.StateSweep(spark)
       // timed noop run with listener
       stages.clear(); jobs.clear(); jobStart.clear()
@@ -99,8 +87,7 @@ object QueryProbe {
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop")
         .mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"$name noop failed: ${e.getMessage}") }
+      catch { case e: Throwable => reportFailure(s"$name noop", e) }
       val noopS = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.setJobDescription(null)
       // let listener-bus events drain before snapshotting
@@ -109,7 +96,7 @@ object QueryProbe {
       graft.StateSweep(spark)
       val t1 = System.nanoTime()
       try fn(spark, sfDir).count()
-      catch { case _: Throwable => }
+      catch { case e: Throwable => reportFailure(s"$name count", e) }
       val countS = (System.nanoTime() - t1) / 1e9
       graft.StateSweep(spark)
       import scala.jdk.CollectionConverters._

@@ -1,30 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 /** SQL function registration via SparkSessionExtensions: every
   * registered name resolves in spark.sql, produces the SAME result
   * as the Column API (same Catalyst expression underneath), and the
   * literal-parameter guard rejects non-literal sizing args.
   */
-class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class GraftExtensionsSpec extends SparkSuite {
+  override protected def session =
+    LocalSession(4).withExtensions(new GraftExtensions)
 
   test("every registered function resolves in SQL") {
     val s = spark

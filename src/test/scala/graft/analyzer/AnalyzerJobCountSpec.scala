@@ -1,10 +1,8 @@
 package graft.analyzer
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 
-import graft.JobCounts
+import graft.{JobCounts, LocalSession, SparkSuite}
 
 /** The distributed analyzer's Spark jobs, pinned per job label on one
   * small fixed fixture: scalar columns of every counter type, a
@@ -13,21 +11,9 @@ import graft.JobCounts
   * pass, splits a batch or moves work between passes shows up here
   * as a changed table.
   */
-class AnalyzerJobCountSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class AnalyzerJobCountSpec extends SparkSuite {
+  override protected def session = LocalSession(2)
+    .config("spark.sql.shuffle.partitions", "4")
 
   /** `word` has 20 distinct values, over the cap of 16; every other
     * column and every length is under it.

@@ -1,11 +1,10 @@
 package graft.analyzer
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
+import graft.SparkSuite
 
 /** Incremental analysis: `analyzeIncremental(analyzeTable(a), b)`
   * against `analyzeTable(a union b)` — the delta-ingest contract.
@@ -15,22 +14,7 @@ import graft.core._
   * card/min/max, big-side quartiles) and the fixtures pin the cases
   * where that convention is still whole-corpus-exact.
   */
-class IncrementalAnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class IncrementalAnalyzeSpec extends SparkSuite {
   /** Mixed-type fixture: int, float, bool, plain strings, a nullable
     * column, and a JSON-string column (exercises the recursive
     * parse), all well under the distinct cap.

@@ -3,9 +3,8 @@ package graft.analyzer
 import scala.io.Source
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.{LocalSession, SparkSuite}
 import graft.core._
 
 /** Exact text of the distributed analyzer's trees on nested and
@@ -16,16 +15,11 @@ import graft.core._
   * arrays of records, over-cap lengths with and without a top-K
   * sample), timestamps, and the corrupt-JSON fallback plan.
   */
-class SparkAnalyzerGoldenSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SparkAnalyzerGoldenSpec extends SparkSuite {
   import SparkAnalyzerGoldenSpec._
 
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = session()
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override protected def session = LocalSession(2)
+    .config("spark.sql.shuffle.partitions", "4")
 
   private def resource(name: String): String = {
     val in = getClass.getResourceAsStream(s"/golden/spark_analyzer/$name")
@@ -58,17 +52,6 @@ object SparkAnalyzerGoldenSpec {
 
   val options: RenderOptions = RenderOptions(showCount = true,
     showLengths = true, showSamples = true, showRange = 3)
-
-  def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
 
   /** The fixture frames, built from SQL expressions over `range`. */
   def fixture(spark: SparkSession, name: String): DataFrame = name match {

@@ -1,32 +1,13 @@
 package graft.analyzer
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
-
-import graft.JobCounts
+import graft.{JobCounts, SparkSuite}
 import graft.core._
 
 /** Cross-validation: the distributed analyzer must agree with the
   * reference-faithful in-memory analyzer on identical data (rendered
   * per-column types compared; stats carried by the render strings).
   */
-class SparkAnalyzerSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class SparkAnalyzerSpec extends SparkSuite {
   private def columnTypes(t: SType): Map[String, String] = t match {
     case l: SList => l.content match {
       case d: SDict => d.content.map(f =>
@@ -127,6 +108,32 @@ class SparkAnalyzerSpec extends AnyFunSuite with BeforeAndAfterAll {
       .analyzeTable(df)
     assert(!graft.core.Render.configured(off,
       graft.core.RenderOptions(showSamples = true)).contains("samples="))
+  }
+
+  test("an over-cap epoch column's stats never come from its top-K " +
+      "sample") {
+    // 20 distinct epoch seconds, two rows each: over a cap of 4
+    val df = spark.range(40)
+      .selectExpr("1600000000 + (id % 20) * 60 AS t")
+    def epochStats(topK: Int): Stats =
+      new SparkAnalyzer(exactDistinctCap = 4, sampleTopK = topK)
+        .analyzeTable(df) match {
+        case l: SList => l.content match {
+          case d: SDict => d.content.head.value match {
+            case SNumRepr(SDateTime(s), _, _, _) => s
+            case other => fail(s"not an epoch: ${other.render}")
+          }
+          case other => fail(s"not a record: ${other.render}")
+        }
+        case other => fail(s"not a table: ${other.render}")
+      }
+    val (top2, top0) = (epochStats(2), epochStats(0))
+    assert(top0.card == 40)
+    assert(top2.card == top0.card)
+    assert(Seq(top2.q1, top2.q2, top2.q3, top2.max) ==
+      Seq(top0.q1, top0.q2, top0.q3, top0.max))
+    assert(top2.max == java.time.Instant.ofEpochSecond(1600001140L))
+    assert(top2.sample.isEmpty)
   }
 
   test("counter byte budget demotes oversized columns to summary") {

@@ -1,28 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.{LocalSession, SparkSuite}
 
 /** Real-bytes audio header decode: hand-assembled WAV / FLAC / MP3 /
   * OGG headers per the public specs, plus corrupt/truncated payloads
   * that must degrade to nulls, never throw.
   */
-class AudioMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class AudioMetaSpec extends SparkSuite {
+  override protected def session = LocalSession(2)
 
   private def b(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
 

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.{LocalSession, SparkSuite}
 
 /** Audio content features over real decoded PCM: analytically known
   * fingerprints/stats, the channel-0 and chunk-walk conventions,
@@ -11,20 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * truncated data, too short), the banded near-dup join on
   * fingerprints, and a never-throw fuzz sweep.
   */
-class AudioPcmSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class AudioPcmSpec extends SparkSuite {
+  override protected def session = LocalSession(2)
 
   /** Hand-assembled PCM WAV: interleaved channel samples, optional
     * junk chunk before fmt (exercises the walk), optional format

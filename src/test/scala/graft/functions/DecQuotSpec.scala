@@ -1,31 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** DecQuotExpr == the legacy `(a - pmod(a, b)) / b` floor-division
   * spelling on its whole contract: non-negative operands (compact
   * longs AND past-long 38-digit decimals), zero divisor → null, and
   * a negative operand raises instead of silently truncating.
   */
-class DecQuotSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit =
-    if (spark != null) spark.stop()
-
+class DecQuotSpec extends SparkSuite {
   private val Dec = "decimal(38,0)"
 
   test("matches the legacy spelling on non-negative decimals") {

@@ -1,29 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.{LocalSession, SparkSuite}
 
 /** EXIF extraction + redaction over hand-assembled JPEG/TIFF bytes
   * (both endiannesses), per the public TIFF 6.0 / EXIF layouts:
   * tag extraction, GPS-pointer presence, strip-and-reparse, byte
   * fidelity of non-Exif segments, and a never-throw fuzz sweep.
   */
-class ExifSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ExifSpec extends SparkSuite {
+  override protected def session = LocalSession(2)
 
   private def b(xs: Int*): Array[Byte] = xs.map(_.toByte).toArray
 

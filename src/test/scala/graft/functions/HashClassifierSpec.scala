@@ -1,29 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Feature-hashing classifier: the folded score equals a single-node
   * reimplementation token by token, is insensitive to surrounding
   * whitespace, and stays a projection (no exchange in the plan).
   */
-class HashClassifierSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class HashClassifierSpec extends SparkSuite {
   private def refWeight(tok: String, buckets: Long): Long = {
     val d = java.security.MessageDigest.getInstance("MD5")
     val hex = d.digest(tok.getBytes("UTF-8")).take(4)

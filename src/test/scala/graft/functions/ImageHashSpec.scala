@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.{LocalSession, SparkSuite}
 
 /** Perceptual hashes over real decoded BMP pixels: analytically
   * known dHash/aHash values, downsample exactness (2×2 block image
@@ -12,20 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * banded near-dup join's pigeonhole completeness, and a never-throw
   * fuzz sweep.
   */
-class ImageHashSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class ImageHashSpec extends SparkSuite {
+  override protected def session = LocalSession(2)
 
   /** Hand-assembled uncompressed BMP (BITMAPINFOHEADER) with
     * R=G=B=luma(x,y) — the decoder's (299R+587G+114B)/1000 then

@@ -2,34 +2,19 @@ package graft.functions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Native NFC normalization: the canonical composition cases, the
   * already-normalized fast path (must return the SAME UTF8String),
   * null flow through codegen, and a fuzz sweep against
   * java.text.Normalizer directly on arbitrary codepoint soup.
   */
-class NfcNormalizeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class NfcNormalizeSpec extends SparkSuite {
   test("composes decomposed sequences, preserves NFC input") {
     // e + combining acute → é; A + ring → Å; plain ASCII untouched
     assert(NfcNormalizeExpr.compute(

@@ -1,29 +1,17 @@
 package graft.functions
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.{LocalSession, SparkSuite}
 
 /** Composite Gopher/C4 quality filter: each rule trips on a document
   * engineered to fail exactly that rule (all others passing), the
   * verdict is the conjunction, and the whole struct evaluates in one
   * projection.
   */
-class QualityFlagsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class QualityFlagsSpec extends SparkSuite {
+  override protected def session = LocalSession(2)
 
   /** A clean passing document: >= 50 varied words of sane length,
     * stopwords present, no repetition/symbols/bullets/policy text.

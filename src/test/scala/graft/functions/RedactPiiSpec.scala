@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** The fused native redaction ([[RedactPiiExpr]]) is byte-identical
   * to the nested `regexp_replace` fold ([[TextFunctions
@@ -13,22 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * starting before an earlier-priority match must not swallow its
   * prefix).
   */
-class RedactPiiSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit =
-    if (spark != null) spark.stop()
-
+class RedactPiiSpec extends SparkSuite {
   private val cases = Seq(
     "",
     "no pii at all",

@@ -1,32 +1,17 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Sketches
+import graft.SparkSuite
 
 /** SpaceSaving heavy-hitters sketch: exact in the no-eviction regime,
   * guarantee-bounded under eviction, deterministic under
   * repartitioning (the merge path), and correct through
   * serialize/deserialize (exercised by any distributed run).
   */
-class SpaceSavingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class SpaceSavingSpec extends SparkSuite {
   /** Zipf-ish stream over `vocab` item labels: item i appears
     * proportionally more the smaller i is, shuffled deterministically.
     */

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.{LocalSession, SparkSuite}
 
 /** Frame hashes over real decoded AVI payloads: analytically known
   * per-frame dHashes, agreement with the BMP image hasher on
@@ -11,20 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * non-frame chunk skipping, refusal paths, and a never-throw fuzz
   * sweep.
   */
-class VideoFramesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class VideoFramesSpec extends SparkSuite {
+  override protected def session = LocalSession(2)
 
   /** Hand-assembled uncompressed AVI: grayscale frames (B=G=R=luma,
     * so the decoded luma equals the input grid exactly), standard

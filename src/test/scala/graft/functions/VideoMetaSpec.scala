@@ -1,28 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.{LocalSession, SparkSuite}
 
 /** Real-bytes video container decode: hand-assembled ISO BMFF boxes
   * per ISO 14496-12 (ftyp → moov → mvhd/trak/tkhd), the EBML magic
   * for Matroska, and corrupt payloads that must degrade to nulls.
   */
-class VideoMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class VideoMetaSpec extends SparkSuite {
+  override protected def session = LocalSession(2)
 
   private def u32(v: Long): Seq[Int] = Seq(
     (v >> 24).toInt & 0xff, (v >> 16).toInt & 0xff,

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** BPE trainer: lockstep with an independent single-node reference
   * implementation (canonical Sennrich-style: word-frequency table,
@@ -11,21 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (cnt desc, lhs, rhs) tie-break), across partitionings and on
   * adversarial symbol runs.
   */
-class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class BpeSpec extends SparkSuite {
   // ---- single-node reference -------------------------------------
 
   private def refChars(w: String): List[String] =

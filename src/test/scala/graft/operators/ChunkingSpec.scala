@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Token-window chunking (q123). Pins: exact chunk boundaries and
   * text on a hand-built document; the overlap stitching law
@@ -11,21 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * ones); the census coverage/stitching gates; the single-token
   * and shorter-than-chunk edge cases; and parameter validation.
   */
-class ChunkingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class ChunkingSpec extends SparkSuite {
   private def docs(rows: (Long, String)*): DataFrame = {
     val s = spark
     import s.implicits._

@@ -1,31 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** CDC latest-record compaction: the max(struct) aggregate must pick
   * exactly the row_number-window winner (including tied timestamps),
   * keep the input schema, and plan as ONE aggregation with a partial
   * phase — no window, no per-key sort.
   */
-class CompactLatestSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class CompactLatestSpec extends SparkSuite {
   private def changelog = {
     val s = spark
     import s.implicits._

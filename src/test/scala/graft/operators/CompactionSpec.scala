@@ -1,36 +1,26 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.{LocalSession, SparkSuite}
 
 /** Small-file compaction: the file-count/byte envelope matches the
   * report, query results are unchanged, a sort contract survives
   * compaction (disjoint per-file ranges), and a compacted bucketed
   * table still joins with zero exchanges at one file per bucket.
   */
-class CompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CompactionSpec extends SparkSuite {
+  private val base = java.nio.file.Files.createTempDirectory("graft_compact")
 
-  private var spark: SparkSession = _
-  private var base: java.nio.file.Path = _
-
-  override def beforeAll(): Unit = {
-    base = java.nio.file.Files.createTempDirectory("graft_compact")
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", s"$base/warehouse")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
+  override protected def session = LocalSession(4)
+    .config("spark.sql.warehouse.dir", s"$base/warehouse")
+    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
+    super.afterAll()
     import scala.jdk.CollectionConverters._
-    if (base != null)
-      java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
+      .foreach(p => java.nio.file.Files.deleteIfExists(p))
   }
 
   private def parquetFiles(dir: String): Seq[java.io.File] =

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** The Bloom-prescreened decontamination path must produce EXACTLY
   * the broadcast-exact path's output (no false negatives + exact
@@ -11,22 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * where almost everything survives the prescreen and the confirm
   * join does all the work.
   */
-class ContaminationBloomSpec extends AnyFunSuite
-    with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class ContaminationBloomSpec extends SparkSuite {
   private def fixture: (DataFrame, DataFrame) = {
     val s = spark
     import s.implicits._

@@ -1,28 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Count-Min sketch: never undercounts, overcount bounded by the
   * sketch-width law, absent items estimate 0 on empty buckets,
   * estimates are partitioning-invariant, and tables merge by plain
   * addition (shards/days combine exactly).
   */
-class CountMinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class CountMinSpec extends SparkSuite {
   private val W = 64
   private val D = 4
 

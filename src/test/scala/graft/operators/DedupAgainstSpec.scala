@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Incremental (delta) deduplication: a new batch against an
   * existing corpus. Pins the cluster verdicts (any corpus member
@@ -12,21 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sub-shingle short documents, and the empty-corpus equivalence to
   * plain deduplicate.
   */
-class DedupAgainstSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class DedupAgainstSpec extends SparkSuite {
   private def docs(rows: (Long, String)*): DataFrame = {
     val s = spark
     import s.implicits._

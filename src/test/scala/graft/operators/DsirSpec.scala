@@ -1,29 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** DSIR hashed importance weights: feature extraction (unigrams +
   * bigrams), the whole-bit log-ratio algebra on hand-built corpora,
   * and the target-like/raw-like sign behavior.
   */
-class DsirSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class DsirSpec extends SparkSuite {
   test("feature rows: unigrams plus bigrams, singletons get no bigram, empties drop") {
     val s = spark
     import s.implicits._

@@ -1,33 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Property layer for blocked linkage: on random record sets, the
   * operator's pairs equal a naive brute-force model of the declared
   * semantics (same block + under cap + edit distance cut), and the
   * census totals always reconcile.
   */
-class EntityResolutionPropertiesSpec extends AnyFunSuite
-    with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class EntityResolutionPropertiesSpec extends SparkSuite {
   private def lev(a: String, b: String): Int = {
     val d = Array.tabulate(a.length + 1, b.length + 1) { (i, j) =>
       if (i == 0) j else if (j == 0) i else 0

@@ -1,30 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Equi-depth binning via GK-sketch boundaries: buckets are ordered
   * by value, populations stay within tolerance of n/b on a
   * continuous distribution, assignment is total (every row lands in
   * exactly one bucket), and the census gate reads true.
   */
-class EquiDepthSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class EquiDepthSpec extends SparkSuite {
   private def fixture = {
     val s = spark
     import s.implicits._

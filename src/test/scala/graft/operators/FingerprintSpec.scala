@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TextFunctions
+import graft.SparkSuite
 
 /** Winnowing (MOSS) fingerprints: the expression is pinned against a
   * plain-Scala reference implementation of the same recurrence, the
@@ -13,22 +12,7 @@ import graft.functions.TextFunctions
   * shared fingerprint) is exercised, and the pair join's threshold and
   * hot-bucket guard are tripped on controlled fixtures.
   */
-class FingerprintSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class FingerprintSpec extends SparkSuite {
   private def docs(rows: (Long, String)*): DataFrame = {
     val s = spark
     import s.implicits._

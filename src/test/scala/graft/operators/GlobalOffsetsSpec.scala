@@ -1,29 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Distributed prefix-sum offsets: the two-pass scan equals the
   * single-node exclusive cumsum for every row, and the answer is
   * invariant to the partition count (boundaries cancel out).
   */
-class GlobalOffsetsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class GlobalOffsetsSpec extends SparkSuite {
   // irregular lengths, ids deliberately out of insertion order
   private val rows: Seq[(Long, Long)] =
     Seq(7L -> 13L, 1L -> 5L, 12L -> 1L, 3L -> 40L, 9L -> 0L,

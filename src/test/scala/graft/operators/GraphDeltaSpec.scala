@@ -1,39 +1,25 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+
+import graft.SparkSuite
 
 /** The round-11 graph additions: pagerankDelta == the full re-run
   * bit-for-bit (random symmetrized fixtures + a frontier smaller
   * than the graph), the reliable-checkpoint knob changes NOTHING but
   * durability, and the degree-skew pre-flight trips on a star.
   */
-class GraphDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-  private var ckptDir: java.nio.file.Path = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt_")
-  }
+class GraphDeltaSpec extends SparkSuite {
+  private val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt_")
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
-    if (ckptDir != null) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(ckptDir).iterator().asScala.toSeq
-        .reverse.foreach(p =>
-          try java.nio.file.Files.deleteIfExists(p)
-          catch { case _: Throwable => () })
-    }
+    super.afterAll()
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(ckptDir).iterator().asScala.toSeq
+      .reverse.foreach(p =>
+        try java.nio.file.Files.deleteIfExists(p)
+        catch { case _: Throwable => () })
   }
 
   private def sym(es: Seq[(String, String)]): DataFrame = {

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Property layer for the graph operators: the distributed
   * iterations must equal a single-node BigInt reference that
@@ -12,21 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * disconnected pieces, seeded and unseeded), not just the
   * hand-computed fixtures.
   */
-class GraphPropertiesSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class GraphPropertiesSpec extends SparkSuite {
   // ---- single-node references (documented rules, literally) ------
 
   private def refPagerank(edges: Seq[(String, String, Long)],

@@ -1,29 +1,15 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+
+import graft.SparkSuite
 
 /** Exact scaled-integer PageRank/TrustRank: hand-computed fixtures
   * (every floor division worked on paper), mass conservation, the
   * cycle fixed point, seeded reachability, and the degree census.
   */
-class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class GraphSpec extends SparkSuite {
   private def edges(es: (String, String)*): DataFrame = {
     val s = spark
     import s.implicits._

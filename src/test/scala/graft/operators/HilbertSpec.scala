@@ -1,28 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Hilbert index: the canonical 4x4 table, bijectivity over the full
   * grid, THE curve law (consecutive indices are grid-adjacent — what
   * Z-order lacks at seam jumps), partition locality under
   * hilbertLayout, and masked-input enforcement.
   */
-class HilbertSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class HilbertSpec extends SparkSuite {
   private def hv(pts: Seq[(Long, Long)], bits: Int): Seq[Long] = {
     val s = spark
     import s.implicits._

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+
+import graft.SparkSuite
 
 /** Deferred-normalization HITS and its incremental fold:
   * hitsDeferred matches an independent BigInt reference,
@@ -10,21 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * AND node-adding deltas), and the growth pre-flight refuses what
   * DECIMAL(38,0) cannot hold.
   */
-class HitsDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class HitsDeltaSpec extends SparkSuite {
   private def toDF(es: Seq[(String, String)]): DataFrame = {
     val s = spark
     import s.implicits._

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Incremental IVF+PQ append: a delta vector that duplicates an
   * indexed vector lands in the SAME coarse cell with the SAME code
@@ -11,21 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the input vector), and serving over the unioned tables surfaces
   * the appended twin — without any retraining pass.
   */
-class IndexAppendSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class IndexAppendSpec extends SparkSuite {
   private val dims = 8
 
   // 12 deterministic pseudo-random corpus vectors in [-1, 1]

@@ -1,30 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Index staleness census: a delta drawn from the indexed
   * distribution reports no drift; a delta pushed far off the
   * centroids trips the 2x-mean flag; disjoint cells coalesce
   * cleanly.
   */
-class IndexDriftSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class IndexDriftSpec extends SparkSuite {
   private val dims = 8
 
   private def vec(seed: Long, scale: Float = 1f): Seq[Float] =

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Johnson-Lindenstrauss ±1 projection (q121). Pins: the md5-parity
   * sign convention against independently computed fixtures; exact
@@ -12,21 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * for well-separated clusters; the short-vector null contract; and
   * determinism across runs.
   */
-class JlSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class JlSpec extends SparkSuite {
   private def vecs(rows: (Long, Seq[Float])*): DataFrame = {
     val s = spark
     import s.implicits._

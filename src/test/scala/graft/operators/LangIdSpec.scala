@@ -1,25 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Trained char-bigram language ID in lockstep with an independent
   * single-node naive-Bayes reference: same counts, same whole-bit
   * add-one costs, same (bits, label) argmin — on every scored doc.
   */
-class LangIdSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class LangIdSpec extends SparkSuite {
   private val train: Seq[(String, String)] = Seq(
     "en" -> "the cat sat on the mat with the hat",
     "en" -> "she sells sea shells by the sea shore",

@@ -1,33 +1,17 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Property layer for the LM operators: the in-plan bigram / hashed
   * feature extraction must match a naive Scala reimplementation of
   * the declared semantics on arbitrary whitespace soup, and the
   * whole-bit score must obey its algebraic bounds.
   */
-class LangModelPropertiesSpec extends AnyFunSuite
-    with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class LangModelPropertiesSpec extends SparkSuite {
   private def forAll[A](gen: Gen[A], n: Int)(f: A => Unit): Unit =
     (0 until n).foreach { i =>
       gen.apply(Gen.Parameters.default, Seed(i.toLong)).foreach(f)

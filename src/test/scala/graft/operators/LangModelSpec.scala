@@ -1,29 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Bigram-LM cross-entropy in whole bits: hand-computed code lengths
   * on a tiny trusted/candidate split, floor-log2 exactness, and the
   * no-bigram / unseen-everything edges.
   */
-class LangModelSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class LangModelSpec extends SparkSuite {
   test("floorLog2 is the exact bit length minus one") {
     val s = spark
     import s.implicits._

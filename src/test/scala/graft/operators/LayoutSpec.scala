@@ -1,24 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.{LocalSession, SparkSuite}
 
 /** Z-order layout: the interleave matches a software reference, and
   * the clustered write produces disjoint, internally-sorted z ranges
   * per partition (the property parquet min/max pruning relies on).
   */
-class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class LayoutSpec extends SparkSuite {
   private def refZ(a: Long, b: Long, bits: Int): Long =
     (0 until bits).foldLeft(0L) { (acc, i) =>
       acc | (((a >> i) & 1L) << (2 * i)) |
@@ -87,26 +77,18 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
 /** Bucketed tables: joins and aggregations on the bucket key must
   * plan with ZERO exchanges — the write-once-shuffle-never contract.
   */
-class BucketedJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-  private var base: java.nio.file.Path = _
+class BucketedJoinSpec extends SparkSuite {
+  private val base = java.nio.file.Files.createTempDirectory("graft_buckets")
 
-  override def beforeAll(): Unit = {
-    base = java.nio.file.Files.createTempDirectory("graft_buckets")
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", s"$base/warehouse")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
+  override protected def session = LocalSession(4)
+    .config("spark.sql.warehouse.dir", s"$base/warehouse")
+    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
+    super.afterAll()
     import scala.jdk.CollectionConverters._
-    if (base != null)
-      java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
-        .foreach(p => java.nio.file.Files.deleteIfExists(p))
+    java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
+      .foreach(p => java.nio.file.Files.deleteIfExists(p))
   }
 
   private def exchanges(df: org.apache.spark.sql.DataFrame): Int = {

@@ -1,28 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Leakage-free split: a test document that near-duplicates a train
   * document moves to train; clean test documents stay; every row is
   * assigned exactly one split; the operation is deterministic under
   * repartitioning.
   */
-class LeakageSplitSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class LeakageSplitSpec extends SparkSuite {
   /** doc_ids bucketed by the same hash the operator uses. */
   private def residues(ids: Seq[Long], of: Int): Map[Long, Long] = {
     val s = spark

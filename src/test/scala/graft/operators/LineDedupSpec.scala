@@ -1,30 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Line-level exact dedup: lines shared by >= minDocs documents are
   * removed wherever they occur, everything else (including blank and
   * all-whitespace lines) survives in original order, and the census
   * columns account exactly.
   */
-class LineDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class LineDedupSpec extends SparkSuite {
   private val banner = "(c) example corp - all rights reserved"
 
   private def fixture = {

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** The in-row Lloyd argmax (lloyd_argmax / lloyd_argmax_residual —
   * the r15 one-aggregation-per-iteration rewrite) reproduces the
@@ -14,22 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * here (it was the shipped implementation through r14, and is what
   * the DuckDB oracle unrolls).
   */
-class LloydArgmaxSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit =
-    if (spark != null) spark.stop()
-
+class LloydArgmaxSpec extends SparkSuite {
   /** Deterministic fixture: 60 vectors of 8 dims; ids 50+ are exact
     * DUPLICATES of id 0/1 (zero-norm residual clusters in the
     * residual run), and a few pairs are scaled copies (cosine ties —

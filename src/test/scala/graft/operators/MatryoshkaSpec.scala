@@ -1,30 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Matryoshka truncation eval: planted geometry where the full-dim
   * and prefix-dim rankings are known by construction — perfect
   * overlap when the tail dims are noise-free copies, broken overlap
   * when the tail flips the ranking.
   */
-class MatryoshkaSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class MatryoshkaSpec extends SparkSuite {
   test("information-free tail gives perfect overlap") {
     val s = spark
     import s.implicits._

@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Integer-exact IPF mixture-weight solving (q120). Pins: a table
   * whose row marginals already hit the uniform target is a fixed
@@ -13,21 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * pinned at their observed values; and the whole solve is
   * deterministic across runs.
   */
-class MixingSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class MixingSpec extends SparkSuite {
   private val Scale = 1000000L
 
   private def corpus(rows: (String, String, Int)*): DataFrame = {

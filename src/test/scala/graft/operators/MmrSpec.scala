@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** MMR diversified retrieval: the first pick is the most relevant
   * candidate, the second pick trades relevance for diversity (the
@@ -11,21 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * diverse candidate), penalties record the max similarity to the
   * selected set, and the query row itself is excluded.
   */
-class MmrSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class MmrSpec extends SparkSuite {
   // query q = e0; A(1) most relevant; B(2) near-duplicate of A;
   // C(3) less relevant but diverse; D(4) negatively relevant.
   // rel:  A .9, B .85, C .8, D -1

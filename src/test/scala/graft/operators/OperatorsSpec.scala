@@ -1,31 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.TextFunctions
+import graft.SparkSuite
 
 /** Behavioral tests for the pipeline operators on controlled inputs
   * with known duplicates/neighbors (the sf tables have none).
   */
-class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class OperatorsSpec extends SparkSuite {
   private def docs(rows: (Long, String)*): DataFrame = {
     val s = spark
     import s.implicits._
@@ -822,16 +806,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 /** Custom Catalyst TypedImperativeAggregate spec. */
-class CharClassAggSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class CharClassAggSpec extends SparkSuite {
   test("per-position char sets over fixed-length strings") {
     val s = spark
     import s.implicits._
@@ -867,16 +842,7 @@ class CharClassAggSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 /** Distributed exact order statistics (the q07 scale path). */
-class OrderStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class OrderStatsSpec extends SparkSuite {
   test("exactRanks matches an in-memory sort, duplicates and all") {
     val s = spark
     import s.implicits._
@@ -905,16 +871,7 @@ class OrderStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 /** SimHash band-bucket candidate generation. */
-class SimHashBandsSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class SimHashBandsSpec extends SparkSuite {
   test("near-identical docs are candidates; far docs are not") {
     val s = spark
     import s.implicits._
@@ -959,16 +916,7 @@ class SimHashBandsSpec extends AnyFunSuite with BeforeAndAfterAll {
   * mirrors the plan's arithmetic, so completeness of the pruning
   * itself is established here.
   */
-class PrefixJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class PrefixJoinSpec extends SparkSuite {
   private def docs(rows: (Long, String)*): DataFrame = {
     val s = spark
     import s.implicits._

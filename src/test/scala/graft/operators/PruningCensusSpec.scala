@@ -2,31 +2,16 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Footer-pruning census: a range-sorted layout lets a narrow range
   * predicate skip most files; a random layout forces a full read of
   * the SAME data; row accounting is exact against the known totals.
   */
-class PruningCensusSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-  private var dir: String = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    dir = Files.createTempDirectory("graft_prune").toString
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class PruningCensusSpec extends SparkSuite {
+  private val dir = Files.createTempDirectory("graft_prune").toString
 
   test("sorted layout prunes a narrow range; shuffled layout cannot") {
     val s = spark

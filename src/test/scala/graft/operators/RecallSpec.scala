@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Recall@k quality gate for the ANN family — the number the
   * determinism oracles can't see. Every CORRECTNESS row for
@@ -24,21 +24,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * see the assertions — exhaustive ADC (the PQ-quantization ceiling),
   * then ivfPqTopK at nprobe ∈ {1, 2, 8=all}.
   */
-class RecallSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class RecallSpec extends SparkSuite {
   private val Dims = 16
   private val Clusters = 8
   private val PerCluster = 20

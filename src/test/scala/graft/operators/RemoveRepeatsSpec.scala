@@ -1,30 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Repeated-substring removal: exactly the shared k-gram span is
   * removed from every document carrying it, untouched documents pass
   * through (whitespace-normalized), fully-duplicated documents empty
   * out, and the runs themselves are maximal.
   */
-class RemoveRepeatsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class RemoveRepeatsSpec extends SparkSuite {
   // a 10-token boilerplate phrase planted in docs 1 and 2 (k = 8 →
   // three k-gram start positions chain into one maximal run of 10
   // tokens); doc 3 is clean; docs 4 and 5 are full duplicates

@@ -1,28 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Residual IVFPQ (Jégou TPAMI'11 §IV): PQ codes trained on
   * x − c(x) against the coarse IVF centroid, per-cell codebooks.
   */
-class ResidualPqSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class ResidualPqSpec extends SparkSuite {
   private val patterns = Seq(
     Array(1f, 0f, 0f, 0f, 1f, 0f, 0f, 0f),
     Array(0f, 1f, 0f, 0f, 0f, 1f, 0f, 0f),

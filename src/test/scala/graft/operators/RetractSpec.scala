@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
+
+import graft.SparkSuite
 
 /** Decremental clustering: retractFromComponents == the full
   * re-cluster of the surviving pairs plus stranded singletons, the
@@ -10,21 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * cluster-wide retractions, and retract composes with the addition
   * fold.
   */
-class RetractSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class RetractSpec extends SparkSuite {
   private def toPairs(ps: Seq[(Long, Long)]): DataFrame = {
     val s = spark
     import s.implicits._

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** BM25 (deterministic rational variant): lockstep with a
   * single-node reference — same BIGINT products, one IEEE division
@@ -11,19 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * partitionings, rare terms outrank common ones, and the ranking
   * behaves like BM25 (tf saturation, length normalization).
   */
-class RetrievalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class RetrievalSpec extends SparkSuite {
   private def refBm25(corpus: Seq[(Long, String)],
                       terms: Seq[String], k: Int)
       : Seq[(Long, Double, Long)] = {

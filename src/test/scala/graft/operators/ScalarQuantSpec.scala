@@ -1,30 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Int8 scalar quantization: codes match a direct Scala reference
   * (round-half-up on the per-dimension affine map in the 2^25
   * integer grid), stay in [0, 255], satisfy the integer error gate,
   * and constant dimensions encode to 0 without dividing by zero.
   */
-class ScalarQuantSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class ScalarQuantSpec extends SparkSuite {
   private val dims = 6
 
   private def fixture = {

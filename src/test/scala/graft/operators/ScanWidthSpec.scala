@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Pins the two scan-shape internals this optimization round added:
   *
@@ -16,22 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    scan reads exactly the partition directories the artifact
   *    writer produced.
   */
-class ScanWidthSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit =
-    if (spark != null) spark.stop()
-
+class ScanWidthSpec extends SparkSuite {
   test("widen brings a narrow frame to session width, same rows") {
     val narrow = spark.range(0, 1000).coalesce(1)
       .selectExpr("id", "concat('d', id) as s")

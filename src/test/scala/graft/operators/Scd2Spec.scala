@@ -1,29 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** SCD2 history semantics: upserts open intervals, the next change
   * of the key closes them (deletes close without opening), the last
   * open interval is current, unknown ops fail fast.
   */
-class Scd2Spec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class Scd2Spec extends SparkSuite {
   test("interval derivation across upserts, deletes, and reinserts") {
     val s = spark
     import s.implicits._

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** SemDeDup: near-duplicates collapse within a cluster (keep-min-id),
   * distinct directions survive, the within-cluster candidate
@@ -11,19 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * clusters is the published algorithm's accepted miss), and the
   * pair budget refuses degenerate clusterings.
   */
-class SemDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class SemDedupSpec extends SparkSuite {
   /** Two tight direction bundles far apart on the unit circle (in a
     * 4-dim space), plus an orthogonal singleton: k=2 clustering
     * separates the bundles; within each bundle all vectors are

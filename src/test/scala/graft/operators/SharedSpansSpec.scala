@@ -1,30 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Shared-span forensics: the extracted spans land exactly on the
   * planted verbatim overlaps (maximal, correct start offsets in BOTH
   * documents), and the deterministic pair picker returns the
   * smallest repeated pair.
   */
-class SharedSpansSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class SharedSpansSpec extends SparkSuite {
   private val quoteA = (1 to 10).map(i => s"a$i").mkString(" ")
   private val quoteB = (1 to 9).map(i => s"b$i").mkString(" ")
 

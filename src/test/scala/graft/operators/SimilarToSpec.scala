@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Single-document similarity probe (q118): "find near-dups of THIS
   * doc" served as a singleton delta through [[Dedup.lshPairsAgainst]]
@@ -14,21 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * and the singleton path returns exactly the candidates the
   * symmetric batch path would have produced for that document.
   */
-class SimilarToSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class SimilarToSpec extends SparkSuite {
   private def docs(rows: (Long, String)*): DataFrame = {
     val s = spark
     import s.implicits._

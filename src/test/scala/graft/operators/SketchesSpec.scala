@@ -1,23 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Sketch profiles: error gates hold, results are deterministic
   * under repartitioning (mergeable sketch states, no RNG).
   */
-class SketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class SketchesSpec extends SparkSuite {
   private def corpus(n: Int): DataFrame = {
     val s = spark
     import s.implicits._
@@ -170,16 +161,7 @@ class SketchesSpec extends AnyFunSuite with BeforeAndAfterAll {
 /** Group-pairwise corpus overlap: MinHash estimate vs exact
   * shingle-set intersection.
   */
-class CorpusOverlapSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class CorpusOverlapSpec extends SparkSuite {
   test("identical groups estimate 1.0; disjoint groups estimate 0") {
     val s = spark
     import s.implicits._

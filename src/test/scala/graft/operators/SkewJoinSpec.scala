@@ -1,30 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.{LocalSession, SparkSuite}
 
 /** Salted skew join: exactly the plain inner join's multiset of rows
   * (hot keys, missing keys, duplicate dim keys), with the salt spread
   * actually splitting a hot key across reducers.
   */
-class SkewJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      // force the shuffle-join path the operator exists for
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class SkewJoinSpec extends SparkSuite {
+  override protected def session = LocalSession(4)
+    .config("spark.sql.shuffle.partitions", "8")
+    // force the shuffle-join path the operator exists for
+    .config("spark.sql.autoBroadcastJoinThreshold", "-1")
 
   test("result equals the plain inner join, including dim dups " +
       "and unmatched keys") {

@@ -1,31 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Temperature-smoothed sampling: membership matches the single-node
   * hash-threshold reimplementation exactly, big groups flatten
   * toward sqrt while small groups survive ~whole, and the sampler is
   * reproducible.
   */
-class TemperatureSampleSpec extends AnyFunSuite
-    with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class TemperatureSampleSpec extends SparkSuite {
   // head group of 400, mid 100, tail 9
   private def fixture = {
     val s = spark

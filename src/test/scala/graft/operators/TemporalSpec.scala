@@ -1,31 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** As-of join and sessionization semantics on controlled fixtures:
   * inclusive equal-ts matches, tolerance boundaries, null keys/
   * timestamps (a null never matches, like the SQL predicate), and the
   * hot-key time-bucket pre-split agreeing with the unbucketed form.
   */
-class TemporalSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class TemporalSpec extends SparkSuite {
   private def leftDf: DataFrame = {
     val s = spark
     import s.implicits._
@@ -433,21 +418,7 @@ class TemporalSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 /** Mixture-rate sampling and the quota-sample shortfall detector. */
-class SamplingMixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class SamplingMixtureSpec extends SparkSuite {
   private def corpus: DataFrame = {
     val s = spark
     import s.implicits._
@@ -541,6 +512,5 @@ class SamplingMixtureSpec extends AnyFunSuite with BeforeAndAfterAll {
       (Some("t"), 3L)).toDF("__g3", "__scnt")
     assert(Sampling.quotaShortfall(cnts, full, quota = 5).isEmpty)
   }
-
 
 }

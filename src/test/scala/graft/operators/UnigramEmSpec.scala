@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** EM vocabulary refinement in lockstep with an independent
   * single-node reference: substring counting, Viterbi with the
@@ -11,21 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the single-piece coverage floor, and the smoothed re-score —
   * every map entry compared exactly.
   */
-class UnigramEmSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class UnigramEmSpec extends SparkSuite {
   // ---- independent single-node reference --------------------------
   private def bits(n: Long): Long =
     63L - java.lang.Long.numberOfLeadingZeros(n)

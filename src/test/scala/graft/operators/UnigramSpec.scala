@@ -1,30 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Unigram Viterbi segmentation: exact-DP lockstep with a
   * brute-force enumeration reference, the packed-objective law,
   * canonical tie-breaks, code-point handling, and the vocabulary
   * pricing guard.
   */
-class UnigramSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class UnigramSpec extends SparkSuite {
   /** Brute force: enumerate EVERY segmentation into vocab pieces of
     * length ≤ maxK, return the minimal packed objective (or None).
     */

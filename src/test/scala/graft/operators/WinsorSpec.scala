@@ -1,29 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Winsorization census: lockstep with a sort-the-list reference on
   * generated data, hand cases (ties across the rank, tiny groups),
   * and the bounds-are-value-copies law.
   */
-class WinsorSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class WinsorSpec extends SparkSuite {
   private def census(rows: Seq[(String, java.lang.Double)],
                      lo: Int = 1, hi: Int = 99) = {
     val s = spark

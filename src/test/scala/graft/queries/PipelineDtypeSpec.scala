@@ -1,9 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** The driver has shipped `events.ts` as both TIMESTAMP(NANOS)
   * (reads as long nanos under `nanosAsLong`) and timestamp[us]
@@ -12,33 +11,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * representations of the SAME logical data produce identical
   * results, so the next regeneration cannot silently break one path.
   */
-class PipelineDtypeSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-  private var tmp: String = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    tmp = java.nio.file.Files.createTempDirectory("graft_dtype")
-      .toString
-  }
+class PipelineDtypeSpec extends SparkSuite {
+  private val tmp =
+    java.nio.file.Files.createTempDirectory("graft_dtype").toString
 
   override def afterAll(): Unit = {
-    if (spark != null) spark.stop()
-    if (tmp != null) {
-      import scala.jdk.CollectionConverters._
-      val root = java.nio.file.Paths.get(tmp)
-      if (java.nio.file.Files.exists(root))
-        java.nio.file.Files.walk(root).iterator().asScala.toSeq
-          .reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-    }
+    super.afterAll()
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(tmp)
+    if (java.nio.file.Files.exists(root))
+      java.nio.file.Files.walk(root).iterator().asScala.toSeq
+        .reverse.foreach(java.nio.file.Files.deleteIfExists(_))
   }
 
   test("q34/q53/q55/q59 agree between long-nanos and " +

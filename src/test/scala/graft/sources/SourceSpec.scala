@@ -701,10 +701,7 @@ class SourceSpec extends AnyFunSuite {
     assert(detect(glob).format == JsonLinesFormat)
     intercept[java.nio.file.NoSuchFileException](
       detect(dir.resolve("*.csv").toString))
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[1]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession(1).getOrCreate()
     try {
       for (path <- Seq(dir.toString, glob)) {
         val rows = sparkRead(spark, path).collect().map(_.getLong(0))

@@ -1,28 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.analyzer.SparkAnalyzer
+import graft.SparkSuite
 
 /** Streamed structure inference == batch structure inference: the
   * micro-batch fold through the merge monoid must reproduce the
   * whole-corpus analysis — same render, any replay split (the q70
   * exact-merge contract, now over the streaming harness).
   */
-class StreamingAnalyzeSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class StreamingAnalyzeSpec extends SparkSuite {
   test("replayed micro-batches reproduce the batch analysis render") {
     val s = spark
     import s.implicits._

@@ -1,29 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Temporal
+import graft.SparkSuite
 
 /** Streaming burst watch == the batch rule on in-order replay: daily
   * counts streamed in day order produce the same verdicts as
   * Temporal.burstDays, the trailing state stays bounded, and
   * verdicts survive a split across micro-batches.
   */
-class StreamingBurstSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class StreamingBurstSpec extends SparkSuite {
   // api: flat 10/day then a 5x spike on day 8, recovery on day 9;
   // web: flat forever
   private val daily: Seq[(String, Long, Long)] =

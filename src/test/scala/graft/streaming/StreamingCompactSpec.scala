@@ -1,28 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Temporal
+import graft.SparkSuite
 
 /** Streamed CDC compaction == batch compactLatest on any replay
   * split: the max(struct) state is a commutative monoid, so arrival
   * order and micro-batch boundaries cannot change the winner —
   * including tied timestamps, where the tiebreak decides.
   */
-class StreamingCompactSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class StreamingCompactSpec extends SparkSuite {
   test("replayed micro-batches reproduce the batch snapshot") {
     val s = spark
     import s.implicits._

@@ -1,27 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Streaming contract twins == batch: the watch's incremental wide
   * census equals the batch rule census on any replay split, and the
   * stateless screen tags exactly the batch quarantine rows.
   */
-class StreamingContractsSpec extends AnyFunSuite
-    with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class StreamingContractsSpec extends SparkSuite {
   private val rules = Seq(
     "x_pos" -> (col("x") > 0),
     "x_le_90" -> (col("x") <= 90),

@@ -1,28 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Streamed Count-Min table == batch table on any replay split: the
   * per-item bucket fan-out is stateless and the counters are exact
   * incremental sums, so the sketch over an unbounded ingest carries
   * O(groups x d x w) state and never drifts from batch.
   */
-class StreamingCountMinSpec extends AnyFunSuite
-    with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class StreamingCountMinSpec extends SparkSuite {
   test("replayed micro-batches reproduce the batch counter table") {
     val s = spark
     import s.implicits._

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dedup
+import graft.{LocalSession, SparkSuite}
 
 /** Continuous decontamination screen: micro-batches driven through
   * [[StreamingStructure.decontamScreenToParquet]] must leave exactly
@@ -14,22 +12,8 @@ import graft.operators.Dedup
   * over the union of all batches — including after a replayed batch
   * (duplicate verdict rows dedupe away, values unchanged).
   */
-class StreamingDecontamSpec extends AnyFunSuite
-    with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamingDecontamSpec extends SparkSuite {
+  override protected def session = LocalSession(2)
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

@@ -1,33 +1,19 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dedup
+import graft.{LocalSession, SparkSuite}
 
 /** Continuous delta dedup: a replayed micro-batch stream through
   * [[StreamingStructure.deltaDedupToCorpus]] must leave exactly the
   * corpus the batch operator builds when the same batches are folded
   * through [[Dedup.deduplicateAgainst]] one by one.
   */
-class StreamingDeltaDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamingDeltaDedupSpec extends SparkSuite {
+  override protected def session = LocalSession(2)
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

@@ -1,30 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.SpaceSavingAgg
+import graft.SparkSuite
 
 /** Streamed SpaceSaving == batch SpaceSaving in the exact regime
   * (distinct items per group ≤ k): the sketch state is a mergeable
   * monoid, so any replay split of the stream must land on the same
   * counts the one-shot batch aggregation produces.
   */
-class StreamingHeavyHittersSpec extends AnyFunSuite
-    with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class StreamingHeavyHittersSpec extends SparkSuite {
   test("replayed micro-batches reproduce the batch sketch") {
     val s = spark
     import s.implicits._

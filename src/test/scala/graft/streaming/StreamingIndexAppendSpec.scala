@@ -1,32 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Similarity
+import graft.{LocalSession, SparkSuite}
 
 /** Continuous ANN index ingestion: streaming a vector batch through
   * [[StreamingStructure.indexAppendStream]] leaves exactly the delta
   * tables the batch [[Similarity.appendToIvfPq]] produces for the
   * same vectors against the same frozen index.
   */
-class StreamingIndexAppendSpec extends AnyFunSuite
-    with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamingIndexAppendSpec extends SparkSuite {
+  override protected def session = LocalSession(2)
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

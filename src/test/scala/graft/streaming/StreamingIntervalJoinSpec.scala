@@ -2,30 +2,17 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Stream-stream interval join == the batch equi+theta join on the
   * same data: every (event, state) pair with matching key and the
   * event inside [state_ts, state_ts + horizon] emits exactly once,
   * across micro-batch splits of both sides.
   */
-class StreamingIntervalJoinSpec extends AnyFunSuite
-    with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class StreamingIntervalJoinSpec extends SparkSuite {
   test("replayed two-sided micro-batches reproduce the batch join") {
     val s = spark
     import s.implicits._

@@ -1,30 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dedup
+import graft.SparkSuite
 
 /** Streaming boilerplate-line screen == the batch removal on any
   * replay split: the digest set is batch-built, the per-document
   * cleanup is stateless, so streamed clean_text matches the batch
   * operator document by document.
   */
-class StreamingLineScreenSpec extends AnyFunSuite
-    with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class StreamingLineScreenSpec extends SparkSuite {
   private val banner = "subscribe to our newsletter"
 
   private def corpus = (1 to 40).map { i =>

@@ -1,12 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.LangModel
+import graft.SparkSuite
 
 /** Streaming LM screen == the batch scorer on any replay split: the
   * model is batch-trained and frozen, per-document scoring is
@@ -14,18 +12,7 @@ import graft.operators.LangModel
   * document by document and the model-size guard refuses oversized
   * literals.
   */
-class StreamingLmScreenSpec extends AnyFunSuite
-    with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class StreamingLmScreenSpec extends SparkSuite {
   // heavy repetition + a vocab tail so seen bigrams are CHEAP
   // (1 bit) and unseen ones EXPENSIVE (3 bits): in-model docs land
   // at 10 decibits, out-of-model at 30, and the 20 cut separates

@@ -1,27 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Streamed sketch profile == batch profile: the HLL++ estimate must
   * be EXACTLY the batch value on any replay split (register maxima
   * are order-insensitive), counts/sums exact, and the GK median
   * within its rank-error tolerance of the batch estimate.
   */
-class StreamingProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class StreamingProfileSpec extends SparkSuite {
   test("replayed micro-batches reproduce the batch profile") {
     val s = spark
     import s.implicits._

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Graph
+import graft.{LocalSession, SparkSuite}
 
 /** Streaming incremental PageRank: micro-batched edge deltas folding
   * into the persisted trace leave exactly the scores the full batch
@@ -13,21 +12,8 @@ import graft.operators.Graph
   * batches (replay-split == batch), and a re-delivered batch is a
   * no-op (idempotent partition overwrite).
   */
-class StreamingRankFoldSpec extends AnyFunSuite
-    with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamingRankFoldSpec extends SparkSuite {
+  override protected def session = LocalSession(2)
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Checkpoint recovery: a windowed-stats stream STOPPED mid-flight
   * and RESTARTED from its checkpoint continues from the recorded
@@ -14,18 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * This is the property a 100 TB ingest actually depends on:
   * executor loss or redeploy must not corrupt the stats table.
   */
-class StreamingRestartSpec extends AnyFunSuite with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class StreamingRestartSpec extends SparkSuite {
   test("stop + restart from checkpoint = the uninterrupted output") {
     val s = spark
     import s.implicits._

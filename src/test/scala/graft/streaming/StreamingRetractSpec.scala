@@ -1,11 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Dedup
+import graft.{LocalSession, SparkSuite}
 
 /** Streaming decremental clustering: micro-batched takedown ids
   * retracting against the persisted ClusterState leave exactly the
@@ -15,21 +14,8 @@ import graft.operators.Dedup
   * surviving pairs; the share budget surfaces as a loud batch
   * failure naming the rebuild path.
   */
-class StreamingRetractSpec extends AnyFunSuite
-    with BeforeAndAfterAll {
-
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+class StreamingRetractSpec extends SparkSuite {
+  override protected def session = LocalSession(2)
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString

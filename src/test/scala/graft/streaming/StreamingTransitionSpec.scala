@@ -1,28 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Streaming transition watch == batch census on in-order replays:
   * state is one last-event per entity, transitions stitch across
   * micro-batch boundaries, and counting the emitted rows reproduces
   * `Temporal.transitionCensus` exactly.
   */
-class StreamingTransitionSpec extends AnyFunSuite
-    with BeforeAndAfterAll {
-  private var spark: SparkSession = _
-
-  override def beforeAll(): Unit = {
-    spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-  }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
-
+class StreamingTransitionSpec extends SparkSuite {
   test("streamed transitions equal the batch census across splits") {
     val s = spark
     import s.implicits._
