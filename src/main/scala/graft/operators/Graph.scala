@@ -184,33 +184,6 @@ object Graph {
       .get("spark.sql.shuffle.partitions").toInt
     catch { case _: Throwable => 200 }
 
-  /** Cached size in bytes of a [[cutTracked]] pin set — the
-    * job-free smallness test for broadcast decisions (a `count()`
-    * would schedule one extra job per decision; the block manager
-    * already knows the bytes). None when nothing is pinned (the
-    * reliable-checkpoint mode writes files instead).
-    */
-  private def cachedBytes(pins: Seq[RDD[_]]): Option[Long] =
-    if (pins.isEmpty) None
-    else {
-      val sc = pins.head.sparkContext
-      val ids = pins.map(_.id).toSet
-      val infos = sc.getRDDStorageInfo
-        .filter(i => ids.contains(i.id))
-      if (infos.isEmpty) None
-      else Some(infos.map(i => i.memSize + i.diskSize).sum)
-    }
-
-  /** Does a cut frame fit the broadcast budget? Storage-size test
-    * when blocks are pinned; under reliable checkpointing (no
-    * pinned blocks) falls back to one count at ~32 bytes/row.
-    */
-  private def fitsBroadcast(df: DataFrame, pins: Seq[RDD[_]],
-                            maxBytes: Long): Boolean =
-    cachedBytes(pins) match {
-      case Some(b) => b <= maxBytes
-      case None => df.count() <= maxBytes / 32
-    }
 
   /** Exact floor division of non-negative DECIMAL(38,0) columns:
     * `(a - a mod b) / b` — the subtraction makes the numerator
@@ -223,6 +196,10 @@ object Graph {
   // hottest executor frame in the rank-fold profile)
   private def floorDiv(a: Column, b: Column): Column =
     graft.functions.DecQuotExpr.decQuot(a.cast(Dec), b.cast(Dec))
+
+  /** An exact DECIMAL(38,0) literal. */
+  private def decLit(v: BigInt): Column =
+    lit(new java.math.BigDecimal(v.bigInteger)).cast(Dec)
 
   /** `iterations` rounds of exact scaled-integer PageRank over a
     * directed edge frame with columns `src`/`dst` (any key type;
@@ -306,14 +283,9 @@ object Graph {
     // edge weight (w = 1 unweighted): a node's mass splits across
     // its out-edges proportionally to w — share(u→v) =
     // floor(pr(u)·w / Σ_out w), which for w ≡ 1 is exactly the
-    // classic floor(pr/outdeg). Non-positive weights raise in-plan.
-    // The UNWEIGHTED path carries no w column at all: pr·1 ≡ pr, so
-    // the per-edge decimal multiply disappears from every round, the
-    // cached/shuffled edge rows are one DECIMAL(38,0) narrower
-    // (guide §2.3), and the degree aggregate is a long count instead
-    // of a decimal sum — identical values either way.
+    // classic floor(pr/outdeg). Non-positive weights raise in-plan;
+    // the UNWEIGHTED path carries no w column at all ([[withW]]).
     val weighted = weight.isDefined
-    val wCol = weight.getOrElse(lit(1L)).cast(Dec)
     // hash-repartition the persisted frame by the per-round join key
     // ONCE: the cache then (a) holds shuffle-width partitions instead
     // of inheriting the scan's split count (under small-file split
@@ -321,12 +293,7 @@ object Graph {
     // every round), and (b) reports src-hash partitioning, so each
     // round's edges⋈ranks join exchanges only the node-sized rank
     // side — the edge side never re-shuffles
-    val e0 = (if (weighted)
-        edges.select(col("src"), col("dst"),
-          when(wCol > 0, wCol)
-            .otherwise(raise_error(lit("pagerank: edge weights must " +
-              "be positive")).cast(Dec)).as("w"))
-      else edges.select(col("src"), col("dst")))
+    val e0 = withW(edges, weight, "pagerank")
       .repartition(shuffleWidth(edges), col("src"))
       .persist()
     // degree-skew pre-flight (the price-it-first discipline): the
@@ -387,8 +354,6 @@ object Graph {
     if (sCnt <= 0)
       throw new IllegalStateException("pagerank: no seed appears " +
         "among the edge frame's nodes (empty teleport set)")
-    def decLit(v: BigInt): Column =
-      lit(new java.math.BigDecimal(v.bigInteger)).cast(Dec)
     // the three per-node constants, exact BigInt floors — identical
     // values to the in-plan floorDiv spellings they replace:
     //   init     = floor(N·scale / S)            (round-0 seed mass)
@@ -528,17 +493,16 @@ object Graph {
     *     detected from round 0 itself — unseeded round 0 is `scale`
     *     everywhere).
     *
-    * Shape: the pre-flight is ONE job — one distinct over the base
-    * frame's endpoints plus delta-sized anti-joins (NOT the
-    * edited-frame multiset diff, which [[pagerankRefresh]] alone
-    * pays: two keyed aggregates over both full frames; for pure
-    * additions the changed sources are exactly `srcs(Δ)`, known for
-    * free). The fold itself sizes the frontier and picks its join
-    * strategy (see [[foldCore]]): a frontier inside
-    * `maxBroadcastBytes` runs the ENTIRE fold broadcast-side —
-    * zero shuffles of the edge frame, one trace-element scan per
-    * round — and past the budget it degrades to frontier semi-joins
-    * over the shuffled edge frame. A delta touching f% of sources
+    * Shape: the pre-flight is the shared flag pass ([[endpointFlags]]
+    * — one node-keyed aggregate over one scan of each frame, cut
+    * once; NOT the edited-frame multiset diff, which
+    * [[pagerankRefresh]] alone pays: for pure additions the changed
+    * sources are exactly `srcs(Δ)`, read off the flags for free).
+    * The fold itself is the rank family's one frontier fold
+    * ([[fold]]): a frontier inside `maxBroadcastBytes` runs
+    * driver-resident — zero shuffles of the edge frame, one
+    * trace-element scan — and past the budget it runs distributed
+    * over frontier-sized extracts. A delta touching f% of sources
     * costs ~f% of a full round, the win this operator exists for at
     * 100 TB.
     */
@@ -554,26 +518,14 @@ object Graph {
       : DataFrame = {
     // >= 2: round 0 plus at least one iteration. A real
     // pagerankTrace always has both; a degenerate 1-element trace
-    // has ZERO rounds to fold, and the driver/shuffle paths disagree
-    // on its added-node filler (0 vs scale) — refuse it rather than
-    // let the answer depend on maxBroadcastBytes
+    // has ZERO rounds to fold — refuse it rather than return the
+    // trace untouched
     require(trace.length >= 2,
       "need a pagerankTrace run (round 0 + >=1 iteration) to fold into")
     require(num > 0 && den > num,
       s"damping num/den must lie in (0, 1): $num/$den")
-    // unweighted folds carry NO w column: pr·1 ≡ pr drops the
-    // per-edge decimal multiply, and the cached / collected /
-    // shuffled edge rows lose a 16-byte DECIMAL(38,0) constant each
-    // (the pagerankTraceImpl narrowing, applied to the fold paths)
-    val weighted = weight.isDefined
-    val wCol = weight.getOrElse(lit(1L)).cast(Dec)
-    def withW(df: DataFrame, who: String): DataFrame =
-      if (weighted)
-        df.select(col("src"), col("dst"),
-          when(wCol > 0, wCol)
-            .otherwise(raise_error(lit(s"$who: edge weights must " +
-              "be positive")).cast(Dec)).as("w"))
-      else df.select(col("src"), col("dst"))
+    def edgesOf(df: DataFrame): DataFrame =
+      withW(df, weight, "pagerankDelta")
     // layout hint: both frames carry the artifact's physical
     // partition column sb = pmod(xxhash64(src), srcBuckets); the
     // fold's src-keyed probes then read ONLY the probing frontier's
@@ -597,108 +549,68 @@ object Graph {
             "column — write the companion partitioned by " +
             "db = pmod(xxhash64(dst), buckets) cast to int")
         (ids: Seq[Int]) =>
-          withW(eD.where(col("db").isin(ids: _*)), "pagerankDelta")
-            .unionAll(withW(dD.where(col("db").isin(ids: _*)),
-              "pagerankDelta"))
+          edgesOf(eD.where(col("db").isin(ids: _*)))
+            .unionAll(edgesOf(dD.where(col("db").isin(ids: _*))))
       }
       EdgeLayout(n, ids =>
-        withW(edges.where(col("sb").isin(ids: _*)), "pagerankDelta")
-          .unionAll(withW(delta.where(col("sb").isin(ids: _*)),
-            "pagerankDelta")),
+        edgesOf(edges.where(col("sb").isin(ids: _*)))
+          .unionAll(edgesOf(delta.where(col("sb").isin(ids: _*)))),
         scanDst)
     }
     // width-normalized caches (see pagerankTrace's e0 note): the
     // fold scans these a handful of times — hops, frontier-edge and
     // degree probes — and each scan should cost shuffle-width tasks,
     // not the raw scan's split count. COALESCE, not repartition: the
-    // fold's probes all broadcast the frontier side (and the shuffle
-    // fallback extracts frontier in-edges once), so nothing here
-    // ever exploits src-hash partitioning — the old repartition paid
-    // a full edge shuffle up front (measured as the single heaviest
-    // stage of the q174 fold: a 1 % delta shuffled 100 % of the
-    // edges before folding anything) for a property no consumer
+    // fold's probes all broadcast the frontier side (and the
+    // distributed fold extracts frontier edges once), so nothing
+    // here ever exploits src-hash partitioning — the old repartition
+    // paid a full edge shuffle up front (measured as the single
+    // heaviest stage of the q174 fold: a 1 % delta shuffled 100 % of
+    // the edges before folding anything) for a property no consumer
     // used. Coalesce materializes the same width-normalized cache by
     // merging scan splits map-side, zero shuffle.
-    val eOldP = Some(withW(edges, "pagerankDelta")
-      .coalesce(shuffleWidth(edges)).persist())
-    val eOld = eOldP.getOrElse(withW(edges, "pagerankDelta"))
-    val eDelta = withW(delta, "pagerankDelta")
-      .coalesce(shuffleWidth(delta)).persist()
-    val eNew = eOld.unionAll(eDelta)
-    // ALL pre-flights in ONE SHUFFLE: tag every edge endpoint with
-    // its role (old-src / old-dst / delta-src / delta-dst), reduce
-    // to one flag row per node, and read every violation off the
-    // flags —
+    val eOld = edgesOf(edges).coalesce(shuffleWidth(edges)).persist()
+    val eDelta = edgesOf(delta).coalesce(shuffleWidth(delta)).persist()
+    // every pre-flight off the flags —
     //  - dangling_old: a node the base frame only ever names as a
     //    dst (a SOURCE trivially has an out-edge);
     //  - dangling_new: a delta endpoint that is a source in NEITHER
     //    frame (an old node keeps its base out-edges in E∪Δ, so
     //    only delta endpoints can be newly dangling);
     //  - added: a delta endpoint the base frame never names (not a
-    //    violation — counted to decide whether the added-node frame
-    //    is worth materializing at all: a pure reinforcement delta
-    //    has none, and an empty LOCAL frame lets Catalyst prune
+    //    violation — counted so a pure reinforcement delta folds
+    //    with an empty LOCAL added frame, which lets Catalyst prune
     //    every added-row union downstream).
-    // The seeded-trace probe (a node-frame scan, no shuffle) rides
-    // the same collect as a 1-row broadcast.
-    // ONE SCAN per frame (not one per endpoint role): each edge row
-    // explodes into its (src, roleBit) and (dst, roleBit) pairs
-    // in-task, so the pre-flight reads the base artifact once and
-    // the delta once instead of twice each — at 100 TB that halves
-    // the pre-flight's file bytes, and partial aggregation reduces
-    // the exploded pairs map-side exactly as before.
-    val flags = endpointRoles(eOld, 1, 2)
-      .unionAll(endpointRoles(eDelta, 4, 8))
-      .groupBy(col("node"))
-      .agg(max(when(col("r") === 1, 1).otherwise(0)).as("os"),
-        max(when(col("r") === 2, 1).otherwise(0)).as("od"),
-        max(when(col("r") === 4, 1).otherwise(0)).as("ds"),
-        max(when(col("r") === 8, 1).otherwise(0)).as("dd"))
+    val (flags, flagPins) = endpointFlags(eOld, eDelta, checkpointDir)
     val inD = col("ds") === 1 || col("dd") === 1
-    val pre = flags.agg(
+    val isAdded = inD && col("os") === 0 && col("od") === 0
+    val rec = PageRank(num, den, scale, weight.isDefined)
+    val counts = preflight(flags, Seq(
         count(when(col("os") === 0 && col("od") === 1, 1))
           .as("dangling_old"),
         count(when(inD && col("os") === 0 && col("ds") === 0, 1))
           .as("dangling_new"),
-        count(when(inD && col("os") === 0 && col("od") === 0, 1))
-          .as("added_node"))
-      .crossJoin(broadcast(trace.head
-        .where(col("pr") =!= lit(scale).cast(Dec))
+        count(when(isAdded, 1)).as("added_node")),
+      Seq(trace.head.where(!canonicalRound0(rec))
         .agg(count(lit(1)).as("seeded_trace"))))
-      .head()
-    val counts = Seq("dangling_old", "dangling_new", "added_node",
-        "seeded_trace")
-      .map(k => k -> pre.getLong(pre.fieldIndex(k)))
-      .filter(_._2 > 0).toMap
-    val violations = counts - "added_node"
+    val violations = counts.filter(_._2 > 0) - "added_node"
     require(violations.isEmpty,
       "pagerankDelta: unsound fold — " +
         violationText(violations) + "; run the full pagerank " +
         "instead")
-    val (added, addedPins) =
-      if (counts.getOrElse("added_node", 0L) == 0L)
-        // provably no new node: a filter-false frame folds to an
-        // empty LocalRelation and every downstream union/join of
-        // added rows optimizes away
-        (eDelta.select(col("src").as("node")).where(lit(false)),
-          Seq.empty[RDD[_]])
-      else cutTracked(eDelta.select(col("src").as("node"))
-        .unionAll(eDelta.select(col("dst").as("node")))
-        .distinct()
-        .join(eOld.select(col("src").as("node"))
-          .unionAll(eOld.select(col("dst").as("node"))),
-          Seq("node"), "left_anti"), checkpointDir)
+    val added = nodesWhere(flags, isAdded, counts("added_node") > 0)
     // changed sources for a pure-addition batch are exactly the
-    // delta's sources — no diff needed; and outNbr_old(srcs(Δ)) ⊆
-    // outNbr_{E∪Δ}(srcs(Δ)), so the frontier seeds from the new
-    // frame alone
-    val srcsD = eDelta.select(col("src").as("node")).distinct()
-    val out = foldCore(eNew, Seq(eNew), srcsD, added, trace, num,
-      den, scale, checkpointDir, maxBroadcastBytes, layout, weighted)
-    // foldCore's result is eagerly materialized — every input frame
+    // delta's sources — no diff needed; their out-neighbors in E∪Δ
+    // cover the delta's destinations, so added nodes are the only
+    // nodes dirty outright
+    val out = fold(rec, eOld.unionAll(eDelta),
+      Seq(Seeds(added, Some(flags.where(col("ds") === 1)
+        .select(col("node"))))),
+      added, trace, checkpointDir, maxBroadcastBytes, layout)
+    // the fold's result is eagerly materialized — every input frame
     // below is dead
-    release(addedPins)
-    eOldP.foreach(_.unpersist())
+    release(flagPins)
+    eOld.unpersist()
     eDelta.unpersist()
     out
   }
@@ -712,11 +624,12 @@ object Graph {
     * multisets (one full-outer join of two keyed aggregates — a
     * source whose multiset is unchanged contributes identical shares
     * given identical scores); the dirty frontier then seeds from the
-    * changed sources' out-neighbors in BOTH frames (a removal can
-    * dirty a node the new graph no longer reaches from its source)
-    * plus every added node, and expands through the NEW frame only.
-    * Result == the full `pagerank(newEdges, iterations)` EXACTLY
-    * (spec- and oracle-pinned).
+    * changed sources' out-neighbors in the new frame plus every
+    * diffed pair's destination (which covers the out-neighbors a
+    * removal took away) plus every added node, and expands through
+    * the NEW frame only. Result == the full
+    * `pagerank(newEdges, iterations)` EXACTLY (spec- and
+    * oracle-pinned).
     *
     * Added nodes fold by the analytic rebase documented on
     * [[pagerankDelta]]: dangling-free + unseeded makes every score
@@ -727,7 +640,9 @@ object Graph {
     *
     * Preconditions (priced pre-flight, `require`d): no node removed,
     * no dangling node in either frame, unseeded trace (detected
-    * from round 0 — unseeded round 0 is `scale` everywhere).
+    * from round 0 — unseeded round 0 is `scale` everywhere). All
+    * read off the shared flag pass, the old frame as roles 1/2 and
+    * the new one as 4/8.
     */
   def pagerankRefresh(oldEdges: DataFrame, newEdges: DataFrame,
                       trace: Seq[DataFrame],
@@ -737,75 +652,54 @@ object Graph {
                       checkpointDir: Option[String] = None,
                       maxBroadcastBytes: Long = 128L << 20)
       : DataFrame = {
-    // >= 2 for the same reason as pagerankDelta: zero-round folds
-    // have path-dependent added-node filler — refuse
+    // >= 2 for the same reason as pagerankDelta: a zero-round fold
+    // has nothing to fold — refuse
     require(trace.length >= 2,
       "need a pagerankTrace run (round 0 + >=1 iteration) to fold into")
     require(num > 0 && den > num,
       s"damping num/den must lie in (0, 1): $num/$den")
-    // no w column on unweighted frames — the pagerankDelta narrowing
     val weighted = weight.isDefined
-    val wCol = weight.getOrElse(lit(1L)).cast(Dec)
-    def withW(df: DataFrame): DataFrame =
-      if (weighted)
-        df.select(col("src"), col("dst"),
-          when(wCol > 0, wCol)
-            .otherwise(raise_error(lit("pagerankRefresh: edge " +
-              "weights must be positive")).cast(Dec)).as("w"))
-      else df.select(col("src"), col("dst"))
     // coalesce, not repartition — same reasoning as pagerankDelta:
-    // every consumer (node scans, the multiset-diff aggregates keyed
-    // (src, dst), the fold's frontier probes) either aggregates on a
-    // different key or broadcasts the frontier side, so src-hash
-    // partitioning buys nothing and the up-front edge shuffle is
-    // pure cost.
-    val eOld = withW(oldEdges)
+    // every consumer (the flag pass, the multiset-diff aggregates
+    // keyed (src, dst), the fold's frontier probes) either
+    // aggregates on a different key or broadcasts the frontier side,
+    // so src-hash partitioning buys nothing and the up-front edge
+    // shuffle is pure cost.
+    val eOld = withW(oldEdges, weight, "pagerankRefresh")
       .coalesce(shuffleWidth(oldEdges)).persist()
-    val eNew = withW(newEdges)
+    val eNew = withW(newEdges, weight, "pagerankRefresh")
       .coalesce(shuffleWidth(newEdges)).persist()
-    def nodesOf(e: DataFrame): DataFrame =
-      e.select(col("src").as("node"))
-        .unionAll(e.select(col("dst").as("node")))
-        .distinct()
-    val (oldNodes, onPins) = cutTracked(nodesOf(eOld), checkpointDir)
-    val (newNodes, nnPins) = cutTracked(nodesOf(eNew), checkpointDir)
-    val (added, addedPins) = cutTracked(
-      newNodes.join(oldNodes, Seq("node"), "left_anti"),
-      checkpointDir)
-    // ALL pre-flights in ONE job (tagged union of the violation
-    // frames): no removed node, no dangling node in EITHER frame
-    // (dangling mass is a global broadcast term in both runs, so a
-    // local fold would be unsound), unseeded trace.
-    val violations = oldNodes
-      .join(newNodes, Seq("node"), "left_anti")
-      .select(lit("node_removed").as("kind"))
-      .unionAll(oldNodes
-        .join(eOld.select(col("src").as("node")).distinct(),
-          Seq("node"), "left_anti")
-        .select(lit("dangling_old").as("kind")))
-      .unionAll(newNodes
-        .join(eNew.select(col("src").as("node")).distinct(),
-          Seq("node"), "left_anti")
-        .select(lit("dangling_new").as("kind")))
-      .unionAll(trace.head
-        .where(col("pr") =!= lit(scale).cast(Dec))
-        .select(lit("seeded_trace").as("kind")))
-      .groupBy(col("kind")).agg(count(lit(1)).as("n"))
-      .collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    // no removed node, no dangling node in EITHER frame (dangling
+    // mass is a global broadcast term in both runs, so a local fold
+    // would be unsound), unseeded trace
+    val (flags, flagPins) = endpointFlags(eOld, eNew, checkpointDir)
+    val inOld = col("os") === 1 || col("od") === 1
+    val inNew = col("ds") === 1 || col("dd") === 1
+    val rec = PageRank(num, den, scale, weighted)
+    val counts = preflight(flags, Seq(
+        count(when(inOld && !inNew, 1)).as("node_removed"),
+        count(when(col("os") === 0 && col("od") === 1, 1))
+          .as("dangling_old"),
+        count(when(col("ds") === 0 && col("dd") === 1, 1))
+          .as("dangling_new"),
+        count(when(inNew && !inOld, 1)).as("added_node")),
+      Seq(trace.head.where(!canonicalRound0(rec))
+        .agg(count(lit(1)).as("seeded_trace"))))
+    val violations = counts.filter(_._2 > 0) - "added_node"
     require(violations.isEmpty,
       "pagerankRefresh: unsound edit — " +
         violationText(violations) + "; run the full pagerank " +
         "instead")
-    // changed sources = sources whose out-edge MULTISET differs
+    val added = nodesWhere(flags, inNew && !inOld,
+      counts("added_node") > 0)
+    // changed (src, dst) pairs = those whose MULTISET differs
     // between the frames (count + total weight per (src,dst) group;
     // a source with an identical multiset emits identical shares
     // given identical scores). One full-outer join of two keyed
-    // aggregates — edit-sized output, edge-sized input. A source
-    // that only exists in one frame (an added node) diffs too.
-    // unweighted: w ≡ 1 makes the weight sum IDENTICAL to the count,
-    // so comparing it would be comparing the count twice — the diff
-    // reduces to per-(src, dst) multiplicities alone.
+    // aggregates — edit-sized output, edge-sized input, cut once
+    // because both seed sets read it. unweighted: w ≡ 1 makes the
+    // weight sum IDENTICAL to the count, so the diff reduces to
+    // per-(src, dst) multiplicities alone.
     def grouped(e: DataFrame, cn: String, sn: String): DataFrame = {
       val g = e.groupBy(col("src"), col("dst"))
       if (weighted)
@@ -816,30 +710,50 @@ object Graph {
       if (weighted)
         !(col("__oc") <=> col("__nc") && col("__ow") <=> col("__nw"))
       else !(col("__oc") <=> col("__nc"))
-    val srcsD = grouped(eOld, "__oc", "__ow")
+    val (diff, diffPins) = cutTracked(grouped(eOld, "__oc", "__ow")
       .join(grouped(eNew, "__nc", "__nw"), Seq("src", "dst"),
         "full_outer")
       .where(changed)
-      .select(col("src").as("node")).distinct()
-    // the frontier seeds from the changed sources' out-neighbors
-    // in BOTH frames — a removal dirties a node the new frame may
-    // no longer reach from that source — plus every added node,
-    // and expands through the NEW frame only.
-    val out = foldCore(eNew, Seq(eNew, eOld), srcsD, added, trace,
-      num, den, scale, checkpointDir, maxBroadcastBytes,
-      weighted = weighted)
-    release(addedPins)
-    release(nnPins)
-    release(onPins)
+      .select(col("src"), col("dst")), checkpointDir)
+    // a changed source's shares moved, so its out-neighbors in the
+    // NEW frame are dirty; an out-neighbor it had only in the OLD
+    // frame lost an edge, so the diff names that pair — its dst is
+    // dirty outright, as is every added node
+    val out = fold(rec, eNew,
+      Seq(Seeds(diff.select(col("dst").as("node")).unionAll(added),
+        Some(diff.select(col("src").as("node"))))),
+      added, trace, checkpointDir, maxBroadcastBytes)
+    release(diffPins)
+    release(flagPins)
     eOld.unpersist()
     eNew.unpersist()
     out
   }
 
+  /** `df`'s `src` and `dst`, plus — when `weight` is set — its value
+    * as a DECIMAL(38,0) column `w`, raising in-plan (naming `who`) on
+    * a non-positive weight. Unweighted frames carry NO w column at
+    * all: pr·1 ≡ pr drops the per-edge decimal multiply, the
+    * cached / collected / shuffled edge rows lose a 16-byte
+    * DECIMAL(38,0) constant each, and degree aggregates are long
+    * counts instead of decimal sums — identical values either way.
+    */
+  private def withW(df: DataFrame, weight: Option[Column],
+                    who: String): DataFrame =
+    weight match {
+      case Some(w) =>
+        val wd = w.cast(Dec)
+        df.select(col("src"), col("dst"),
+          when(wd > 0, wd)
+            .otherwise(raise_error(lit(s"$who: edge weights must " +
+              "be positive")).cast(Dec)).as("w"))
+      case None => df.select(col("src"), col("dst"))
+    }
+
   /** One edge scan → (node, roleBit) pairs: each edge row explodes
     * into its (src, sBit) and (dst, dBit) pairs in-task, so a
     * pre-flight reads each frame ONCE instead of once per endpoint
-    * role (shared by the pagerankDelta and hitsDelta flag passes).
+    * role.
     */
   private def endpointRoles(f: DataFrame, sBit: Int,
                             dBit: Int): DataFrame =
@@ -848,6 +762,74 @@ object Graph {
         struct(col("dst").as("node"), lit(dBit).as("r"))))
       .as("__e"))
       .select(col("__e.node").as("node"), col("__e.r").as("r"))
+
+  /** The rank folds' one pre-flight pass: frame `a`'s endpoints tagged
+    * as roles 1 (src) / 2 (dst), frame `b`'s as 4 / 8, reduced to ONE
+    * flag row per node — `os`, `od`, `ds`, `dd` — and cut once. Every
+    * node set a fold needs (added nodes, delta sources and
+    * destinations) and every violation count is then a filter or an
+    * aggregate over the cut flags, never another edge scan.
+    *
+    * `outDegree` adds `outc`, the node's out-edge count over both
+    * frames. `round0`, a trace's first element and the predicate of
+    * its canonical rows, rides the same aggregate as roles 16
+    * (canonical) / 32 (not): `r0` flags a node round 0 names, and
+    * `off0` counts its off-canonical rows. Both feed the HITS
+    * pre-flight, and both are per-node, so a round 0 that repeats a
+    * node cannot inflate `outc`.
+    */
+  private def endpointFlags(a: DataFrame, b: DataFrame,
+                            checkpointDir: Option[String],
+                            outDegree: Boolean = false,
+                            round0: Option[(DataFrame, Column)] = None)
+      : (DataFrame, Seq[RDD[_]]) = {
+    val roles = Seq("os" -> 1, "od" -> 2, "ds" -> 4, "dd" -> 8).map {
+      case (n, bit) => max(when(col("r") === bit, 1).otherwise(0)).as(n)
+    }
+    val degree =
+      if (!outDegree) Nil
+      else Seq(sum(when(col("r") === 1 || col("r") === 4, 1L)
+        .otherwise(0L)).as("outc"))
+    val edgeRoles = endpointRoles(a, 1, 2).unionAll(endpointRoles(b, 4, 8))
+    val (rows, coverage) = round0 match {
+      case Some((t0, canon)) =>
+        (edgeRoles.unionAll(t0.select(col("node"),
+            when(canon, 16).otherwise(32).as("r"))),
+          Seq(max(when(col("r") >= 16, 1).otherwise(0)).as("r0"),
+            sum(when(col("r") === 32, 1L).otherwise(0L)).as("off0")))
+      case None => (edgeRoles, Nil)
+    }
+    val aggs = roles ++ degree ++ coverage
+    cutTracked(rows.groupBy(col("node")).agg(aggs.head, aggs.tail: _*),
+      checkpointDir)
+  }
+
+  /** Every named pre-flight number in ONE action: `checks` aggregate
+    * the flags, and each of `probes` is a one-row frame riding a
+    * broadcast cross join. Returns name -> value.
+    */
+  private def preflight(flags: DataFrame, checks: Seq[Column],
+                        probes: Seq[DataFrame] = Nil)
+      : Map[String, Long] = {
+    val row = probes.foldLeft(flags.agg(checks.head, checks.tail: _*))(
+      (acc, p) => acc.crossJoin(broadcast(p))).head()
+    row.schema.fieldNames.map(n => n -> row.getLong(row.fieldIndex(n)))
+      .toMap
+  }
+
+  /** The recurrence's canonical round 0: every step's column at its
+    * `init` value.
+    */
+  private def canonicalRound0(rec: Recurrence): Column =
+    rec.steps.map(s => col(s.col) === decLit(s.init)).reduce(_ && _)
+
+  /** The flag rows where `cond` holds, as a node frame — or, when the
+    * pre-flight counted none, an empty one that Catalyst folds to an
+    * empty LOCAL relation, pruning every union and join over it.
+    */
+  private def nodesWhere(flags: DataFrame, cond: Column,
+                         any: Boolean): DataFrame =
+    flags.where(if (any) cond else lit(false)).select(col("node"))
 
   private def violationText(violations: Map[String, Long]): String =
     violations.map {
@@ -871,20 +853,18 @@ object Graph {
     * ONLY those partition directories — literal partition pruning,
     * visible in the plan as `PartitionFilters: [sb IN (…)]`. Every
     * src-keyed fold probe — hop expansion, degree extraction, the
-    * driver path's BFS — then reads frontier-proportional FILE
-    * bytes instead of the full artifact WHEN the frontier is
+    * driver fold's out-edge probes — then reads frontier-proportional
+    * FILE bytes instead of the full artifact WHEN the frontier is
     * selective ([[pruneOrWhole]] — a dense frontier keeps the warm
-    * cache); only the one dst-keyed in-edge extract always scans
-    * everything. At 100 TB the edge frame cannot live in cache, so
+    * cache). At 100 TB the edge frame cannot live in cache, so
     * pruned parquet reads are the difference between a fold hop
     * costing O(frontier) and O(graph) I/O.
     *
     * `scanDst`, when present, is the same contract for a SECOND copy
     * of the artifact partitioned by `db = pmod(xxhash64(dst),
-    * buckets)` — it makes the one dst-keyed probe (the frontier
-    * IN-EDGE extract, the only fold scan `scan` cannot prune)
-    * frontier-proportional too, at the disclosed cost of 2× artifact
-    * storage.
+    * buckets)` — it makes the dst-keyed probes (the frontier IN-EDGE
+    * extract, which `scan` cannot prune) frontier-proportional too,
+    * at the disclosed cost of 2× artifact storage.
     */
   private[graft] final case class EdgeLayout(
       buckets: Int, scan: Seq[Int] => DataFrame,
@@ -892,12 +872,12 @@ object Graph {
 
   /** Frame capture for ExplainAudit's fold-layout pin: when the
     * `graft.fold.audit` system property is `true`, the distributed
-    * fold records its pruned hop probe ("hop") and its final
-    * trace-patch compose ("compose") here, pre-cut. The fold's
-    * intermediate frames are consumed by eager cuts, so their plans
-    * are invisible on the returned frame — this is the only window
-    * the audit has. Debug-only: never read (and never populated) in
-    * production paths.
+    * fold records its pruned hop probe ("hop"), its in-edge extract
+    * ("inedge") and its final trace-patch compose ("compose") here,
+    * pre-cut. The fold's intermediate frames are consumed by eager
+    * cuts, so their plans are invisible on the returned frame — this
+    * is the only window the audit has. Debug-only: never read (and
+    * never populated) in production paths.
     */
   private[graft] val foldAuditFrames =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
@@ -906,10 +886,8 @@ object Graph {
       foldAuditFrames.put(key, df)
 
   /** The partition-bucket ids a node frame's values hash into — at
-    * most `buckets` ints from one tiny distinct-aggregate (over a
-    * LOCAL relation when the frontier is driver-resident, which
-    * never touches the cluster). Must mirror the writer's
-    * `pmod(xxhash64(src), buckets)` exactly.
+    * most `buckets` ints from one tiny distinct-aggregate. Must
+    * mirror the writer's `pmod(xxhash64(src), buckets)` exactly.
     */
   private def bucketIds(nodes: DataFrame, buckets: Int): Seq[Int] =
     nodes.select(pmod(xxhash64(col(nodes.columns.head)),
@@ -921,8 +899,8 @@ object Graph {
     * expressions themselves (same hash seed, same modulo semantics —
     * bit-identical to the writer's partition column) with zero
     * cluster jobs. The driver fold probes a handful of frontiers per
-    * run; each used to pay a scheduler round-trip just to learn
-    * which buckets its LOCAL node set hashes into.
+    * run; each would otherwise pay a scheduler round-trip just to
+    * learn which buckets its LOCAL node set hashes into.
     */
   private def bucketIdsDriver(
       nodes: Iterable[Any],
@@ -938,124 +916,146 @@ object Graph {
     }.toSet.toSeq.sorted(Ordering.Int)
   }
 
-  /** The per-probe prune-vs-cache call: a pruned parquet scan reads
-    * `ids.size / buckets` of the artifact from DISK, a whole-frame
-    * probe reads the warm CACHE — the slice only wins when the
-    * frontier is genuinely selective (≤ 1/4 of the buckets; a dense
-    * small-scale frontier populates every bucket and pruning would
-    * just bypass the cache). At 100 TB a 1 %-delta frontier of a
-    * well-bucketed artifact hashes into few buckets, so the big-data
-    * regime prunes by construction. `graft.fold.forcePrune` (set by
-    * ExplainAudit) forces the pruned plan so its SHAPE can be pinned
-    * at any scale — the threshold decides when, the pin verifies
-    * what.
+  /** The frame an edge probe keyed by `src` (or, with `dstKeyed`, by
+    * `dst`) reads: the layout's slice for the probing frontier's
+    * buckets (`ids(buckets)`) when that is selective, else `whole`.
+    * A pruned parquet scan reads `ids.size / buckets` of the
+    * artifact from DISK, a whole-frame probe reads the warm CACHE —
+    * the slice only wins when the frontier is genuinely selective
+    * (≤ 1/4 of the buckets; a dense small-scale frontier populates
+    * every bucket and pruning would just bypass the cache). At
+    * 100 TB a 1 %-delta frontier of a well-bucketed artifact hashes
+    * into few buckets, so the big-data regime prunes by
+    * construction. A dst-keyed probe prunes only against the
+    * layout's dst-partitioned companion; without one it reads
+    * `whole`. `graft.fold.forcePrune` (set by ExplainAudit) forces
+    * the pruned plan so its SHAPE can be pinned at any scale — the
+    * threshold decides when, the pin verifies what.
     */
-  private def pruneOrWhole(layout: Option[EdgeLayout],
-                           frontier: DataFrame,
-                           whole: DataFrame): DataFrame =
-    layout match {
-      case Some(l) =>
-        val ids = bucketIds(frontier, l.buckets)
-        val force = sys.props.get("graft.fold.forcePrune")
-          .contains("true")
-        if (force || ids.size * 4 <= l.buckets) l.scan(ids)
-        else whole
-      case None => whole
-    }
-
-  /** [[pruneOrWhole]] for the DST-keyed in-edge extract: prunes the
-    * dst-partitioned companion artifact to the frontier's buckets
-    * when the layout carries one (same selectivity threshold / force
-    * pin). Without a companion the extract scans `whole` — the one
-    * fold probe the src layout can never prune.
-    */
-  private def pruneDstOrWhole(layout: Option[EdgeLayout],
-                              frontier: DataFrame,
-                              whole: DataFrame): DataFrame =
-    layout.flatMap(l => l.scanDst.map((l.buckets, _))) match {
-      case Some((buckets, scanDst)) =>
-        val ids = bucketIds(frontier, buckets)
-        val force = sys.props.get("graft.fold.forcePrune")
-          .contains("true")
-        if (force || ids.size * 4 <= buckets) scanDst(ids)
-        else whole
-      case None => whole
-    }
-
-  /** The shared frontier fold: re-iterate ONLY the dirty frontier
-    * over the new frame `e` (plain `src, dst, w` — degrees are
-    * joined per-path below), copying every other node's score from
-    * the trace. `added` nodes (absent from the trace) enter at
-    * round-0 mass `scale` and MUST be contained in `dirty1` (both
-    * callers guarantee it) — being permanently dirty, their scores
-    * are recomputed fresh every round and the filler they ride into
-    * the patched view never survives the coalesce.
-    *
-    * ONE over-approximated frontier serves EVERY round:
-    * `dirtyAll = ∪_{i<k} outNbr^i(dirty1)` (a short eager-cut
-    * expansion pre-pass). Soundness is the existing containment
-    * argument — the exact round-t dirty set is a subset of
-    * `dirtyAll`, and recomputing a covered-but-unchanged node is
-    * harmless (its inflow over the patched frame reproduces the
-    * trace value bit-for-bit).
-    *
-    * The fold then SIZES the frontier and picks one of two
-    * physically different (numerically identical) round strategies:
-    *
-    *  - BROADCAST (frontier ≤ `bcLimit`, the production small-delta
-    *    profile): every hop, the frontier's in-edge extraction, the
-    *    frontier sources' degree lookup, the per-round inflow and
-    *    the trace patch are all broadcast-hash probes of scans —
-    *    ZERO shuffles of the edge frame, and each round's one
-    *    node-sized cost is the scan of the trace element it
-    *    patches. Per-round state (the fresh scores) is eagerly cut
-    *    and the superseded round released immediately.
-    *  - SHUFFLE (a delta so large its frontier rivals the graph):
-    *    the original semi-join rounds over the degree-pre-joined
-    *    edge frame, composed into ONE lazy plan executed by the
-    *    final cut — at that frontier size a broadcast would OOM the
-    *    executors, and the full re-rank's economics apply anyway.
-    *
-    * Either way the final compose is ONE eager node-sized cut, so
-    * every internal frame is released before returning — callers
-    * can free their inputs the moment this returns.
-    */
-  private def foldCore(e: DataFrame, firstHop: Seq[DataFrame],
-                       seeds: DataFrame, added: DataFrame,
-                       trace: Seq[DataFrame],
-                       num: Long, den: Long, scale: Long,
-                       checkpointDir: Option[String],
-                       maxBroadcastBytes: Long,
-                       layout: Option[EdgeLayout] = None,
-                       weighted: Boolean = true): DataFrame = {
-    val addedRows = added.select(col("node"))
-    foldDriver(e, firstHop, seeds, addedRows, trace, num, den,
-      scale, checkpointDir, maxBroadcastBytes, layout, weighted)
-      .getOrElse {
-        // budget blown somewhere — the honest distributed plan:
-        // cut-based frontier seeding, then shuffle rounds. With a
-        // layout hint the seed hop probes only the seeds' partition
-        // buckets (the hint implies the pure-addition form, where
-        // the single first-hop frame IS `e`).
-        val (srcs, sp) = cutTracked(seeds, checkpointDir)
-        val hopFrames = layout match {
-          case Some(_) => Seq(pruneOrWhole(layout, srcs, e))
-          case None => firstHop
-        }
-        val hop1 = hopFrames.map(f =>
-            f.join(srcs.withColumnRenamed("node", "__f"),
-              f("src") === col("__f"))
-            .select(f("dst").as("node")))
-          .reduce(_ unionAll _)
-        val (dirty1, dp) = cutTracked(
-          hop1.unionAll(addedRows).distinct(), checkpointDir)
-        val out = foldShuffle(e, trace, dirty1, addedRows, num, den,
-          scale, checkpointDir, layout, weighted)
-        release(dp)
-        release(sp)
-        out
+  private def pruneOrWhole(layout: Option[EdgeLayout], dstKeyed: Boolean,
+                           whole: DataFrame)(ids: Int => Seq[Int])
+      : DataFrame =
+    layout.flatMap(l =>
+        (if (dstKeyed) l.scanDst else Some(l.scan)).map(l.buckets -> _))
+      match {
+        case Some((buckets, scan)) =>
+          val b = ids(buckets)
+          if (sys.props.get("graft.fold.forcePrune").contains("true") ||
+              b.size * 4 <= buckets) scan(b)
+          else whole
+        case None => whole
       }
+
+  /** One half-step of a rank recurrence: the trace column `col` it
+    * rewrites; whether a node's score sums over its in-edges (`in`)
+    * or its out-edges; the step (by index) whose score it reads at
+    * each edge's far end, from the previous round (`lag` 1) or from
+    * this round (`lag` 0, only for a step earlier in the round); and
+    * the step's canonical round-0 value.
+    */
+  private final case class Step(col: String, in: Boolean, reads: Int,
+                                lag: Int, init: BigInt)
+
+  /** A rank recurrence the frontier fold runs — its half-steps and
+    * the round arithmetic, in BigInt for the driver fold and as
+    * DECIMAL(38,0) columns for the distributed one (both exact
+    * integer floors, so the two agree bit-for-bit). A node's new
+    * score is `finish(Σ share(far-end score, w, deg))` over its
+    * step's edges; `byDegree` recurrences divide by the edge
+    * source's total out-weight `deg`.
+    */
+  private sealed trait Recurrence {
+    def steps: Seq[Step]
+    def weighted: Boolean
+    def byDegree: Boolean
+    def share(v: BigInt, w: BigInt, deg: BigInt): BigInt
+    def finish(sum: BigInt): BigInt
+    def shareCol(v: Column, w: Column, deg: Column): Column
+    def finishCol(sum: Column): Column
   }
+
+  /** Unseeded, dangling-free PageRank: one score per round over
+    * in-edges, `share = floor(pr·w / deg)` and
+    * `pr' = floor((den−num)·scale/den) + floor(num·Σ share / den)` —
+    * the [[pagerank]] update with D ≡ 0 and S = N.
+    */
+  private final case class PageRank(num: Long, den: Long, scale: Long,
+                                    weighted: Boolean)
+      extends Recurrence {
+    val steps = Seq(Step("pr", in = true, reads = 0, lag = 1,
+      init = BigInt(scale)))
+    def byDegree = true
+    private val base = BigInt(den - num) * BigInt(scale) / BigInt(den)
+    def share(v: BigInt, w: BigInt, deg: BigInt): BigInt = v * w / deg
+    def finish(sum: BigInt): BigInt = base + BigInt(num) * sum / den
+    def shareCol(v: Column, w: Column, deg: Column): Column =
+      if (weighted) floorDiv(v * w, deg) else floorDiv(v, deg)
+    def finishCol(sum: Column): Column =
+      decLit(base) +
+        floorDiv(lit(num).cast(Dec) * sum, lit(den).cast(Dec))
+  }
+
+  /** Raw HITS ([[hitsTrace]]): two alternating half-steps of plain
+    * sums, `a_t(v) = Σ_{u→v} h_{t−1}(u)` over in-edges, then
+    * `h_t(u) = Σ_{u→v} a_t(v)` over out-edges.
+    */
+  private case object RawHits extends Recurrence {
+    val steps = Seq(
+      Step("a_raw", in = true, reads = 1, lag = 1, init = BigInt(0)),
+      Step("h_raw", in = false, reads = 0, lag = 0, init = BigInt(1)))
+    def weighted = false
+    def byDegree = false
+    def share(v: BigInt, w: BigInt, deg: BigInt): BigInt = v
+    def finish(sum: BigInt): BigInt = sum
+    def shareCol(v: Column, w: Column, deg: Column): Column = v
+    def finishCol(sum: Column): Column = sum
+  }
+
+  /** Where one step's frontier starts: `direct` nodes are dirty
+    * outright (an added node, a changed in-multiset); `via` nodes'
+    * outgoing shares changed (a changed out-degree), so their
+    * neighbors along the step's edges are dirty.
+    */
+  private final case class Seeds(direct: DataFrame,
+                                 via: Option[DataFrame] = None)
+
+  /** The rank family's ONE incremental fold — one kernel, two
+    * recurrences: [[PageRank]] for [[pagerankDelta]] and
+    * [[pagerankRefresh]], [[RawHits]] for [[hitsDelta]]. It re-runs
+    * recurrence `rec` over the new edge frame `e` (plain
+    * `src, dst[, w]`) for ONLY the dirty frontier, copying every
+    * other node's score from the trace, and returns the patched final
+    * trace element. One pre-flight ([[endpointFlags]]), one
+    * driver-resident fold and one distributed fold serve both; only
+    * the recurrence's steps and round arithmetic differ.
+    *
+    * Frontier: step X's dirty set at round t is
+    * `seeds ∪ nbr(dirty set of the step X reads ∪ via)` — a node is
+    * dirty when an edge's far end is. Every such recurrence is
+    * MONOTONE in t (round 1's set is contained in round 2's, and so
+    * on), so the round-k frontier covers every round. Recomputing a
+    * covered-but-unchanged node is harmless: its sum over the patched
+    * frame reproduces the trace value bit-for-bit. `added` nodes
+    * (absent from the trace) must sit in every step's seeds; being
+    * permanently dirty, they enter at the step's round-0 value.
+    * Round 0 is the canonical placement everywhere (the callers'
+    * pre-flight), so it is read from `init`, never from the trace.
+    *
+    * Dispatch: a frontier whose edges fit `maxBroadcastBytes` folds
+    * driver-resident ([[foldDriver]]); past the budget the fold runs
+    * distributed ([[foldDistributed]]). Either way the result is ONE
+    * eager node-sized cut, so every internal frame is released
+    * before returning.
+    */
+  private def fold(rec: Recurrence, e: DataFrame, seeds: Seq[Seeds],
+                   added: DataFrame, trace: Seq[DataFrame],
+                   checkpointDir: Option[String],
+                   maxBroadcastBytes: Long,
+                   layout: Option[EdgeLayout] = None): DataFrame =
+    foldDriver(rec, e, seeds, added, trace, checkpointDir,
+        maxBroadcastBytes, layout)
+      .getOrElse(foldDistributed(rec, e, seeds, added, trace,
+        checkpointDir, layout))
 
   /** Rows admissible under a BYTE budget for a schema: budget
     * divided by the estimated row width (field defaultSizes + 16
@@ -1074,19 +1074,24 @@ object Graph {
     (maxBytes / width.max(1)).max(1L)
   }
 
-  /** Collect one frame's rows within the byte budget (row cap =
-    * [[byteRowLimit]] of the frame's own schema): `None` when it
-    * holds more. The `limit(n+1)` bounds the collect ITSELF — an
+  /** Collect at most `rowLimit` rows of a frame: `None` when it holds
+    * more. The `limit(n+1)` bounds the collect ITSELF — an
     * over-budget frame costs one row past the limit, never a driver
     * OOM.
     */
-  private def collectBounded(df: DataFrame, maxBytes: Long)
+  private def collectUpTo(df: DataFrame, rowLimit: Long)
       : Option[Array[org.apache.spark.sql.Row]] = {
-    val rowLimit = byteRowLimit(df.schema, maxBytes)
     val rows = df.limit((rowLimit + 1).min(Int.MaxValue).toInt)
       .collect()
     if (rows.length > rowLimit) None else Some(rows)
   }
+
+  /** [[collectUpTo]] the rows of `df` a byte budget admits
+    * ([[byteRowLimit]] of the frame's own schema).
+    */
+  private def collectBounded(df: DataFrame, maxBytes: Long)
+      : Option[Array[org.apache.spark.sql.Row]] =
+    collectUpTo(df, byteRowLimit(df.schema, maxBytes))
 
   /** Run `body` with limit-collects executing as ONE single-wave job
     * — the default CollectLimit escalation (1 partition, then 4×…)
@@ -1131,423 +1136,387 @@ object Graph {
         org.apache.spark.sql.types.StructField(name, dt))))
   }
 
-  /** Driver-resident fold rounds — the small-delta production
-    * profile. The broadcast budget is the admission test: a
-    * frontier (plus its in-edges and their degree totals) inside
-    * `maxBroadcastBytes` is BY DEFINITION driver-collectable — it is
-    * exactly what every broadcast join would ship to the driver
-    * anyway, so collect it ONCE and run the k rounds as exact BigInt
-    * arithmetic with zero cluster round-trips (the distributed
-    * variant paid a broadcast exchange and a checkpoint per round —
-    * ~10 scheduler round-trips per iteration that dominate the fold
-    * at small scale). Every collect is `limit`-bounded (see
-    * [[collectBounded]]): past the budget the fold returns None and
-    * the caller falls back to the distributed rounds.
-    *
-    * Cluster work that remains: one bounded probe of the edge scan
-    * per BFS hop (expanding only the hop's NEW nodes — the closure
-    * stops early when the frontier closes, e.g. cycles), one
-    * in-edge extract, one degree aggregate, one scan of the
-    * off-frontier sources' trace scores (all rounds in one tagged
-    * union), and the ONE node-sized compose that patches the final
-    * trace element — each a single job over the persisted frames.
-    * Arithmetic is BigInt floor division — identical values to the
-    * DECIMAL(38,0) plan (both are exact integer floors; spec- and
-    * oracle-pinned).
+  /** The driver fold's memo of the edge frame `e`: each node's
+    * out-edges (probed by `src`) and in-edges (by `dst`) as
+    * `(far end, w)` lists, every node probed at most ONCE per
+    * direction. A probe is one bounded collect of a broadcast join
+    * between the layout's pruned slice and a local frame of the
+    * not-yet-probed nodes; all probes together hold at most the
+    * edge rows `maxBytes` admits — one cumulative cap, past which
+    * [[probe]] answers false and the fold goes distributed.
     */
-  private def foldDriver(e: DataFrame, firstHop: Seq[DataFrame],
-                         seeds: DataFrame, addedRows: DataFrame,
+  private final class EdgeProbe(
+      e: DataFrame, layout: Option[EdgeLayout],
+      nodeType: org.apache.spark.sql.types.DataType,
+      weighted: Boolean, maxBytes: Long) {
+    import scala.collection.mutable
+    private val out, in = mutable.HashMap.empty[Any, List[(Any, BigInt)]]
+    private val probedOut, probedIn = mutable.HashSet.empty[Any]
+    private var held = 0L
+
+    /** Memoize the out-edges (`bySrc`) or in-edges of `nodes`. */
+    def probe(nodes: Iterable[Any], bySrc: Boolean): Boolean = {
+      val probed = if (bySrc) probedOut else probedIn
+      val fresh = nodes.filterNot(probed).toSet
+      fresh.isEmpty || {
+        val f = pruneOrWhole(layout, !bySrc, e)(
+          bucketIdsDriver(fresh, nodeType, _))
+        val (key, far) = if (bySrc) ("src", "dst") else ("dst", "src")
+        val probeFrame = f.join(
+            broadcast(localNodeFrame(e.sparkSession, fresh, "__f",
+              nodeType)), f(key) === col("__f"))
+          .select(f(key), f(far), if (weighted) f("w") else lit(1L))
+        collectUpTo(probeFrame,
+            byteRowLimit(probeFrame.schema, maxBytes) - held) match {
+          case Some(rows) =>
+            held += rows.length
+            probed ++= fresh
+            val memo = if (bySrc) out else in
+            rows.foreach { r =>
+              val w = r.get(2) match {
+                case d: java.math.BigDecimal => BigInt(d.toBigInteger)
+                case n: Number => BigInt(n.longValue)
+              }
+              memo.update(r.get(0), (r.get(1), w) ::
+                memo.getOrElse(r.get(0), Nil))
+            }
+            true
+          case None => false
+        }
+      }
+    }
+
+    /** The memoized edges at `n`: in-edges for an in-step, else
+      * out-edges, as `(far end, w)`.
+      */
+    def edges(n: Any, inEdges: Boolean): List[(Any, BigInt)] =
+      (if (inEdges) in else out).getOrElse(n, Nil)
+  }
+
+  /** Driver-resident fold — the small-delta production profile. The
+    * broadcast budget is the admission test: a frontier (plus its
+    * edges and their degree totals) inside `maxBroadcastBytes` is BY
+    * DEFINITION driver-collectable — it is exactly what every
+    * broadcast join would ship to the driver anyway, so collect it
+    * ONCE and run the k rounds as exact BigInt arithmetic with zero
+    * cluster round-trips. Every collect is bounded: past the budget
+    * the fold returns None and [[fold]] goes distributed.
+    *
+    * Cluster work that remains: one bounded collect of each seed
+    * set (added nodes sit in the seeds; the compose reads `added`
+    * itself), one [[EdgeProbe]] per expansion step that meets new nodes
+    * (the closure stops early when the frontier closes, e.g.
+    * cycles), one degree aggregate for `byDegree` recurrences, one
+    * scan of the off-frontier far ends' trace scores (all rounds in
+    * one tagged union), and the ONE node-sized [[compose]] that
+    * patches the final trace element.
+    */
+  private def foldDriver(rec: Recurrence, e: DataFrame,
+                         seeds: Seq[Seeds], added: DataFrame,
                          trace: Seq[DataFrame],
-                         num: Long, den: Long, scale: Long,
                          checkpointDir: Option[String],
-                         maxBroadcastBytes: Long,
-                         layout: Option[EdgeLayout] = None,
-                         weighted: Boolean = true)
+                         maxBytes: Long,
+                         layout: Option[EdgeLayout])
       : Option[DataFrame] = {
-    val iterations = trace.length - 1
+    val k = trace.length - 1
+    val steps = rec.steps
     val spark = e.sparkSession
-    val nodeType = seeds.schema("node").dataType
-    // with a layout hint, every src-keyed probe frame is the PRUNED
-    // slice of the artifact for the probing frontier's buckets — the
-    // bucket ids of a DRIVER-RESIDENT frontier evaluate through the
-    // catalyst expressions with no cluster job ([[bucketIdsDriver]]);
-    // without a hint, the probe scans `f` whole
-    def srcProbe(f: DataFrame, frontier: Iterable[Any]): DataFrame =
-      layout match {
-        case Some(l) =>
-          val ids = bucketIdsDriver(frontier, nodeType, l.buckets)
-          val force = sys.props.get("graft.fold.forcePrune")
-            .contains("true")
-          if (force || ids.size * 4 <= l.buckets) l.scan(ids)
-          else f
-        case None => f
-      }
-    // the dst-keyed twin for the frontier in-edge extract — pruned
-    // against the dst-partitioned companion artifact when the layout
-    // carries one (see [[EdgeLayout.scanDst]])
-    def dstProbe(f: DataFrame, frontier: Iterable[Any]): DataFrame =
-      layout.flatMap(l => l.scanDst.map((l.buckets, _))) match {
-        case Some((buckets, scanDst)) =>
-          val ids = bucketIdsDriver(frontier, nodeType, buckets)
-          val force = sys.props.get("graft.fold.forcePrune")
-            .contains("true")
-          if (force || ids.size * 4 <= buckets) scanDst(ids)
-          else f
-        case None => f
-      }
+    val nodeType = added.schema("node").dataType
     // cap for driver-resident NODE SETS (collected frames are capped
-    // per-frame by collectBounded's own byte-derived row limit)
-    val nodeLimit = (maxBroadcastBytes /
-      (nodeType.defaultSize + 16)).max(1L)
-    def localFrame(nodes: Iterable[Any], name: String): DataFrame =
+    // per-frame by their own byte-derived row limit)
+    val nodeLimit = (maxBytes / (nodeType.defaultSize + 16)).max(1L)
+    def local(nodes: Iterable[Any], name: String): DataFrame =
       localNodeFrame(spark, nodes, name, nodeType)
+    def nodesOf(df: DataFrame): Option[Set[Any]] =
+      collectBounded(df.select(col("node")), maxBytes)
+        .map(_.iterator.map(_.get(0)).toSet)
     def big(d: java.math.BigDecimal): BigInt = BigInt(d.toBigInteger)
+    val probe = new EdgeProbe(e, layout, nodeType, rec.weighted,
+      maxBytes)
     withSingleWaveLimit(spark) { for {
-      seedArr <- collectBounded(seeds.select(col("node")),
-        maxBroadcastBytes)
-      addedArr <- collectBounded(addedRows, maxBroadcastBytes)
-      // dirty₁ = the seeds' out-neighbors in every first-hop frame
-      // (the refresh form probes BOTH the old and new frames — a
-      // removal dirties nodes the new frame no longer reaches from
-      // that source), plus every added node
-      d1 <- {
-        val seedSet = seedArr.map(_.get(0)).toSet
-        val sf = localFrame(seedSet, "__f")
-        // the layout hint implies the pure-addition form, whose one
-        // first-hop frame IS `e` — probe its pruned slice instead
-        val hopFrames = layout match {
-          case Some(_) => Seq(srcProbe(e, seedSet))
-          case None => firstHop
-        }
-        hopFrames.foldLeft(
-            Option(addedArr.map(_.get(0)).toSet)) { (acc, f) =>
-          acc.flatMap(s =>
-            collectBounded(
-              f.join(broadcast(sf), f("src") === col("__f"))
-                .select(f("dst").as("node")), maxBroadcastBytes)
-              .map(rows => s ++ rows.iterator.map(_.get(0))))
-        }.filter(_.size <= nodeLimit)
+      seedSets <- seeds.foldLeft(Option(Vector.empty[(Set[Any],
+          Set[Any])])) { (acc, s) =>
+        for {
+          v <- acc
+          d <- nodesOf(s.direct)
+          p <- s.via.fold(Option(Set.empty[Any]))(nodesOf)
+        } yield v :+ (d -> p)
       }
-      // depth-bounded BFS union, expanding each node ONCE (a node
-      // first reached at depth d contributes its out-neighbors at
-      // depth d+1 — fresh-only expansion IS the layered union) and
-      // stopping early when the frontier closes. (A fused all-hops
-      // plan was tried and reverted: chained joins either shuffle
-      // the whole edge frame per level — measured 5 × 13.6 MB edge
-      // exchanges where this loop has zero — or, broadcast-hinted,
-      // pay one broadcast-build job per level, the same scheduler
-      // round-trips this loop already pays.)
-      all <- {
-        var acc = d1
-        var frontier = acc
-        var hop = 2
-        var blown = false
-        while (hop <= iterations && frontier.nonEmpty && !blown) {
-          val fr = localFrame(frontier, "__f")
-          val pe = srcProbe(e, frontier)
-          collectBounded(
-            pe.join(broadcast(fr), pe("src") === col("__f"))
-              .select(pe("dst").as("node")), maxBroadcastBytes) match {
-            case Some(rows) =>
-              val next = rows.map(_.get(0)).toSet -- acc
-              acc ++= next
-              frontier = next
-              if (acc.size > nodeLimit) blown = true
-            case None => blown = true
+      // the monotone frontiers, one per step, expanded a round at a
+      // time until round k or until a whole round adds nothing
+      frontier <- {
+        val f = Array.fill(steps.size)(Set.empty[Any])
+        var ok = true
+        var grew = true
+        var t = 0
+        while (ok && grew && t < k) {
+          t += 1
+          grew = false
+          for ((s, i) <- steps.zipWithIndex if ok) {
+            val (direct, via) = seedSets(i)
+            val from = f(s.reads) ++ via
+            // an in-step's far ends are its sources: their
+            // out-neighbors turn dirty, and vice versa
+            ok = probe.probe(from, bySrc = s.in)
+            if (ok) {
+              val next = f(i) ++ direct ++ from.iterator.flatMap(n =>
+                probe.edges(n, inEdges = !s.in).map(_._1))
+              grew ||= next.size > f(i).size
+              f(i) = next
+              ok = next.size <= nodeLimit
+            }
           }
-          hop += 1
         }
-        if (blown) None else Some(acc)
+        // every step's own edges: in-edges of an in-step's frontier,
+        // out-edges of an out-step's
+        if (ok) ok = steps.zipWithIndex.forall { case (s, i) =>
+          probe.probe(f(i), bySrc = !s.in) }
+        if (ok) Some(f.toSeq) else None
       }
-      // the frontier's in-edges (src, dst[, w]) — the only edges
-      // whose shares can change a frontier score; with a dst-
-      // partitioned companion artifact this probe reads only the
-      // frontier's dst buckets instead of the artifact whole
-      fE <- {
-        val ie = dstProbe(e, all)
-        collectBounded(
-          ie.join(broadcast(localFrame(all, "__t")),
-            ie("dst") === col("__t"))
-          .select(Seq(ie("src").as("src"), ie("dst").as("dst")) ++
-            (if (weighted) Seq(ie("w")) else Nil): _*),
-          maxBroadcastBytes)
-      }
-      // out-degree TOTALS for frontier-in-edge sources only (each
-      // source's full out-edge sum — aggregated cluster-side, so the
-      // collect is source-set-sized even for hub sources; unweighted
-      // degrees are long counts, w ≡ 1 sums exactly)
-      srcsF = fE.map(_.get(0)).toSet
-      degRows <- {
-        val sFrame = localFrame(srcsF, "__s")
-        val de = srcProbe(e, srcsF)
-        collectBounded(
-          de.join(broadcast(sFrame), de("src") === col("__s"))
-          .groupBy(de("src").as("src"))
-          .agg((if (weighted) sum(col("w")) else count(lit(1)))
-            .cast(Dec).as("deg")), maxBroadcastBytes)
-      }
-      // prior-round trace scores for sources OUTSIDE the frontier
-      // (frontier scores are recomputed; round 0 is `scale`
-      // everywhere by the unseeded precondition) — all rounds in ONE
-      // tagged-union scan
-      addedSet = addedArr.map(_.get(0)).toSet
-      outside = srcsF -- all -- addedSet
-      traceScores <- {
-        if (iterations < 2 || outside.isEmpty)
-          Some(Map.empty[(Int, Any), BigInt])
+      // out-degree TOTALS of every edge source a byDegree step reads
+      // (each source's full out-edge sum — aggregated cluster-side,
+      // so the collect is source-set-sized even for hub sources;
+      // unweighted degrees are long counts, w ≡ 1 sums exactly)
+      deg <- {
+        val srcs = if (!rec.byDegree) Set.empty[Any]
+          else steps.zipWithIndex.iterator.flatMap { case (s, i) =>
+            frontier(i).iterator.flatMap(n =>
+              if (s.in) probe.edges(n, inEdges = true).map(_._1)
+              else Iterator.single(n)) }.toSet
+        if (srcs.isEmpty) Some(Map.empty[Any, BigInt])
         else {
-          val tagged = (1 until iterations).map(t =>
-              trace(t).select(lit(t).as("__rt"), col("node"),
-                col("pr")))
+          val de = pruneOrWhole(layout, dstKeyed = false, e)(
+            bucketIdsDriver(srcs, nodeType, _))
+          collectBounded(
+            de.join(broadcast(local(srcs, "__s")), de("src") === col("__s"))
+              .groupBy(de("src").as("src"))
+              .agg((if (rec.weighted) sum(col("w")) else count(lit(1)))
+                .cast(Dec).as("deg")), maxBytes)
+            .map(_.iterator.map(r => r.get(0) -> big(r.getDecimal(1)))
+              .toMap)
+        }
+      }
+      // trace scores of the far ends OUTSIDE the frontier of the
+      // step they read (frontier scores are recomputed; round 0 is
+      // the canonical `init`) — every round in ONE tagged-union scan
+      traceVals <- {
+        val lastRound = k - steps.map(_.lag).min
+        val outside = steps.zipWithIndex.iterator.flatMap { case (s, i) =>
+          frontier(i).iterator.flatMap(n =>
+            probe.edges(n, inEdges = s.in).map(_._1))
+            .filterNot(frontier(s.reads)) }.toSet
+        if (lastRound < 1 || outside.isEmpty)
+          Some(Map.empty[(Int, Any), IndexedSeq[BigInt]])
+        else {
+          val cols = steps.map(s => col(s.col))
+          val tagged = (1 to lastRound).map(r =>
+              trace(r).select(lit(r).as("__rt") +: col("node") +: cols: _*))
             .reduce(_ unionAll _)
           collectBounded(
-            tagged.join(broadcast(localFrame(outside, "node")),
-              Seq("node"))
-            .select(col("__rt"), col("node"), col("pr")),
-            maxBroadcastBytes)
-            .map(_.map(r => (r.getInt(0), r.get(1)) ->
-              big(r.getDecimal(2))).toMap)
+            tagged.join(broadcast(local(outside, "node")), Seq("node"))
+              .select(col("__rt") +: col("node") +: cols: _*),
+            maxBytes)
+            .map(_.iterator.map(r => (r.getInt(0), r.get(1)) ->
+              steps.indices.map(j => big(r.getDecimal(2 + j)))).toMap)
         }
       }
     } yield {
-      val edges =
-        if (weighted)
-          fE.map(r => (r.get(0), r.get(1), big(r.getDecimal(2))))
-        else fE.map(r => (r.get(0), r.get(1), BigInt(1)))
-      val deg = degRows.map(r => r.get(0) -> big(r.getDecimal(1)))
-        .toMap
-      val baseB = BigInt(den - num) * BigInt(scale) / BigInt(den)
-      val numB = BigInt(num)
-      val denB = BigInt(den)
-      val scaleB = BigInt(scale)
-      // k rounds of exact BigInt floor arithmetic over the collected
-      // frontier — identical recurrence to the distributed plan
-      var fresh: Map[Any, BigInt] = null
-      for (t <- 1 to iterations) {
-        def prevScore(n: Any): BigInt =
-          if (t == 1) scaleB // round 0: `scale` everywhere (added too)
-          else if (all.contains(n) || addedSet.contains(n)) fresh(n)
-          else traceScores((t - 1, n))
-        val inflow = new scala.collection.mutable.HashMap[Any, BigInt]()
-        edges.foreach { case (s, d, w) =>
-          val share = prevScore(s) * w / deg(s)
-          inflow.update(d, inflow.getOrElse(d, BigInt(0)) + share)
-        }
-        fresh = (all ++ addedSet).iterator.map(n =>
-          n -> (baseB + numB * inflow.getOrElse(n, BigInt(0)) / denB))
-          .toMap
+      // k rounds of exact BigInt arithmetic over the collected
+      // frontier, each step in order (a lag-0 step reads the step
+      // this round just computed, a lag-1 step the previous round's)
+      val fresh = Array.fill(steps.size)(Map.empty[Any, BigInt])
+      for (t <- 1 to k; (s, i) <- steps.zipWithIndex) {
+        val r = t - s.lag
+        val j = s.reads
+        def score(m: Any): BigInt =
+          if (r == 0) steps(j).init
+          else if (frontier(j).contains(m)) fresh(j)(m)
+          else traceVals((r, m))(j)
+        fresh(i) = frontier(i).iterator.map { n =>
+          n -> rec.finish(probe.edges(n, inEdges = s.in)
+            .foldLeft(BigInt(0)) { case (acc, (m, w)) =>
+              acc + rec.share(score(m), w,
+                if (rec.byDegree) deg(if (s.in) m else n) else 1)
+            })
+        }.toMap
       }
-      // the ONE node-sized compose: patch the final trace element
-      // (plus added-node filler rows, always overwritten — added ⊆
-      // fresh) with the driver-computed frontier scores
-      if (fresh == null) fresh = Map.empty // 1-element trace: no rounds
-      val freshRows = fresh.iterator.map { case (n, v) =>
-        org.apache.spark.sql.Row(n,
-          new java.math.BigDecimal(v.bigInteger))
-      }.toSeq
+      val freshRows = frontier.flatten.distinct.map { n =>
+        org.apache.spark.sql.Row(n +: fresh.toSeq.map(_.get(n)
+          .map(v => new java.math.BigDecimal(v.bigInteger)).orNull): _*)
+      }
       import scala.jdk.CollectionConverters._
       val freshFrame = spark.createDataFrame(freshRows.asJava,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node", nodeType),
-          org.apache.spark.sql.types.StructField("__npr",
-            org.apache.spark.sql.types.DataTypes
-              .createDecimalType(38, 0)))))
-      val full = trace(iterations).select(col("node"), col("pr"))
-        .unionAll(addedRows.select(col("node"),
-          lit(0L).cast(Dec).as("pr")))
-      val (out, _) = cutTracked(
-        full.join(broadcast(freshFrame), Seq("node"), "left")
-          .select(col("node"),
-            coalesce(col("__npr"), col("pr")).as("pr")),
-        checkpointDir)
-      out
+        org.apache.spark.sql.types.StructType(
+          org.apache.spark.sql.types.StructField("node", nodeType) +:
+            steps.map(s => org.apache.spark.sql.types.StructField(
+              "__n" + s.col, org.apache.spark.sql.types.DataTypes
+                .createDecimalType(38, 0)))))
+      compose(trace(k), broadcast(freshFrame), added,
+        steps.map(_.col), checkpointDir)
     } }
   }
 
-  /** Distributed fold rounds — the large-frontier fallback: cut-based
-    * frontier expansion (AQE sizes each join off the checkpointed
-    * frames' real stats, broadcasting what fits) followed by
-    * semi-join rounds over the degree-pre-joined edge frame.
+  /** Distributed fold — the large-frontier fallback, in three
+    * passes:
+    *
+    *  - EXPAND the monotone frontiers once, through k rounds of cut
+    *    hops (AQE sizes each join off the checkpointed frames' real
+    *    stats, broadcasting what fits; with a layout hint each hop
+    *    reads only the frontier's partition buckets). The round-k
+    *    frontiers serve every round ([[fold]]).
+    *  - EXTRACT each step's edges once — in-edges of an in-step's
+    *    frontier, out-edges of an out-step's — with a `byDegree`
+    *    recurrence's source out-degree totals pre-joined, and cut
+    *    them: the k rounds then scan these frontier-proportional
+    *    frames and never the full edge frame. Each edge carries
+    *    whether its far end's score is recomputed (`__in`) or comes
+    *    from the trace verbatim, and the far ends are cut once
+    *    beside them.
+    *  - FOLD the k rounds as ONE lazy chain: each round's fresh frame
+    *    is referenced exactly once (by the step that reads it next),
+    *    so no per-round cut is needed — the final frontier-sized cut
+    *    of the last round's scores is the chain's one cluster action.
+    *
+    * NO node-sized shuffle anywhere: each round reads a trace
+    * element only to look up the step's far ends (frontier-sized)
+    * — the trace scan joins that set directly, so
+    * when the trace is a node-BUCKETED table the scan reaches its
+    * join without an Exchange over it. The one node-sized pass left
+    * is the closing [[compose]] of trace(k) — same no-trace-shuffle
+    * shape. A full re-rank pays an edge-sized shuffle join and a
+    * node-sized checkpoint EVERY round; the fold pays
+    * frontier-sized shuffles and ONE node-sized (shuffle-free)
+    * compose.
     */
-  private def foldShuffle(e: DataFrame, trace: Seq[DataFrame],
-                          dirty1: DataFrame, addedRows: DataFrame,
-                          num: Long, den: Long, scale: Long,
-                          checkpointDir: Option[String],
-                          layout: Option[EdgeLayout] = None,
-                          weighted: Boolean = true)
+  private def foldDistributed(rec: Recurrence, e: DataFrame,
+                              seeds: Seq[Seeds], added: DataFrame,
+                              trace: Seq[DataFrame],
+                              checkpointDir: Option[String],
+                              layout: Option[EdgeLayout])
       : DataFrame = {
-    val iterations = trace.length - 1
-    val base = lit((BigInt(den - num) * BigInt(scale) / BigInt(den))
-      .toString).cast(Dec)
+    val k = trace.length - 1
+    val steps = rec.steps
     val pins = Seq.newBuilder[RDD[_]]
-    var hop = dirty1
-    var frontierUnion = dirty1
-    for (_ <- 2 to iterations) {
-      // with a layout hint each hop reads ONLY the frontier's
-      // partition buckets — frontier-proportional file I/O per hop
-      // instead of a full artifact scan (the bucket-id aggregate is
-      // one tiny job over the checkpointed hop frame)
-      val he = pruneOrWhole(layout, hop, e)
-      val hopFrame = he.join(hop.withColumnRenamed("node", "__f"),
-          he("src") === col("__f"))
-        .select(he("dst").as("node")).distinct()
-      foldAudit("hop", hopFrame)
-      val (h2, hp) = cutTracked(hopFrame, checkpointDir)
-      pins ++= hp
-      hop = h2
-      frontierUnion = frontierUnion.unionAll(hop)
+    def keep(df: DataFrame): DataFrame = {
+      val (c, p) = cutTracked(df, checkpointDir)
+      pins ++= p
+      c
     }
-    val dirtyAll =
-      if (iterations <= 1) dirty1
-      else {
-        val (da, dap) = cutTracked(frontierUnion.distinct(),
-          checkpointDir)
-        pins ++= dap
-        da
+    def edgeCols(f: DataFrame): Seq[Column] =
+      Seq(f("src"), f("dst")) ++ (if (rec.weighted) Seq(f("w")) else Nil)
+    // the edges of `nodes` keyed by `key` ("src": out-edges, "dst":
+    // in-edges), pruned through the layout to the nodes' buckets
+    def edgesAt(nodes: DataFrame, key: String): DataFrame = {
+      val pe = pruneOrWhole(layout, key == "dst", e)(bucketIds(nodes, _))
+      pe.join(nodes.withColumnRenamed("node", "__k"),
+        pe(key) === col("__k"))
+    }
+    val frontier = Array.fill[Option[DataFrame]](steps.size)(None)
+    for (_ <- 1 to k; (s, i) <- steps.zipWithIndex) {
+      val from = (frontier(s.reads).toSeq ++ seeds(i).via)
+        .reduceOption(_ unionAll _)
+      val hop = from.map { f =>
+        val (key, far) = if (s.in) ("src", "dst") else ("dst", "src")
+        val h = edgesAt(f, key).select(col(far).as("node"))
+        foldAudit("hop", h)
+        h
       }
-    val out = foldRoundsShuffle(e, trace, dirtyAll, addedRows, num,
-      den, scale, base, checkpointDir, layout, weighted)
+      frontier(i) = Some(keep((seeds(i).direct.select(col("node")) +:
+        hop.toSeq).reduce(_ unionAll _).distinct()))
+    }
+    val dirty = frontier.map(_.get)
+    val stepEdges = steps.zipWithIndex.map { case (s, i) =>
+      val (key, far) = if (s.in) ("dst", "src") else ("src", "dst")
+      val x = edgesAt(dirty(i), key)
+      val extract = x.select(edgeCols(x): _*)
+      if (s.in) foldAudit("inedge", extract)
+      val eX = keep(extract)
+      // out-degree TOTALS of the extract's sources — summed over
+      // each source's full out-edge set (a function of src, so a
+      // layout hint prunes this scan to those sources' buckets)
+      val withDeg =
+        if (!rec.byDegree) eX
+        else eX.join(edgesAt(eX.select(col("src").as("node")).distinct(),
+              "src")
+            .groupBy(col("src").as("__dn"))
+            .agg((if (rec.weighted) sum(col("w")) else count(lit(1)))
+              .cast(Dec).as("deg")), col("__dn") === eX("src"))
+          .select(edgeCols(eX) :+ col("deg"): _*)
+      // `__in`: the step this one reads recomputes the far end's
+      // score, so the round takes it fresh instead of from the trace
+      keep(withDeg.join(dirty(s.reads).select(col("node").as("__r"),
+          lit(true).as("__rin")), col(far) === col("__r"), "left")
+        .select(withDeg.columns.map(col) :+
+          coalesce(col("__rin"), lit(false)).as("__in"): _*))
+    }
+    // every far end, cut once: the trace lookups join this set
+    // directly (never empty while the step has edges — an empty
+    // build side would let AQE re-plan mid-query)
+    val farEnds = steps.zipWithIndex.map { case (s, i) =>
+      keep(stepEdges(i).select(col(if (s.in) "src" else "dst").as("node"))
+        .distinct())
+    }
+    val fresh = Array.fill[Option[DataFrame]](steps.size)(None)
+    for (t <- 1 to k; (s, i) <- steps.zipWithIndex) {
+      val r = t - s.lag
+      val j = s.reads
+      val (near, far) = if (s.in) ("dst", "src") else ("src", "dst")
+      val x = stepEdges(i)
+      val shares =
+        if (r == 0)
+          x.select(col(near).as("node"), rec.shareCol(
+            decLit(steps(j).init), col("w"),
+            col("deg")).as("__sh"))
+        else {
+          // far-end scores: fresh where the read step recomputes the
+          // far end, the trace verbatim elsewhere — each edge meets
+          // exactly one through its `__in`
+          val scores = fresh(j).get
+            .select(col("node"), col("__v"), lit(true).as("__sin"))
+            .unionAll(trace(r).select(col("node"),
+                col(steps(j).col).as("__v"))
+              .join(farEnds(i), Seq("node"))
+              .select(col("node"), col("__v"), lit(false).as("__sin")))
+          x.join(scores.withColumnRenamed("node", "__m"),
+              col(far) === col("__m") && col("__in") === col("__sin"))
+            .select(col(near).as("node"), rec.shareCol(col("__v"),
+              col("w"), col("deg")).as("__sh"))
+        }
+      val sums = shares.groupBy(col("node"))
+        .agg(sum(col("__sh")).cast(Dec).as("__s"))
+      // NOT cut: single-reference linear chain (see scaladoc)
+      fresh(i) = Some(dirty(i).join(sums, Seq("node"), "left")
+        .select(col("node"), rec.finishCol(
+          coalesce(col("__s"), lit(0).cast(Dec))).as("__v")))
+    }
+    val last = keep(steps.indices.map(i => fresh(i).get
+        .select(col("node"), col("__v").as("__n" + steps(i).col)))
+      .reduce(_.join(_, Seq("node"), "full_outer")))
+    val out = compose(trace(k), last, added, steps.map(_.col),
+      checkpointDir)
     release(pins.result())
     out
   }
 
-  /** Shuffle-side fold rounds (see [[foldCore]]) — the
-    * large-frontier fallback. The frontier's in-edges are extracted
-    * ONCE, with each source's FULL out-degree total pre-joined, and
-    * eagerly cut: the k rounds then scan that frontier-proportional
-    * frame and never the full edge frame (the earlier shape
-    * persisted the ENTIRE degree-joined edge frame and re-scanned
-    * it every round — O(graph) × k bytes instead of O(frontier) × k;
-    * with a layout hint even the one-off degree extract prunes to
-    * the frontier sources' partition buckets). What the single
-    * frontier BUYS is linear lineage: each round's `fresh` frame is
-    * referenced exactly once (by the next round's source scores), so
-    * no per-round checkpoint is needed at all — the whole k-round
-    * fold composes into ONE lazy plan (k frontier-sized joins +
-    * aggregations over scans of the cut frames) executed by the
-    * final frontier cut as a single cluster action.
-    *
-    * NO node-sized shuffle anywhere: each round reads the trace
-    * element only to look up the scores of NEVER-DIRTY frontier
-    * in-edge sources (`srcsOut`, frontier-sized) — the trace scan
-    * joins that set directly, so when the trace is a node-BUCKETED
-    * table the scan reaches its join without an Exchange over it
-    * (the frontier-sized side shuffles into the trace's bucketing
-    * instead; the earlier shape unioned the full trace with added
-    * rows first, which erased the bucketing and re-shuffled the
-    * node-sized union every round). The one node-sized pass left is
-    * the closing patch of trace(k) — same no-trace-shuffle shape —
-    * against the ONE frontier-sized cut of the final fresh scores.
-    * A full re-rank pays an edge-sized shuffle join and a node-sized
-    * checkpoint EVERY round; the fold pays frontier-sized shuffles
-    * and ONE node-sized (shuffle-free) compose.
+  /** The closing patch both folds share: trace(k)'s `cols`, each
+    * coalesced against the frontier's fresh `__n<col>` value (dirty
+    * nodes win), plus the added nodes — present only in `fresh` —
+    * appended from it directly, as ONE eager node-sized cut. No
+    * union sits below the join, so a bucketed trace scan reaches the
+    * join unshuffled.
     */
-  private def foldRoundsShuffle(e: DataFrame, trace: Seq[DataFrame],
-                                dirtyAll: DataFrame,
-                                addedRows: DataFrame,
-                                num: Long, den: Long, scale: Long,
-                                base: Column,
-                                checkpointDir: Option[String],
-                                layout: Option[EdgeLayout] = None,
-                                weighted: Boolean = true)
-      : DataFrame = {
-    val iterations = trace.length - 1
-    // frontier in-edges, extracted once — the only edges whose
-    // shares can move a dirty score (unweighted frames carry no w).
-    // With a dst-partitioned companion artifact the extract prunes
-    // to the frontier's dst buckets — the last fold scan that used
-    // to read the artifact whole
-    val ie = pruneDstOrWhole(layout, dirtyAll, e)
-    val inEdgeFrame = ie.join(
-        dirtyAll.withColumnRenamed("node", "__t"),
-        ie("dst") === col("__t"))
-      .select(Seq(ie("src").as("src"), ie("dst").as("dst")) ++
-        (if (weighted) Seq(ie("w")) else Nil): _*)
-    foldAudit("inedge", inEdgeFrame)
-    val (eF, eFPins) = cutTracked(inEdgeFrame, checkpointDir)
-    val (srcsF, sFPins) = cutTracked(
-      eF.select(col("src").as("node")).distinct(), checkpointDir)
-    // out-degree TOTALS for frontier-in-edge sources only — summed
-    // over each source's full out-edge set (a function of src, so a
-    // layout hint prunes this scan to those sources' buckets);
-    // unweighted degrees are long counts (w ≡ 1 sums exactly)
-    val degE = pruneOrWhole(layout, srcsF, e)
-    val degF = degE.join(srcsF.withColumnRenamed("node", "__s"),
-        degE("src") === col("__s"))
-      .groupBy(degE("src").as("__dn"))
-      .agg((if (weighted) sum(degE("w")) else count(lit(1)))
-        .cast(Dec).as("deg"))
-    val (eFD, eFDPins) = cutTracked(
-      eF.join(degF, col("__dn") === eF("src"))
-        .select(Seq(eF("src").as("src"), eF("dst").as("dst")) ++
-          (if (weighted) Seq(eF("w")) else Nil) :+ col("deg"): _*),
-      checkpointDir)
-    release(eFPins)
-    // frontier-source split, cut once and read every round: sources
-    // whose score the trace supplies verbatim (never dirty) vs
-    // sources recomputed each round
-    val (srcsOut, oPins) = cutTracked(
-      srcsF.join(dirtyAll, Seq("node"), "left_anti"), checkpointDir)
-    val (srcsIn, iPins) = cutTracked(
-      srcsF.join(dirtyAll, Seq("node"), "left_semi"), checkpointDir)
-    // per-round source scores, RESTRICTED to frontier in-edge
-    // sources (the inflow join reads nothing else — the earlier
-    // shape built the full patched node view per round): trace
-    // scores for never-dirty sources, the previous round's fresh
-    // scores for dirty ones. Round 0 is the unseeded precondition —
-    // trace(0) for old nodes, `scale` for added ones (added nodes
-    // are absent from every trace element).
-    def srcScores(t: Int, fresh: Option[DataFrame]): DataFrame =
-      fresh match {
-        case None =>
-          trace(0).select(col("node"), col("pr"))
-            .join(srcsF, Seq("node"))
-            .unionAll(addedRows.join(srcsF, Seq("node"))
-              .select(col("node"), lit(scale).cast(Dec).as("pr")))
-        case Some(f) =>
-          trace(t).select(col("node"), col("pr"))
-            .join(srcsOut, Seq("node"))
-            .unionAll(f.join(srcsIn, Seq("node"))
-              .select(col("node"), col("__npr").as("pr")))
-      }
-    var fresh: Option[DataFrame] = None
-    for (t <- 1 to iterations) {
-      val prev = srcScores(t - 1, fresh)
-      val inflow = eFD
-        .join(prev.select(col("node").as("__sn"), col("pr")),
-          col("__sn") === eFD("src"))
-        .select(eFD("dst").as("node"),
-          (if (weighted) floorDiv(col("pr") * eFD("w"), eFD("deg"))
-           else floorDiv(col("pr"), eFD("deg"))).as("share"))
-        .groupBy(col("node"))
-        .agg(sum(col("share")).cast(Dec).as("inflow"))
-      // NOT cut: single-reference linear chain (see scaladoc)
-      fresh = Some(dirtyAll.join(inflow, Seq("node"), "left")
-        .select(col("node"),
-          (base + floorDiv(lit(num).cast(Dec) *
-            coalesce(col("inflow"), lit(0).cast(Dec)),
-            lit(den).cast(Dec))).as("__npr")))
-    }
-    // cut the final fresh scores ONCE (frontier-sized — the fold's
-    // one cluster action over the k-round lazy chain) so the closing
-    // node-sized patch can reference them twice without duplicating
-    // the chain
-    val (freshCut, fcPins) = cutTracked(fresh.get, checkpointDir)
-    // the closing patch: trace(k) coalesced against the fresh
-    // scores (dirty nodes win), plus the added nodes — present only
-    // in the fresh frame — appended from it directly. No union sits
-    // below the join, so a bucketed trace scan reaches the join
-    // unshuffled.
-    val compose = trace(iterations).select(col("node"), col("pr"))
-      .join(freshCut, Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("__npr"), col("pr")).as("pr"))
-      .unionAll(freshCut.join(addedRows, Seq("node"), "left_semi")
-        .select(col("node"), col("__npr").as("pr")))
-    foldAudit("compose", compose)
-    val (out, _) = cutTracked(compose, checkpointDir)
-    release(eFDPins ++ fcPins ++ oPins ++ iPins ++ sFPins)
-    out
+  private def compose(last: DataFrame, fresh: DataFrame,
+                      added: DataFrame, cols: Seq[String],
+                      checkpointDir: Option[String]): DataFrame = {
+    val patched = last.select(col("node") +: cols.map(col): _*)
+      .join(fresh, Seq("node"), "left")
+      .select(col("node") +: cols.map(c =>
+        coalesce(col("__n" + c), col(c)).as(c)): _*)
+      .unionAll(fresh.join(added, Seq("node"), "left_semi")
+        .select(col("node") +: cols.map(c =>
+          coalesce(col("__n" + c), lit(0).cast(Dec)).as(c)): _*))
+    foldAudit("compose", patched)
+    cutTracked(patched, checkpointDir)._1
   }
 
   /** How hot is the hottest reduce key? `Some(warning)` when one
@@ -1750,35 +1719,27 @@ object Graph {
     * LINEAR with no global term, so round t's a_raw changes only at
     * nodes whose in-multiset changed (dsts(Δ)) or with an
     * in-neighbor whose h_raw changed, and h_raw likewise through
-    * out-edges — two alternating frontiers, expanded through E∪Δ.
-    * New nodes are allowed (they enter at h_0 = 1, permanently
-    * dirty — no global base to rebase, unlike PageRank's teleport).
-    * The final L1 normalization is global but O(nodes): two scalar
-    * aggregates over the composed final frame.
+    * out-edges — two alternating frontiers, expanded through E∪Δ by
+    * the rank family's one frontier fold ([[fold]], recurrence
+    * [[RawHits]]). New nodes are allowed (they enter at h_0 = 1,
+    * permanently dirty — no global base to rebase, unlike PageRank's
+    * teleport). The final L1 normalization is global but O(nodes):
+    * two scalar aggregates over the composed final frame.
     *
     * Trace-consistency pre-flight (`require`d): round 0 must be the
     * canonical placement (a_raw = 0, h_raw = 1 everywhere) and must
     * COVER the base frame's node set — a trace built from a
     * different edge frame would otherwise fold silently into wrong
-    * scores.
-    *
-    * Per-round work is frontier-proportional TWICE over: the
-    * frontiers' in/out edge sets are extracted by broadcast probes
-    * of the persisted edge scan when they fit `maxBroadcastBytes`
-    * (zero edge shuffles — each half-round's node-sized cost is one
-    * streamed trace-element scan), degrading per-join to shuffles
-    * past the budget; and per-round state (fresh a/h scores, the
-    * next frontiers) is eagerly cut with the superseded round
-    * released immediately. The full raw frames stay lazy trace-join
-    * views, composed once at the end.
+    * scores. The growth bound, its statistics read off the flag
+    * rows themselves, refuses what DECIMAL(38,0) cannot hold.
     */
   def hitsDelta(edges: DataFrame, delta: DataFrame,
                 trace: Seq[DataFrame],
                 scale: Long = 1000000L,
                 checkpointDir: Option[String] = None,
                 maxBroadcastBytes: Long = 128L << 20): DataFrame = {
-    // >= 2 for the same reason as pagerankDelta: zero-round folds
-    // have path-dependent added-node filler — refuse
+    // >= 2 for the same reason as pagerankDelta: a zero-round fold
+    // has nothing to fold — refuse
     require(trace.length >= 2,
       "need a hitsTrace run (round 0 + >=1 iteration) to fold into")
     val iterations = trace.length - 1
@@ -1794,388 +1755,54 @@ object Graph {
     val eDelta = delta.select(col("src"), col("dst"))
       .coalesce(shuffleWidth(delta)).persist()
     val e = eOld.unionAll(eDelta)
-    // ALL pre-flights from ONE shuffle (the pagerankDelta flag-pass
-    // discipline, ported): endpoint-role flags per node PLUS the
-    // out-degree count — the old shape paid FOUR eager cuts (base
-    // nodes, added, delta srcs, delta dsts, each a distinct +
-    // checkpoint over an edge scan) plus a growth-preflight
-    // aggregate plus a trace-probe collect, six corpus-touching
-    // actions before folding anything. Now: one exploded scan of
-    // each frame → one node-keyed aggregate, cut ONCE; every node
-    // set below is a filter over the cached flags, and the growth
-    // bound + trace-consistency probe ride one combined collect.
-    val (flags, flagPins) = cutTracked(
-      endpointRoles(eOld, 1, 2)
-        .unionAll(endpointRoles(eDelta, 4, 8))
-        .groupBy(col("node"))
-        .agg(max(when(col("r") === 1, 1).otherwise(0)).as("os"),
-          max(when(col("r") === 2, 1).otherwise(0)).as("od"),
-          max(when(col("r") === 4, 1).otherwise(0)).as("ds"),
-          max(when(col("r") === 8, 1).otherwise(0)).as("dd"),
-          sum(when(col("r") === 1 || col("r") === 4, 1L)
-            .otherwise(0L)).as("outc")), checkpointDir)
+    // the shared flag pass, with each node's out-edge count and its
+    // round-0 trace rows in the same aggregate
+    val (flags, flagPins) = endpointFlags(eOld, eDelta, checkpointDir,
+      outDegree = true, round0 = Some(trace.head -> canonicalRound0(RawHits)))
     val inOld = col("os") === 1 || col("od") === 1
     val isAdded = (col("ds") === 1 || col("dd") === 1) && !inOld
-    // growth bound (a_k ≤ N·Din^k·Dout^(k−1) in DECIMAL(38,0) —
-    // the hitsGrowthPreflight arithmetic, stats read off the flags)
-    // and trace-consistency (canonical round 0 covering the base
-    // node set) in ONE action
-    val pre = flags
-      .join(trace.head.select(col("node"), lit(1).as("__cov")),
-        Seq("node"), "left")
-      .agg(coalesce(max(col("outc")), lit(0L)).as("dout"),
-        coalesce(sum(col("outc")), lit(0L)).cast("long").as("m"),
-        count(when(inOld && col("__cov").isNull, 1))
-          .as("uncovered_base_node"))
-      .crossJoin(broadcast(trace.head
-        .where(!(col("a_raw") === lit(0).cast(Dec) &&
-          col("h_raw") === lit(1).cast(Dec)))
-        .agg(count(lit(1)).as("noncanonical_round0"))))
-      .head()
-    hitsGrowthCheck(pre.getLong(0), pre.getLong(1), iterations,
+    // growth bound (a_k ≤ N·Din^k·Dout^(k−1) in DECIMAL(38,0) — the
+    // hitsGrowthPreflight arithmetic) and trace consistency
+    // (canonical round 0 covering the base node set), all read off
+    // the flag rows — one per node, so round 0 repeating a node
+    // cannot inflate the edge count — in ONE action
+    val pre = preflight(flags, Seq(
+      coalesce(max(col("outc")), lit(0L)).as("dout"),
+      coalesce(sum(col("outc")), lit(0L)).cast("long").as("m"),
+      count(when(isAdded, 1)).as("added_node"),
+      coalesce(sum(col("off0")), lit(0L)).cast("long")
+        .as("noncanonical_round0"),
+      count(when(inOld && col("r0") === 0, 1))
+        .as("uncovered_base_node")))
+    hitsGrowthCheck(pre("dout"), pre("m"), iterations,
       () => e.groupBy(col("dst")).agg(count(lit(1)).as("c"))
         .agg(coalesce(max(col("c")), lit(0L)).as("din"))
         .head().getLong(0))
     val probe = Seq("noncanonical_round0", "uncovered_base_node")
-      .map(k => k -> pre.getLong(pre.fieldIndex(k)))
-      .filter(_._2 > 0).toMap
+      .map(k => k -> pre(k)).filter(_._2 > 0)
     require(probe.isEmpty,
       "hitsDelta: trace mismatch — " + probe.map {
         case ("noncanonical_round0", n) => s"$n round-0 rows " +
           "differ from the canonical placement (a_raw = 0, " +
           "h_raw = 1) — not a hitsTrace round 0"
-        case ("uncovered_base_node", n) => s"$n base-frame nodes " +
+        case (_, n) => s"$n base-frame nodes " +
           "missing from trace round 0 — the trace was built from " +
           "a different edge frame"
-        case (k, n) => s"$n × $k"
       }.mkString("; ") + "; rebuild the trace with hitsTrace")
-    val added = flags.where(isAdded).select(col("node"))
-    val addedRows = added
-    val dSrcs = flags.where(col("ds") === 1 || isAdded)
-      .select(col("node"))
-    val dDsts = flags.where(col("dd") === 1 || isAdded)
-      .select(col("node"))
-    val pins = Seq.newBuilder[RDD[_]]
-    pins ++= flagPins
-    // driver-resident fold (the foldDriver rationale: a
-    // budget-bounded frontier is what every broadcast would ship to
-    // the driver anyway — collect it once, run the alternating
-    // rounds as BigInt arithmetic, pay one compose + normalize)
-    hitsDeltaDriver(e, dSrcs, dDsts, addedRows, trace, scale,
-      checkpointDir, maxBroadcastBytes) match {
-      case Some(out) =>
-        release(pins.result())
-        eOld.unpersist()
-        eDelta.unpersist()
-        return out
-      case None => ()
-    }
-    def small(df: DataFrame, p: Seq[RDD[_]]): Boolean =
-      fitsBroadcast(df, p, maxBroadcastBytes)
-    def mb(df: DataFrame, isSmall: Boolean): DataFrame =
-      if (isSmall) broadcast(df) else df
-    // lazy raw-frame views: trace round t plus added-node filler
-    // (h_0 = 1 like every node; later rounds' filler is never
-    // visible — added nodes sit in every frontier). Fresh patches
-    // are frontier-sized cuts, broadcast when they fit.
-    def view(t: Int, freshA: Option[(DataFrame, Boolean)],
-             freshH: Option[(DataFrame, Boolean)]): DataFrame = {
-      val hFill = lit(if (t == 0) 1L else 0L).cast(Dec)
-      val full = trace(t)
-        .select(col("node"), col("a_raw"), col("h_raw"))
-        .unionAll(addedRows.select(col("node"),
-          lit(0).cast(Dec).as("a_raw"), hFill.as("h_raw")))
-      val withA = freshA match {
-        case Some((f, s)) => full.join(mb(f, s), Seq("node"), "left")
-          .select(col("node"),
-            coalesce(col("__na"), col("a_raw")).as("a_raw"),
-            col("h_raw"))
-        case None => full
-      }
-      freshH match {
-        case Some((f, s)) => withA.join(mb(f, s), Seq("node"), "left")
-          .select(col("node"), col("a_raw"),
-            coalesce(col("__nh"), col("h_raw")).as("h_raw"))
-        case None => withA
-      }
-    }
-    var dirtyA = dDsts
-    var dirtyASmall = small(dirtyA, flagPins)
-    var freshA: Option[(DataFrame, Boolean)] = None
-    var freshH: Option[(DataFrame, Boolean)] = None
-    var roundPins: Seq[RDD[_]] = Nil
-    for (t <- 1 to iterations) {
-      val prev = view(t - 1, freshA, freshH)
-      val nextPins = Seq.newBuilder[RDD[_]]
-      // the a-frontier's IN-edges, extracted once: feeds both the
-      // fresh a_t aggregation and the h-frontier derivation
-      val (fEa, feaP) = cutTracked(
-        e.join(mb(dirtyA.withColumnRenamed("node", "__t"),
-            dirtyASmall), e("dst") === col("__t"))
-        .select(e("src").as("src"), e("dst").as("dst")),
-        checkpointDir)
-      nextPins ++= feaP
-      val feaSmall = small(fEa, feaP)
-      // fresh a_t over the a-frontier: sum of in-neighbors' patched
-      // h_{t−1} (no in-edges → 0). Small in-edge set → stream the
-      // node-sized view once through a broadcast probe.
-      val aIn =
-        if (feaSmall)
-          prev.select(col("node").as("__sn"), col("h_raw"))
-            .join(broadcast(fEa), col("__sn") === fEa("src"))
-            .groupBy(fEa("dst").as("node"))
-            .agg(sum(col("h_raw")).cast(Dec).as("__s"))
-        else
-          fEa.join(prev.select(col("node").as("__sn"),
-              col("h_raw")), col("__sn") === fEa("src"))
-            .groupBy(fEa("dst").as("node"))
-            .agg(sum(col("h_raw")).cast(Dec).as("__s"))
-      val (fa2, faP) = cutTracked(
-        dirtyA.join(mb(aIn, dirtyASmall), Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("__s"), lit(0).cast(Dec)).as("__na")),
-        checkpointDir)
-      nextPins ++= faP
-      val fa2Small = dirtyASmall
-      // h-frontier at t: delta sources ∪ in-neighbors (via src) of
-      // the a-frontier ∪ added — read off the extracted in-edge set
-      val (dirtyH, dhP) = cutTracked(
-        fEa.select(col("src").as("node"))
-        .unionAll(dSrcs.select(col("node")))
-        .distinct(), checkpointDir)
-      nextPins ++= dhP
-      val dirtyHSmall = small(dirtyH, dhP)
-      val cur = view(t, Some((fa2, fa2Small)), None)
-      // the h-frontier's OUT-edges, extracted once: feeds the fresh
-      // h_t aggregation and (inside the loop) the next a-frontier
-      val (fEh, fehP) = cutTracked(
-        e.join(mb(dirtyH.withColumnRenamed("node", "__f"),
-            dirtyHSmall), e("src") === col("__f"))
-        .select(e("src").as("src"), e("dst").as("dst")),
-        checkpointDir)
-      nextPins ++= fehP
-      val fehSmall = small(fEh, fehP)
-      val hOut =
-        if (fehSmall)
-          cur.select(col("node").as("__dn"), col("a_raw"))
-            .join(broadcast(fEh), col("__dn") === fEh("dst"))
-            .groupBy(fEh("src").as("node"))
-            .agg(sum(col("a_raw")).cast(Dec).as("__s"))
-        else
-          fEh.join(cur.select(col("node").as("__dn"),
-              col("a_raw")), col("__dn") === fEh("dst"))
-            .groupBy(fEh("src").as("node"))
-            .agg(sum(col("a_raw")).cast(Dec).as("__s"))
-      val (fh2, fhP) = cutTracked(
-        dirtyH.join(mb(hOut, dirtyHSmall), Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("__s"), lit(0).cast(Dec)).as("__nh")),
-        checkpointDir)
-      nextPins ++= fhP
-      if (t < iterations) {
-        // a-frontier at t+1: delta dsts ∪ out-neighbors of the
-        // h-frontier ∪ added — read off the extracted out-edge set
-        val (da2, daP) = cutTracked(
-          fEh.select(col("dst").as("node"))
-          .unionAll(dDsts.select(col("node")))
-          .distinct(), checkpointDir)
-        nextPins ++= daP
-        dirtyA = da2
-        dirtyASmall = small(dirtyA, daP)
-      }
-      // everything from round t−1 is dead once round t's cuts landed
-      release(roundPins)
-      roundPins = nextPins.result()
-      freshA = Some((fa2, fa2Small))
-      freshH = Some((fh2, dirtyHSmall))
-    }
-    val (composed, _) = cutTracked(view(iterations, freshA, freshH),
-      checkpointDir)
-    val out = normalizeHits(composed, scale)
-    release(roundPins)
-    release(pins.result())
+    val added = nodesWhere(flags, isAdded, pre("added_node") > 0)
+    // a_raw is dirty outright where the in-multiset changed (delta
+    // destinations), h_raw where the out-multiset did (delta
+    // sources); added nodes are both
+    val composed = fold(RawHits, e,
+      Seq(Seeds(flags.where(col("dd") === 1 || isAdded)
+          .select(col("node"))),
+        Seeds(flags.where(col("ds") === 1 || isAdded)
+          .select(col("node")))),
+      added, trace, checkpointDir, maxBroadcastBytes)
+    release(flagPins)
     eOld.unpersist()
     eDelta.unpersist()
-    out
-  }
-
-  /** [[hitsDelta]]'s driver-resident rounds (see [[foldDriver]] for
-    * the admission rationale). Phases:
-    *
-    *  1. expand the MONOTONE alternating frontiers (dirtyA_{t+1} ⊇
-    *     dirtyA_t and likewise for H — both recurrences only add
-    *     seeds and neighbors), gathering each frontier node's in-
-    *     resp. out-edges by bounded broadcast probes of the edge
-    *     scan, each node probed ONCE;
-    *  2. ONE tagged-union scan extracts off-frontier trace scores
-    *     for every edge endpoint at rounds 1..k;
-    *  3. the alternating a/h rounds run as BigInt sums on the
-    *     driver;
-    *  4. one node-sized compose patches the final trace element with
-    *     the round-k frontier scores, then the global L1
-    *     normalization runs distributed as always.
-    *
-    * Any budget breach returns None and [[hitsDelta]] runs its
-    * distributed rounds instead.
-    */
-  private def hitsDeltaDriver(e: DataFrame, dSrcs: DataFrame,
-                              dDsts: DataFrame, addedRows: DataFrame,
-                              trace: Seq[DataFrame], scale: Long,
-                              checkpointDir: Option[String],
-                              maxBroadcastBytes: Long)
-      : Option[DataFrame] = {
-    val iterations = trace.length - 1
-    val spark = e.sparkSession
-    val nodeType = dSrcs.schema("node").dataType
-    // total-edge cap in EDGE-ROW units: 2x the per-collect byte
-    // budget's worth of (src, dst) rows — the incremental probes
-    // accumulate across half-rounds, so the sum needs its own bound
-    val edgeRowCap = 2L * (maxBroadcastBytes /
-      (2 * nodeType.defaultSize + 16)).max(1L)
-    def lf(nodes: Iterable[Any], name: String): DataFrame =
-      localNodeFrame(spark, nodes, name, nodeType)
-    def big(d: java.math.BigDecimal): BigInt = BigInt(d.toBigInteger)
-    withSingleWaveLimit(spark) {
-      val seedsOpt = for {
-        ds <- collectBounded(dSrcs.select(col("node")),
-          maxBroadcastBytes)
-        dd <- collectBounded(dDsts.select(col("node")),
-          maxBroadcastBytes)
-      } yield (ds.map(_.get(0)).toSet, dd.map(_.get(0)).toSet)
-      seedsOpt.flatMap { case (dS, dD) =>
-        // phase 1: frontier expansion + incremental edge gathering
-        val inEdges =
-          new scala.collection.mutable.HashMap[Any, List[Any]]()
-        val outEdges =
-          new scala.collection.mutable.HashMap[Any, List[Any]]()
-        var probedIn = Set.empty[Any]
-        var probedOut = Set.empty[Any]
-        var edgeRows = 0L
-        var ok = true
-        def probe(newNodes: Set[Any], bySrc: Boolean): Unit =
-          if (ok && newNodes.nonEmpty) {
-            val fr = lf(newNodes, "__f")
-            val keyCol = if (bySrc) e("src") else e("dst")
-            collectBounded(
-              e.join(broadcast(fr), keyCol === col("__f"))
-                .select(e("src"), e("dst")),
-              maxBroadcastBytes) match {
-              case Some(rows) =>
-                edgeRows += rows.length
-                if (edgeRows > edgeRowCap) ok = false
-                else rows.foreach { r =>
-                  val s = r.get(0); val d = r.get(1)
-                  if (bySrc)
-                    outEdges.update(s, d :: outEdges.getOrElse(s, Nil))
-                  else
-                    inEdges.update(d, s :: inEdges.getOrElse(d, Nil))
-                }
-              case None => ok = false
-            }
-          }
-        val dirtyA = Seq.newBuilder[Set[Any]]
-        val dirtyH = Seq.newBuilder[Set[Any]]
-        var curA = dD
-        var curH = Set.empty[Any]
-        for (t <- 1 to iterations if ok) {
-          probe(curA -- probedIn, bySrc = false)
-          probedIn ++= curA
-          dirtyA += curA
-          if (ok) {
-            val inSrcs = curA.iterator
-              .flatMap(n => inEdges.getOrElse(n, Nil)).toSet
-            curH = dS ++ inSrcs
-            probe(curH -- probedOut, bySrc = true)
-            probedOut ++= curH
-            dirtyH += curH
-            if (t < iterations && ok) {
-              val outDsts = curH.iterator
-                .flatMap(n => outEdges.getOrElse(n, Nil)).toSet
-              curA = dD ++ outDsts
-            }
-          }
-        }
-        if (!ok) None
-        else {
-          val dA = dirtyA.result()
-          val dH = dirtyH.result()
-          // phase 2: off-frontier trace scores for every edge
-          // endpoint, rounds 1..k, one tagged scan
-          val lookupNodes =
-            inEdges.valuesIterator.flatten.toSet ++
-              outEdges.valuesIterator.flatten.toSet
-          val traceValsOpt =
-            if (lookupNodes.isEmpty)
-              Some(Map.empty[(Int, Any), (BigInt, BigInt)])
-            else {
-              val tagged = (1 to iterations).map(t =>
-                  trace(t).select(lit(t).as("__rt"), col("node"),
-                    col("a_raw"), col("h_raw")))
-                .reduce(_ unionAll _)
-              collectBounded(
-                tagged.join(broadcast(lf(lookupNodes, "node")),
-                  Seq("node"))
-                .select(col("__rt"), col("node"), col("a_raw"),
-                  col("h_raw")), maxBroadcastBytes)
-                .map(_.map(r => (r.getInt(0), r.get(1)) ->
-                  ((big(r.getDecimal(2)), big(r.getDecimal(3)))))
-                  .toMap)
-            }
-          traceValsOpt.map { traceVals =>
-            // phase 3: alternating BigInt rounds
-            var freshA = Map.empty[Any, BigInt]
-            var freshH = Map.empty[Any, BigInt]
-            for (t <- 1 to iterations) {
-              val aT = dA(t - 1).iterator.map { n =>
-                n -> inEdges.getOrElse(n, Nil).iterator.map { s =>
-                  if (t == 1) BigInt(1) // h_0 = 1 everywhere
-                  else if (dH(t - 2).contains(s)) freshH(s)
-                  else traceVals((t - 1, s))._2
-                }.sum
-              }.toMap
-              val hT = dH(t - 1).iterator.map { n =>
-                n -> outEdges.getOrElse(n, Nil).iterator.map { d =>
-                  if (dA(t - 1).contains(d)) aT(d)
-                  else traceVals((t, d))._1
-                }.sum
-              }.toMap
-              freshA = aT
-              freshH = hT
-            }
-            // phase 4: compose + distributed L1 normalization
-            import scala.jdk.CollectionConverters._
-            def decFrame(m: Map[Any, BigInt], cn: String)
-                : DataFrame =
-              spark.createDataFrame(
-                m.iterator.map { case (n, v) =>
-                  org.apache.spark.sql.Row(n,
-                    new java.math.BigDecimal(v.bigInteger))
-                }.toSeq.asJava,
-                org.apache.spark.sql.types.StructType(Seq(
-                  org.apache.spark.sql.types.StructField("node",
-                    nodeType),
-                  org.apache.spark.sql.types.StructField(cn,
-                    org.apache.spark.sql.types.DataTypes
-                      .createDecimalType(38, 0)))))
-            val full = trace(iterations)
-              .select(col("node"), col("a_raw"), col("h_raw"))
-              .unionAll(addedRows.select(col("node"),
-                lit(0).cast(Dec).as("a_raw"),
-                lit(0).cast(Dec).as("h_raw")))
-            val (composed, _) = cutTracked(
-              full.join(broadcast(decFrame(freshA, "__na")),
-                  Seq("node"), "left")
-                .join(broadcast(decFrame(freshH, "__nh")),
-                  Seq("node"), "left")
-                .select(col("node"),
-                  coalesce(col("__na"), col("a_raw")).as("a_raw"),
-                  coalesce(col("__nh"), col("h_raw")).as("h_raw")),
-              checkpointDir)
-            normalizeHits(composed, scale)
-          }
-        }
-      }
-    }
+    normalizeHits(composed, scale)
   }
 
   /** The one global step of deferred HITS: L1-normalize the final

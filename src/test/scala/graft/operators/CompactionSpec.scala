@@ -10,18 +10,11 @@ import graft.{LocalSession, SparkSuite}
   * table still joins with zero exchanges at one file per bucket.
   */
 class CompactionSpec extends SparkSuite {
-  private val base = java.nio.file.Files.createTempDirectory("graft_compact")
+  private val base = tempDir("graft_compact")
 
   override protected def session = LocalSession(4)
     .config("spark.sql.warehouse.dir", s"$base/warehouse")
     .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-
-  override def afterAll(): Unit = {
-    super.afterAll()
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
-      .foreach(p => java.nio.file.Files.deleteIfExists(p))
-  }
 
   private def parquetFiles(dir: String): Seq[java.io.File] =
     new java.io.File(dir).listFiles()

@@ -176,8 +176,7 @@ class FingerprintSpec extends SparkSuite {
       2L -> ("second document, other words. " + boiler),
       3L -> ("third doc quotes it too: " + boiler + " and more"),
       4L -> "totally unrelated text with nothing shared at all okay")
-    val dir = java.nio.file.Files
-      .createTempDirectory("winnow_idx").toString
+    val dir = tempDir("winnow_idx").toString
     Dedup.winnowDocFps(df, col("doc_id"), col("text"), k = 16, w = 8)
       .write.mode("overwrite").parquet(dir)
     def rows(d: DataFrame) = d.collect()

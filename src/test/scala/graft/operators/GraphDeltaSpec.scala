@@ -11,16 +11,7 @@ import graft.SparkSuite
   * durability, and the degree-skew pre-flight trips on a star.
   */
 class GraphDeltaSpec extends SparkSuite {
-  private val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt_")
-
-  override def afterAll(): Unit = {
-    super.afterAll()
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(ckptDir).iterator().asScala.toSeq
-      .reverse.foreach(p =>
-        try java.nio.file.Files.deleteIfExists(p)
-        catch { case _: Throwable => () })
-  }
+  private val ckptDir = tempDir("graft_ckpt_")
 
   private def sym(es: Seq[(String, String)]): DataFrame = {
     val s = spark
@@ -169,6 +160,26 @@ class GraphDeltaSpec extends SparkSuite {
       .map(r => (r.getString(0), r.getDecimal(1).longValueExact(),
         r.getDecimal(2).longValueExact())).toSet
     assert(h1 === h2)
+  }
+
+  test("a budget that admits the seeds but not the whole frontier " +
+      "falls back to the distributed rounds partway through") {
+    // a symmetric 60-node ring and one reinforced edge pair: the two
+    // delta sources (36 bytes a node row) fit every budget below,
+    // while the frontier grows by about two nodes a hop and its edges
+    // (56 to 64 bytes a row) pass each budget somewhere in four rounds
+    val n = 60
+    val base = sym((0 until n).map(i => s"n$i" -> s"n${(i + 1) % n}"))
+    val delta = sym(Seq("n0" -> "n1"))
+    val trace = Graph.pagerankTrace(base, iterations = 4)
+    val full = ranks(Graph.pagerank(base.unionAll(delta),
+      iterations = 4))
+    for (budget <- Seq(288L, 600L, 1200L)) {
+      assert(ranks(Graph.pagerankDelta(base, delta, trace,
+        maxBroadcastBytes = budget)) === full, s"budget $budget")
+      assert(ranks(Graph.pagerankRefresh(base, base.unionAll(delta),
+        trace, maxBroadcastBytes = budget)) === full, s"budget $budget")
+    }
   }
 
   test("an empty delta returns the trace end state unchanged") {
@@ -380,8 +391,7 @@ class GraphDeltaSpec extends SparkSuite {
     val ring = (0 until n).map(i => s"n$i" -> s"n${(i + 1) % n}")
     val chords = Seq(5, 17, 29, 41).map(i => s"n$i" -> s"n${i + 7}")
     val all = sym(ring ++ chords)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_layout_").toString
+    val dir = tempDir("graft_layout_").toString
     all.withColumn("sb", pmod(xxhash64(col("src")),
         lit(buckets.toLong)).cast("int"))
       .write.mode("overwrite").partitionBy("sb").parquet(dir)

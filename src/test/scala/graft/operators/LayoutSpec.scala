@@ -78,18 +78,11 @@ class LayoutSpec extends SparkSuite {
   * plan with ZERO exchanges — the write-once-shuffle-never contract.
   */
 class BucketedJoinSpec extends SparkSuite {
-  private val base = java.nio.file.Files.createTempDirectory("graft_buckets")
+  private val base = tempDir("graft_buckets")
 
   override protected def session = LocalSession(4)
     .config("spark.sql.warehouse.dir", s"$base/warehouse")
     .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-
-  override def afterAll(): Unit = {
-    super.afterAll()
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
-      .foreach(p => java.nio.file.Files.deleteIfExists(p))
-  }
 
   private def exchanges(df: org.apache.spark.sql.DataFrame): Int = {
     df.collect()

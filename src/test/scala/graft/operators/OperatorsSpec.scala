@@ -612,7 +612,7 @@ class OperatorsSpec extends SparkSuite {
   test("fastRowCount: footer metadata for bare scans, else count()") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("scanstats")
+    val dir = tempDir("scanstats")
     val path = dir.resolve("t.parquet").toString
     (0 until 57).toDF("i").repartition(3).write.parquet(path)
     val df = s.read.parquet(path)

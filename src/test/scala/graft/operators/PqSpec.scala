@@ -125,8 +125,7 @@ class PqSpec extends SparkSuite {
   test("persisted PQ index serves identically to a rebuilt one") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("pqindex").toString
+    val dir = tempDir("pqindex").toString
     val index = Similarity.buildPqIndex(fixture, "vec_id",
       "embedding", dims = 8, m = 2, ksub = 12, iters = 1)
     Similarity.writePqIndex(index, dir)

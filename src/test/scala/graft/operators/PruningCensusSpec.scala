@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -11,7 +9,7 @@ import graft.SparkSuite
   * the SAME data; row accounting is exact against the known totals.
   */
 class PruningCensusSpec extends SparkSuite {
-  private val dir = Files.createTempDirectory("graft_prune").toString
+  private val dir = tempDir("graft_prune").toString
 
   test("sorted layout prunes a narrow range; shuffled layout cannot") {
     val s = spark

@@ -43,7 +43,7 @@ class ShardsSpec extends SparkSuite {
 
   test("writeShards: one sorted file per shard, membership matches " +
       "shardAssign, two runs byte-identical") {
-    val dir = Files.createTempDirectory("graft-shards").toFile
+    val dir = tempDir("graft-shards").toFile
     val path = new java.io.File(dir, "out").getAbsolutePath
     Sampling.writeShards(docs, col("id"), 8, path)
     // one data file per shard directory

@@ -60,8 +60,7 @@ class SimilarityIndexSpec extends SparkSuite {
 
   test("persisted IVF index serves identically to a rebuilt one") {
     val s = spark
-    val dir = java.nio.file.Files
-      .createTempDirectory("ivfindex").toString
+    val dir = tempDir("ivfindex").toString
     val index = Similarity.buildIvfIndex(vecs, "vec_id", "embedding",
       k = 3, iters = 2)
     Similarity.writeIvfIndex(index, dir)
@@ -98,8 +97,7 @@ class SimilarityIndexSpec extends SparkSuite {
     val s = spark
     val index = Similarity.buildIvfIndex(vecs, "vec_id", "embedding",
       k = 3, iters = 2)
-    val dir = java.nio.file.Files
-      .createTempDirectory("ivfpart").toString
+    val dir = tempDir("ivfpart").toString
     vecs.join(index.labels.withColumnRenamed("id", "vec_id"),
         Seq("vec_id"))
       .write.partitionBy("label").parquet(s"$dir/corpus")

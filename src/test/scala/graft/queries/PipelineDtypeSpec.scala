@@ -12,17 +12,7 @@ import graft.SparkSuite
   * results, so the next regeneration cannot silently break one path.
   */
 class PipelineDtypeSpec extends SparkSuite {
-  private val tmp =
-    java.nio.file.Files.createTempDirectory("graft_dtype").toString
-
-  override def afterAll(): Unit = {
-    super.afterAll()
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get(tmp)
-    if (java.nio.file.Files.exists(root))
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq
-        .reverse.foreach(java.nio.file.Files.deleteIfExists(_))
-  }
+  private val tmp = tempDir("graft_dtype").toString
 
   test("q34/q53/q55/q59 agree between long-nanos and " +
       "timestamp[us] (NTZ) events") {

@@ -5,12 +5,13 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
 import graft.core.VTuple
 
 /** Ports of the reference's source-detection spec
   * (structa tests/test_source.py:76-236).
   */
-class SourceSpec extends AnyFunSuite {
+class SourceSpec extends AnyFunSuite with TempDirs {
   import Source._
 
   test("format detection: json by leading bracket/brace") {
@@ -688,7 +689,7 @@ class SourceSpec extends AnyFunSuite {
 
   test("directory and glob tables: sampled at the first data file, " +
       "read whole by Spark") {
-    val dir = Files.createTempDirectory("table")
+    val dir = tempDir("table")
     def put(name: String, body: String): Unit =
       Files.write(dir.resolve(name), body.getBytes("UTF-8"))
     put("part-00000.jsonl", "{\"a\": 1}\n{\"a\": 2}\n")
@@ -708,22 +709,15 @@ class SourceSpec extends AnyFunSuite {
         assert(rows.sorted.toSeq == Seq(1L, 2L, 3L), path)
       }
     } finally spark.stop()
-    Files.list(dir).forEach(f => Files.delete(f))
-    Files.delete(dir)
   }
 
-  /** A fresh directory holding `files` (name -> body); removed after
-    * `body` runs.
-    */
+  /** A fresh directory holding `files` (name -> body). */
   private def withTable[T](files: (String, String)*)(
       body: java.nio.file.Path => T): T = {
-    val dir = Files.createTempDirectory("table")
+    val dir = tempDir("table")
     files.foreach { case (name, text) =>
       Files.write(dir.resolve(name), text.getBytes("UTF-8")) }
-    try body(dir) finally {
-      Files.list(dir).forEach(f => Files.delete(f))
-      Files.delete(dir)
-    }
+    body(dir)
   }
 
   private val jsonParts = Seq(

@@ -15,8 +15,7 @@ import graft.{LocalSession, SparkSuite}
 class StreamingDecontamSpec extends SparkSuite {
   override protected def session = LocalSession(2)
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String): String = tempDir(prefix).toString
 
   private val benchDoc1 =
     "never reveal the benchmark answer key alpha beta gamma delta " +

@@ -15,8 +15,7 @@ import graft.{LocalSession, SparkSuite}
 class StreamingDeltaDedupSpec extends SparkSuite {
   override protected def session = LocalSession(2)
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String): String = tempDir(prefix).toString
 
   // ~24-token documents: each "v2" changes ONE token, so the shingle
   // Jaccard is ~0.8 and the b=16/r=4 banding catches the pair with

@@ -13,8 +13,7 @@ import graft.{LocalSession, SparkSuite}
 class StreamingIndexAppendSpec extends SparkSuite {
   override protected def session = LocalSession(2)
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String): String = tempDir(prefix).toString
 
   private val dims = 8
 

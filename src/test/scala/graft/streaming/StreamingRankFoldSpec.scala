@@ -15,8 +15,7 @@ import graft.{LocalSession, SparkSuite}
 class StreamingRankFoldSpec extends SparkSuite {
   override protected def session = LocalSession(2)
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String): String = tempDir(prefix).toString
 
   private def sym(es: Seq[(String, String)]): Seq[(String, String)] =
     es ++ es.map(_.swap)

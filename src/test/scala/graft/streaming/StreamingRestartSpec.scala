@@ -18,7 +18,7 @@ class StreamingRestartSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("restart")
+    val dir = tempDir("restart")
     val outPath = dir.resolve("out").toString
     val ckpt = dir.resolve("ckpt").toString
 

@@ -17,8 +17,7 @@ import graft.{LocalSession, SparkSuite}
 class StreamingRetractSpec extends SparkSuite {
   override protected def session = LocalSession(2)
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private def tmp(prefix: String): String = tempDir(prefix).toString
 
   // three chains + one triangle: removals can split chains and
   // strand singletons

@@ -70,7 +70,7 @@ class StreamingStructureSpec extends SparkSuite {
     val s = spark
     import s.implicits._
     implicit val sq = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("statsink")
+    val dir = tempDir("statsink")
     val outPath = dir.resolve("out").toString
     val ckpt = dir.resolve("ckpt").toString
     val input = MemoryStream[(Timestamp, String, Double)]
